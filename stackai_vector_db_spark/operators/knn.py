@@ -265,9 +265,3 @@ def _block_dists(qmat, vmat, metric: Metric):
         sim = np.divide(qmat @ vmat.T, norms, out=np.zeros_like(norms), where=norms != 0)
         dists = np.where(norms == 0, 1.0, 1.0 - sim)
     return np.round(dists, ROUND)
-
-
-def _sq_dist_exact(qmat, vmat):  # pragma: no cover - helper for tests
-    import numpy as np
-
-    return np.sqrt(((qmat[:, None, :] - vmat[None, :, :]) ** 2).sum(axis=2))

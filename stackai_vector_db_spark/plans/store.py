@@ -3,15 +3,16 @@
 Maps the reference's in-memory machinery to immutable-table conventions
 (SURVEY.md §3.1-3.3, §4.1):
 
-- ``IndexSnapshot`` + atomic swap (``index_service.py:34-52``, ``270-283``)
-  → versioned directory per build (``chunks/vN``, ``index/vN``) plus an
-  atomically-replaced pointer file. Readers resolve the pointer once and
-  then only touch immutable files — the snapshot-isolation the reference
-  gets from RWLocks falls out of storage immutability, zero locking.
+- per-library ``IndexSnapshot`` + atomic swap (``index_service.py:34-52``,
+  ``270-283``) → versioned directories (``chunks/…``, ``index/vM``), a
+  build record per index version and one atomically-replaced pointer
+  file. Each operation reads the pointer once, then only touches immutable
+  files — the snapshot-isolation the reference gets from RWLocks falls
+  out of storage immutability, zero locking.
 - per-library RWLock (``utils/rwlock.py``) → single-writer job discipline;
   readers never block.
-- tombstone deletes (``base.py:196-206``) → anti-join compaction into the
-  next version (no positional coupling: ids are columns).
+- tombstone deletes (``base.py:196-206``) → merge-on-read delete files;
+  a search skips those newer than its index build.
 - dirty counters + rebuild threshold (``index_service.py:88-97``,
   ``163-196``) → a tiny control parquet with (library_id, dirty_count).
 - lazy embedding backfill (``index_service.py:436-500``) → fake-embed rows
@@ -29,14 +30,17 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+from functools import reduce
+from typing import NamedTuple
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from stackai_vector_db_spark.functions.vector import fake_embedding
 from stackai_vector_db_spark.operators.ivf import (
     assign_clusters,
     kmeans_centroids,
-    probe_clusters,
+    local_probes_df,
 )
 from stackai_vector_db_spark.operators.knn import brute_force_topk, local_queries_df
 
@@ -94,17 +98,30 @@ def _validate_query_text(text: str) -> str:
     return text.strip()
 
 
+class _Snapshot(NamedTuple):
+    """What one store operation reads, from ONE pointer read: a concurrent
+    writer cannot pair one build's index with another's tombstones."""
+
+    chunks: int
+    manifest: dict
+    index: int  # 0: nothing built
+    record: dict | None  # the build record of ``index``; None if unbuilt
+    dead: tuple  # delete files newer than the build: skipped by searches
+
+
 class VectorStore:
-    """Chunks and index carry independent versions behind one pointer file:
-    ``{"chunks": N, "index": M}`` — ingest/delete bump ``chunks``, builds
-    bump ``index``. Any reader holding (N, M) sees a stable snapshot."""
+    """Chunks and index carry independent versions behind one pointer file,
+    ``{"chunks": N, "index": M, "libraries": {"<library_id>": M_lib}}``:
+    ingest/delete bump ``chunks``; a build of library L writes index version
+    M with its record ``_meta/index_vM.json`` and points only L at it."""
 
     def __init__(self, spark: SparkSession, root: str, dim: int = DEFAULT_DIM):
         self.spark = spark
         self.root = root
         self.dim = dim
-        # collected centroid tables per immutable index-version path
-        self._cent_rows_cache: dict = {}
+        # Opened immutable paths (index DataFrames, centroid rows, delete
+        # files), each named by a committed pointer — see _open.
+        self._opened: dict = {}
         os.makedirs(os.path.join(root, "_meta"), exist_ok=True)
 
     # ---- version pointer (snapshot swap) ---------------------------------
@@ -117,16 +134,49 @@ class VectorStore:
             with open(self._pointer_path()) as f:
                 return json.load(f)
         except FileNotFoundError:
-            return {"chunks": 0, "index": 0}
+            return {"chunks": 0, "index": 0, "libraries": {}}
 
-    def _swap_pointer(self, **updates: int) -> None:
+    def _swap_pointer(self, **updates) -> None:
         """Atomic pointer swap (write-temp + os.replace) — the
-        IndexSnapshot version bump of index_service.py:270-283."""
-        payload = {**self.versions(), **updates}
+        IndexSnapshot version bump of index_service.py:270-283. A
+        ``libraries`` update merges into the per-library map."""
+        vs = self.versions()
+        libs = {**vs["libraries"], **updates.get("libraries", {})}
+        payload = {**vs, **updates, "libraries": libs}
         fd, tmp = tempfile.mkstemp(dir=os.path.join(self.root, "_meta"))
         with os.fdopen(fd, "w") as f:
             json.dump(payload, f)
         os.replace(tmp, self._pointer_path())
+
+    def _snapshot(self, library_id=None, version=None) -> _Snapshot:
+        """Read the pointer once. The index is ``version`` if pinned (a
+        build of another library is an error), else the library's build,
+        else the latest build — which holds none of an unbuilt library's
+        rows, so searching that library is empty."""
+        vs = self.versions()
+        index = version
+        if index is None:
+            index = vs["libraries"].get(str(library_id), vs["index"])
+        record, dead = None, ()
+        manifest = self._chunks_sources(vs["chunks"]) or {"data": [], "deletes": []}
+        if 1 <= index <= vs["index"]:  # committed builds only
+            with open(self._index_record_path(index)) as f:
+                record = json.load(f)
+            owner = record["library_id"]
+            if version is not None and library_id not in (None, owner):
+                raise ValueError(f"index v{version} was built for library {owner}")
+            dead = tuple(p for p, seq in manifest["deletes"] if seq > record["chunks"])
+        return _Snapshot(vs["chunks"], manifest, index, record, dead)
+
+    def _open(self, path: str, load):
+        """``load()`` once per immutable path: only paths a committed
+        pointer names, as the next writer may rewrite uncommitted ones.
+        Concurrent first callers may both load; setdefault hands all of
+        them the first stored result."""
+        got = self._opened.get(path)
+        if got is None:
+            got = self._opened.setdefault(path, load())
+        return got
 
     def _chunks_path(self, version: int) -> str:
         return os.path.join(self.root, "chunks", f"v{version}")
@@ -145,15 +195,15 @@ class VectorStore:
         mp = self._chunks_manifest_path(version)
         if os.path.exists(mp):
             with open(mp) as f:
-                m = json.load(f)
-            if isinstance(m, list):  # early manifest format: data dirs only
-                m = {"data": [[p, i] for i, p in enumerate(m)], "deletes": []}
-            return m
+                return json.load(f)
         p = self._chunks_path(version)
         return {"data": [[p, version]], "deletes": []} if os.path.exists(p) else None
 
     def _index_path(self, version: int) -> str:
         return os.path.join(self.root, "index", f"v{version}")
+
+    def _index_record_path(self, version: int) -> str:
+        return os.path.join(self.root, "_meta", f"index_v{version}.json")
 
     # ---- ingest (trace §3.3) ---------------------------------------------
 
@@ -215,35 +265,38 @@ class VectorStore:
         # corpus copy per ingest). Segments carry library_id as a data
         # column (no partitionBy); compact_chunks() folds them into the
         # partition-pruned layout.
-        v = self.versions()["chunks"]
-        seg = os.path.join(self.root, "chunks", f"seg_{v + 1}")
+        snap = self._snapshot()
+        v = snap.chunks + 1
+        seg = os.path.join(self.root, "chunks", f"seg_{v}")
         validated.select(*_CHUNK_COLS).write.mode("overwrite").parquet(seg)
-        prev = self._chunks_sources(v) or {"data": [], "deletes": []}
-        self._write_manifest(
-            v + 1,
-            prev["data"] + [[seg, v + 1]],
-            prev["deletes"],
-        )
-        self._swap_pointer(chunks=v + 1)
+        m = snap.manifest
+        self._write_manifest(v, m["data"] + [[seg, v]], m["deletes"])
+        self._swap_pointer(chunks=v)
         self._bump_dirty(validated)
-        return v + 1
+        return v
 
     def _write_manifest(self, version: int, data: list, deletes: list) -> None:
         with open(self._chunks_manifest_path(version), "w") as f:
             json.dump({"data": data, "deletes": deletes}, f)
 
-    def _tombstone(self, chunk_ids: DataFrame, new_version: int) -> None:
+    def _tombstone(
+        self, snap: _Snapshot, chunk_ids: DataFrame, new_data: tuple = ()
+    ) -> int:
         """Merge-on-read delete: write the matched ids as one small delete
-        file and advance the manifest — O(matched), never a corpus rewrite.
-        Readers anti-join tombstones onto lower-seq segments only."""
-        prev = self._chunks_sources(new_version - 1) or {"data": [], "deletes": []}
-        path = os.path.join(self.root, "chunks", f"del_{new_version}")
+        file, then commit the next chunks version (manifest + pointer swap)
+        — O(matched), never a corpus rewrite. Readers anti-join tombstones
+        onto lower-seq segments only. ``new_data`` adds already-written
+        segments to the same version."""
+        v, prev = snap.chunks + 1, snap.manifest
+        path = os.path.join(self.root, "chunks", f"del_{v}")
         chunk_ids.select(F.col("chunk_id").cast("long")).coalesce(1).write.mode(
             "overwrite"
         ).parquet(path)
         self._write_manifest(
-            new_version, prev["data"], prev["deletes"] + [[path, new_version]]
+            v, prev["data"] + list(new_data), prev["deletes"] + [[path, v]]
         )
+        self._swap_pointer(chunks=v)
+        return v
 
     def _normalize(self, df: DataFrame) -> DataFrame:
         """Common column order/types across partitioned dirs (library_id
@@ -262,8 +315,10 @@ class VectorStore:
         )
 
     def read_chunks(self, version: int | None = None) -> DataFrame | None:
-        v = self.versions()["chunks"] if version is None else version
-        sources = self._chunks_sources(v)
+        sources = (
+            self._snapshot().manifest if version is None
+            else self._chunks_sources(version)
+        )
         if sources is None:
             return None
         parts = [
@@ -336,19 +391,16 @@ class VectorStore:
         the maintenance job that bounds small-file count and restores
         partitionBy(library_id) pruning after a run of appends. Readers
         pinned to older versions are untouched (segments are immutable)."""
-        cur = self.read_chunks()
+        snap = self._snapshot()
+        cur = self.read_chunks(snap.chunks)
         if cur is None:
             raise ValueError("empty store")
-        v = self.versions()["chunks"]
+        v = snap.chunks + 1
         cur.write.mode("overwrite").partitionBy("library_id").parquet(
-            self._chunks_path(v + 1)
+            self._chunks_path(v)
         )
-        self._swap_pointer(chunks=v + 1)
-        return v + 1
-
-    def update_chunk_text(self, chunk_id: int, new_text: str) -> int:
-        """Text-only update; see :meth:`update_chunk`."""
-        return self.update_chunk(chunk_id, text=new_text, compute_embedding=True)
+        self._swap_pointer(chunks=v)
+        return v
 
     def update_chunk(
         self,
@@ -381,7 +433,8 @@ class VectorStore:
             raise ValueError(
                 f"embedding dim {len(embedding)} != store dim {self.dim}"
             )
-        cur = self.read_chunks()
+        snap = self._snapshot()
+        cur = self.read_chunks(snap.chunks)
         old = cur.filter(F.col("chunk_id") == chunk_id) if cur is not None else None
         if old is None or old.isEmpty():
             raise ValueError(f"chunk {chunk_id} not found")
@@ -412,13 +465,10 @@ class VectorStore:
                     CHUNK_METADATA_FIELDS, metadata, CHUNK_METADATA_BOUNDS
                 ),
             )
-        v = self.versions()["chunks"] + 1
-        self._tombstone(old.select("chunk_id"), v)
+        v = snap.chunks + 1
         seg = os.path.join(self.root, "chunks", f"seg_{v}")
         updated.select(*_CHUNK_COLS).coalesce(1).write.mode("overwrite").parquet(seg)
-        m = self._chunks_sources(v)
-        self._write_manifest(v, m["data"] + [[seg, v]], m["deletes"])
-        self._swap_pointer(chunks=v)
+        self._tombstone(snap, old.select("chunk_id"), ([seg, v],))
         self._bump_dirty(old)
         return v
 
@@ -428,13 +478,12 @@ class VectorStore:
         existence check first, then delete, then mark the library index
         dirty). Merge-on-read: one tombstone row written, no segment
         rewrite; readers pinned to the old version are untouched."""
-        cur = self.read_chunks()
+        snap = self._snapshot()
+        cur = self.read_chunks(snap.chunks)
         old = cur.filter(F.col("chunk_id") == chunk_id) if cur is not None else None
         if old is None or old.isEmpty():
             raise ValueError(f"chunk {chunk_id} not found")
-        v = self.versions()["chunks"] + 1
-        self._tombstone(old.select("chunk_id"), v)
-        self._swap_pointer(chunks=v)
+        v = self._tombstone(snap, old.select("chunk_id"))
         self._bump_dirty(old)
         return v
 
@@ -444,16 +493,14 @@ class VectorStore:
         """Cascade delete, merge-on-read: resolve the affected chunk ids
         (left-semi on document_id) into one tombstone file — O(matched)
         written; compaction reclaims the space later."""
-        cur = self.read_chunks()
+        snap = self._snapshot()
+        cur = self.read_chunks(snap.chunks)
         if cur is None:
             raise ValueError("empty store")
         matched = cur.join(
             doc_ids.select(F.col("document_id")), "document_id", "left_semi"
         ).select("chunk_id")
-        v = self.versions()["chunks"] + 1
-        self._tombstone(matched, v)
-        self._swap_pointer(chunks=v)
-        return v
+        return self._tombstone(snap, matched)
 
     # ---- dirty control table (A7) ----------------------------------------
 
@@ -489,7 +536,10 @@ class VectorStore:
 
     def needs_rebuild(self, library_id: int) -> bool:
         """dirty_count / total >= 0.1 (index_service.py:88-97)."""
-        cur = self.read_chunks()
+        return self._needs_rebuild(self._snapshot(), library_id)
+
+    def _needs_rebuild(self, snap: _Snapshot, library_id: int) -> bool:
+        cur = self.read_chunks(snap.chunks)
         total = (
             cur.filter(F.col("library_id") == library_id).count()
             if cur is not None
@@ -531,7 +581,8 @@ class VectorStore:
         pointer swap, dirty reset — the full build trace as one batch job.
         ``algorithm`` None → auto-selected from (n, dim); "linear" writes a
         single-cluster layout (every probe scans everything — exact)."""
-        cur = self.read_chunks()
+        snap = self._snapshot()
+        cur = self.read_chunks(snap.chunks)
         if cur is None:
             raise ValueError("empty store")
         lib = cur.filter(F.col("library_id") == library_id)
@@ -569,7 +620,7 @@ class VectorStore:
                 vectors, n_clusters=max(2, min(n_clusters, n))
             )
             assigned = assign_clusters(vectors, cents)
-        new_v = self.versions()["index"] + 1
+        new_v = snap.index + 1  # no library named: the latest allocated
         (
             lib.join(
                 assigned.select(F.col("vec_id").alias("chunk_id"), "cluster_id"),
@@ -582,38 +633,28 @@ class VectorStore:
         cents.write.mode("overwrite").parquet(
             os.path.join(self._index_path(new_v), "_centroids")
         )
-        # Record which chunks version the index reflects: query-time
-        # tombstone-skip applies only deletes NEWER than this (older ones
-        # were already excluded by the merge-on-read build scan).
-        self._swap_pointer(
-            index=new_v, algorithm=algorithm, index_chunks=self.versions()["chunks"]
-        )
+        # The build record names the chunks version the index reflects:
+        # query-time tombstone-skip applies only deletes NEWER than this
+        # (older ones were already excluded by the merge-on-read build scan).
+        with open(self._index_record_path(new_v), "w") as f:
+            json.dump({"library_id": int(library_id), "algorithm": algorithm,
+                       "chunks": snap.chunks}, f)
+        self._swap_pointer(index=new_v, libraries={str(library_id): new_v})
         self._reset_dirty(library_id)
         return new_v
 
     def read_index(self, version: int | None = None) -> tuple[DataFrame, DataFrame]:
-        v = self.versions()["index"] if version is None else version
-        path = self._index_path(v)
-        if v < 1 or not os.path.exists(path):
+        """(index rows, centroids) of build ``version``, else the latest."""
+        return self._open_index(self._snapshot(version=version))
+
+    def _open_index(self, snap: _Snapshot) -> tuple[DataFrame, DataFrame]:
+        if snap.record is None:
             # reference base.py IndexNotBuiltError: querying before build is
             # a clean domain error, not a storage-layer stack trace.
-            raise ValueError(f"index not built (version {v})")
-        chunks = self.spark.read.parquet(path)
-        cents = self.spark.read.parquet(os.path.join(path, "_centroids"))
-        return chunks, cents
-
-    def _centroid_rows(self, version: int | None = None):
-        """The versioned centroid table collected once per index version —
-        index OPEN work (the in-memory coarse quantizer), shared by every
-        subsequent search instead of re-collected per query. Versions are
-        immutable (pointer-swap writes), so the path is a safe cache key."""
-        v = self.versions()["index"] if version is None else version
-        path = self._index_path(v)
-        rows = self._cent_rows_cache.get(path)
-        if rows is None:
-            _, cents = self.read_index(v)
-            rows = self._cent_rows_cache[path] = cents.collect()
-        return rows
+            raise ValueError(f"index not built (version {snap.index})")
+        path = self._index_path(snap.index)
+        read = self.spark.read.parquet
+        return self._open(path, lambda: (read(path), read(path + "/_centroids")))
 
     # ---- search (trace §3.1) ---------------------------------------------
 
@@ -625,34 +666,19 @@ class VectorStore:
         nprobe: int = 2,
         version: int | None = None,
     ) -> DataFrame:
-        """Embed query text (F3), probe clusters (O5), top-k within probed
-        partitions (J2+A1), hydrate chunk payload (J1). Passing ``version``
-        pins a snapshot (reads are stable while a new build runs)."""
+        """Embed query text (F3) on the driver, then :meth:`search_vector`'s
+        plan. Passing ``version`` pins a snapshot (reads are stable while a
+        new build runs)."""
         _validate_k(k)
         text = _validate_query_text(text)
         self._check_library_exists(library_id)
-        # Parameterized one-row relation instead of createDataFrame: the
-        # latter plans as a pickled-rows ExistingRDD whose every broadcast
-        # runs a Python-worker job (r11 optimization — same fix as the
-        # bench serving paths; see operators/knn.local_queries_df).
-        q = self.spark.sql(
-            "SELECT CAST(0 AS long) AS qid, :t AS qtext", args={"t": text}
-        ).select(
-            "qid",
-            fake_embedding(F.col("qtext"), self.dim).cast("array<float>").alias("qvec"),
+        snap = self._snapshot(library_id, version)
+        # One-row SQL relation, not createDataFrame: a pickled-rows
+        # ExistingRDD runs a Python-worker job (see knn.local_queries_df).
+        q = self.spark.sql("SELECT :t AS qtext", args={"t": text}).select(
+            fake_embedding(F.col("qtext"), self.dim).cast("array<float>")
         )
-        idx, cents = self.read_index(version)
-        idx = idx.filter(F.col("library_id") == library_id)
-        probes = probe_clusters(q, cents, nprobe)
-        cand = self._skip_tombstones(
-            idx.join(
-                F.broadcast(probes.select("cluster_id").distinct()), "cluster_id"
-            )
-        )
-        hits = brute_force_topk(
-            q, cand, k, id_col="chunk_id", vec_col="embedding"
-        ).withColumnRenamed("vec_id", "chunk_id")
-        return self._hydrate_and_threshold(hits, idx)
+        return self._search(snap, library_id, q.collect()[0][0], k, nprobe)
 
     def _check_library_exists(self, library_id: int) -> None:
         """Reference LibraryNotFoundError (search_service.py: a query names
@@ -667,32 +693,6 @@ class VectorStore:
             F.col("library_id") == library_id
         ).isEmpty():
             raise ValueError(f"library {library_id} not found")
-
-    def _live_tombstones(self) -> DataFrame | None:
-        """Chunk ids deleted SINCE the current index was built — the
-        reference's query-time tombstone skip (``linear.py:53-54``,
-        ``ivf.py:57-59``: removed vectors stay in the structure until
-        rebuild but are skipped during scans). Tombstone files are tiny →
-        broadcast anti-join, no index rewrite."""
-        vs = self.versions()
-        since = vs.get("index_chunks", vs["chunks"])
-        m = self._chunks_sources(vs["chunks"])
-        if not m:
-            return None
-        paths = [p for p, seq in m["deletes"] if seq > since]
-        if not paths:
-            return None
-        out = None
-        for p in paths:
-            d = self.spark.read.parquet(p).select("chunk_id")
-            out = d if out is None else out.unionByName(d)
-        return out
-
-    def _skip_tombstones(self, cand: DataFrame) -> DataFrame:
-        dead = self._live_tombstones()
-        if dead is None:
-            return cand
-        return cand.join(F.broadcast(dead), "chunk_id", "left_anti")
 
     def _hydrate_and_threshold(self, hits: DataFrame, idx: DataFrame) -> DataFrame:
         """J1 hydration + P6 per-chunk similarity_threshold post-filter
@@ -731,7 +731,7 @@ class VectorStore:
         """Raw-vector search (reference ``POST /query`` with an embedding
         payload): k-bounded (schemas/search.py:22-27) and dimension-checked
         against the store dim (422-equivalent, ``search_service.py:126-135``),
-        then the same probe→topk→hydrate plan as :meth:`search_text`."""
+        then probe→topk→hydrate (:meth:`_search`)."""
         _validate_k(k)
         if len(vector) != self.dim:
             raise ValueError(
@@ -745,33 +745,41 @@ class VectorStore:
                     f"embedding value at index {i} is out of range (±1e6)"
                 )
         self._check_library_exists(library_id)
-        # LocalRelation query vector + driver-side probe selection over the
-        # stored centroid table (r11 — the serving-path form proven
-        # value-identical in operators/ivf.probe_pairs_local): removes the
-        # ExistingRDD broadcast job and the probe window's exchange from
-        # every vector search.
-        from stackai_vector_db_spark.operators.ivf import local_probes_df
+        snap = self._snapshot(library_id, version)
+        return self._search(snap, library_id, vector, k, nprobe)
 
+    def _search(
+        self, snap: _Snapshot, library_id: int, vector: list[float], k: int, nprobe: int
+    ) -> DataFrame:
+        """The one search plan, over ``snap``'s index: probe → top-k →
+        hydrate, skipping the snapshot's tombstones."""
+        # LocalRelation query vector + driver-side probe selection over the
+        # stored centroid table (value-identical to probe_clusters, see
+        # operators/ivf.probe_pairs_local): no ExistingRDD broadcast job and
+        # no probe-window exchange per search.
+        #
         # Round-trip the query through float32 FIRST: candidate scoring via
         # local_queries_df casts to array<float>, so probe selection must
         # see the same float32-quantized values — a raw float64 component
         # near a rounding boundary (±1e6 inputs are allowed, where float32
         # truncation ~0.06 ≫ the 0.5e-6 round-6 granularity) could
         # otherwise pick a different cluster than the scoring space would.
-        import numpy as np
-
         qpair = (0, [float(x) for x in np.asarray(vector, dtype=np.float32)])
         q = local_queries_df(self.spark, [qpair])
-        idx, cents = self.read_index(version)
+        idx, cents = self._open_index(snap)
         idx = idx.filter(F.col("library_id") == library_id)
-        probes = local_probes_df(
-            self.spark, [qpair], cents, self._centroid_rows(version), nprobe
+        rows = self._open(self._index_path(snap.index) + "/_centroids", cents.collect)
+        probes = local_probes_df(self.spark, [qpair], cents, rows, nprobe)
+        cand = idx.join(
+            F.broadcast(probes.select("cluster_id").distinct()), "cluster_id"
         )
-        cand = self._skip_tombstones(
-            idx.join(
-                F.broadcast(probes.select("cluster_id").distinct()), "cluster_id"
-            )
-        )
+        if snap.dead:
+            # Tombstone files are tiny → broadcast anti-join, no index rewrite.
+            dead = reduce(DataFrame.unionByName, (
+                self._open(p, lambda p=p: self.spark.read.parquet(p).select("chunk_id"))
+                for p in snap.dead
+            ))
+            cand = cand.join(F.broadcast(dead), "chunk_id", "left_anti")
         hits = brute_force_topk(
             q, cand, k, id_col="chunk_id", vec_col="embedding"
         ).withColumnRenamed("vec_id", "chunk_id")
@@ -779,21 +787,22 @@ class VectorStore:
 
     def index_status(self, library_id: int) -> dict:
         """IndexStatus analog (reference ``index_service.py:285-302``):
-        built?, version, algorithm, size, dirty count, rebuild flag."""
-        vs = self.versions()
-        built = vs["index"] > 0
+        built?, version, algorithm, size, dirty count, rebuild flag — all
+        of the library's own build."""
+        snap = self._snapshot(library_id)
+        built = snap.record is not None and snap.record["library_id"] == library_id
         size = 0
         if built:
-            idx, _ = self.read_index()
+            idx, _ = self._open_index(snap)
             size = idx.filter(F.col("library_id") == library_id).count()
         return {
             "is_built": built,
-            "index_version": vs["index"],
-            "chunks_version": vs["chunks"],
-            "algorithm": vs.get("algorithm"),
+            "index_version": snap.index if built else 0,
+            "chunks_version": snap.chunks,
+            "algorithm": snap.record["algorithm"] if built else None,
             "size": size,
             "dirty_count": self.dirty_count(library_id),
-            "needs_rebuild": self.needs_rebuild(library_id),
+            "needs_rebuild": self._needs_rebuild(snap, library_id),
         }
 
     # ---- library entities (reference routers/libraries.py) ----------------
@@ -961,9 +970,6 @@ class VectorStore:
     def _documents_path(self) -> str:
         return os.path.join(self.root, "control", "documents")
 
-    def _rewrite_documents(self, df: DataFrame) -> None:
-        self._rewrite_control(df, self._documents_path())
-
     def list_documents(self, library_id: int | None = None) -> DataFrame | None:
         """Documents ordered by lower(title) (reference
         ``document_repository.py:24-27``)."""
@@ -1001,7 +1007,7 @@ class VectorStore:
             if not cur.filter(F.col("document_id") == document_id).isEmpty():
                 raise ValueError(f"document {document_id} already exists")
             row = cur.unionByName(row)
-        self._rewrite_documents(row)
+        self._rewrite_control(row, self._documents_path())
 
     def update_document(self, document_id: int, title: str) -> None:
         """Copy-on-write title update (reference ``entities.py:177-199``,
@@ -1013,13 +1019,14 @@ class VectorStore:
         cur = self.list_documents()
         if cur is None or cur.filter(F.col("document_id") == document_id).isEmpty():
             raise ValueError(f"document {document_id} not found")
-        self._rewrite_documents(
+        self._rewrite_control(
             cur.withColumn(
                 "title",
                 F.when(
                     F.col("document_id") == document_id, F.lit(title.strip())
                 ).otherwise(F.col("title")),
-            )
+            ),
+            self._documents_path(),
         )
 
     def delete_document(self, document_id: int) -> None:
@@ -1028,11 +1035,10 @@ class VectorStore:
         cur = self.list_documents()
         if cur is None or cur.filter(F.col("document_id") == document_id).isEmpty():
             raise ValueError(f"document {document_id} not found")
-        self._rewrite_documents(cur.filter(F.col("document_id") != document_id))
-        if self.read_chunks() is not None:
-            self.delete_documents(
-                self.spark.createDataFrame([(document_id,)], "document_id long")
-            )
+        self._rewrite_control(
+            cur.filter(F.col("document_id") != document_id), self._documents_path()
+        )
+        self._tombstone_where(F.col("document_id") == document_id)
 
     def delete_library(self, library_id: int) -> None:
         """Cascade: drop the library row and anti-join its chunks away
@@ -1042,12 +1048,12 @@ class VectorStore:
             raise ValueError(f"library {library_id} not found")
         remaining = cur.filter(F.col("library_id") != library_id)
         self._rewrite_control(remaining, self._libraries_path())
-        chunks = self.read_chunks()
-        if chunks is not None:
-            matched = chunks.filter(F.col("library_id") == library_id).select(
-                "chunk_id"
-            )
-            v = self.versions()["chunks"] + 1
-            self._tombstone(matched, v)
-            self._swap_pointer(chunks=v)
+        self._tombstone_where(F.col("library_id") == library_id)
         self._reset_dirty(library_id)
+
+    def _tombstone_where(self, cond) -> None:
+        """Cascade step: tombstone every current chunk matching ``cond``."""
+        snap = self._snapshot()
+        chunks = self.read_chunks(snap.chunks)
+        if chunks is not None:
+            self._tombstone(snap, chunks.filter(cond).select("chunk_id"))

@@ -170,7 +170,7 @@ def test_update_chunk_copy_on_write(spark, store):
     v1 = store.versions()["chunks"]
     old = store.read_chunks(v1).filter(F.col("chunk_id") == 100003).collect()[0]
 
-    store.update_chunk_text(100003, "fresh replacement text")
+    store.update_chunk(100003, text="fresh replacement text", compute_embedding=True)
     new = store.read_chunks().filter(F.col("chunk_id") == 100003).collect()[0]
     assert new["text"] == "fresh replacement text"
     assert list(new["embedding"]) != list(old["embedding"])  # re-embedded
@@ -180,9 +180,9 @@ def test_update_chunk_copy_on_write(spark, store):
     assert store.dirty_count(1) > 0
 
     with pytest.raises(ValueError, match="not found"):
-        store.update_chunk_text(999999, "x")
+        store.update_chunk(999999, text="x", compute_embedding=True)
     with pytest.raises(ValueError, match="non-empty"):
-        store.update_chunk_text(100003, "   ")
+        store.update_chunk(100003, text="   ", compute_embedding=True)
 
 
 def test_document_crud_and_cascade(spark, store):
@@ -385,7 +385,9 @@ def test_merge_on_read_tombstones_and_sequence_rule(spark, store):
     )
 
     # update: old text masked, new visible, exactly one row for the id
-    store.update_chunk_text(rid, "replacement text for revived chunk")
+    store.update_chunk(
+        rid, text="replacement text for revived chunk", compute_embedding=True
+    )
     rows = store.read_chunks().filter(F.col("chunk_id") == rid).collect()
     assert len(rows) == 1 and rows[0]["text"].startswith("replacement")
 
@@ -412,6 +414,71 @@ def test_search_skips_tombstones_without_rebuild(spark, store):
     store.build_index(1, n_clusters=2)
     idx, _ = store.read_index()
     assert idx.filter(F.col("chunk_id") == victim).isEmpty()
+
+
+def test_each_library_keeps_its_own_index(spark, store):
+    """Reference per-library IndexSnapshot (index_service.py:34-52):
+    building library 2 must not hide library 1's index; each library's
+    search and index_status read its own build."""
+    store.ingest_chunks(_chunk_rows(spark, 30, library_id=1))
+    store.ingest_chunks(_chunk_rows(spark, 12, library_id=2))
+    v1 = store.build_index(1, algorithm="ivf", n_clusters=2)
+    v2 = store.build_index(2, algorithm="linear")
+    for lib in (1, 2):
+        text = f"chunk text number 4 for library {lib} with words"
+        top = sorted(store.search_text(lib, text, k=3).collect(), key=lambda r: r["rank"])
+        assert top and top[0]["chunk_id"] == lib * 100000 + 4
+        assert top[0]["dist"] == 0.0
+    st1, st2 = store.index_status(1), store.index_status(2)
+    assert (st1["index_version"], st1["algorithm"], st1["size"]) == (v1, "ivf", 30)
+    assert (st2["index_version"], st2["algorithm"], st2["size"]) == (v2, "linear", 12)
+    assert st1["is_built"] and st2["is_built"]
+    # a pinned build of another library is a clean error
+    with pytest.raises(ValueError, match="built for library 2"):
+        store.search_text(1, "chunk text number 4", version=v2)
+
+
+def test_pinned_version_skips_later_deletes(spark, store):
+    """A search pinned to an old build skips every delete made after that
+    build — also after a rebuild, whose own build record must not decide
+    the pinned read's tombstones."""
+    store.ingest_chunks(_chunk_rows(spark, 30))
+    store.build_index(1, n_clusters=2)
+    text = "chunk text number 7 for library 1 with words"
+    row = store.read_chunks().filter(F.col("chunk_id") == 100007).collect()[0]
+    vec = list(row["embedding"])
+    assert store.search_text(1, text, k=3, version=1).collect()[0]["chunk_id"] == 100007
+    store.delete_chunk(100007)
+    store.build_index(1, n_clusters=2)
+    for hits in (
+        store.search_text(1, text, k=5, version=1),
+        store.search_vector(1, vec, k=5, version=1),
+        store.search_text(1, text, k=5),
+    ):
+        ids = {r["chunk_id"] for r in hits.collect()}
+        assert len(ids) == 5 and 100007 not in ids
+
+
+def test_search_reads_pointer_once(spark, store, monkeypatch):
+    """A search resolves one snapshot: one read of the pointer file, so a
+    concurrent build between reads can never pair one build's index with
+    another build's tombstone cut-off."""
+    store.ingest_chunks(_chunk_rows(spark, 20))
+    store.build_index(1, n_clusters=2)
+    store.delete_chunk(100003)
+    reads = []
+    orig = VectorStore.versions
+
+    def counting(self):
+        reads.append(1)
+        return orig(self)
+
+    monkeypatch.setattr(VectorStore, "versions", counting)
+    store.search_vector(1, [0.0] * 16, k=3).collect()
+    assert len(reads) == 1
+    reads.clear()
+    store.search_text(1, "chunk text number 3", k=3).collect()
+    assert len(reads) == 1
 
 
 # ---- serving-path parity guards (reference schemas/search.py:22-27,
