@@ -14,7 +14,8 @@ Maps the reference's in-memory machinery to immutable-table conventions
 - tombstone deletes (``base.py:196-206``) → merge-on-read delete files;
   a search skips those newer than its index build.
 - dirty counters + rebuild threshold (``index_service.py:88-97``,
-  ``163-196``) → a tiny control parquet with (library_id, dirty_count).
+  ``163-196``) → per-library dirty and live-row counts that each write
+  commits with its one pointer swap: the rebuild decision is a JSON read.
 - lazy embedding backfill (``index_service.py:436-500``) → fake-embed rows
   with empty embeddings at build time.
 - IVF inverted lists (``ivf.py:54-130``) → KMeans centroids +
@@ -98,6 +99,11 @@ def _validate_query_text(text: str) -> str:
     return text.strip()
 
 
+def _plus(counts: dict, delta: dict, sign: int = 1) -> dict:
+    """Per-library counters ``counts + sign * delta``."""
+    return {k: counts.get(k, 0) + sign * delta.get(k, 0) for k in {**counts, **delta}}
+
+
 class _Snapshot(NamedTuple):
     """What one store operation reads, from ONE pointer read: a concurrent
     writer cannot pair one build's index with another's tombstones."""
@@ -107,13 +113,17 @@ class _Snapshot(NamedTuple):
     index: int  # 0: nothing built
     record: dict | None  # the build record of ``index``; None if unbuilt
     dead: tuple  # delete files newer than the build: skipped by searches
+    dirty: dict  # {"<library_id>": rows written since its last build}
 
 
 class VectorStore:
     """Chunks and index carry independent versions behind one pointer file,
-    ``{"chunks": N, "index": M, "libraries": {"<library_id>": M_lib}}``:
-    ingest/delete bump ``chunks``; a build of library L writes index version
-    M with its record ``_meta/index_vM.json`` and points only L at it."""
+    ``{"chunks": N, "index": M, "libraries": {"<lib>": M_lib}, "dirty":
+    {"<lib>": n}}``; each chunk write or index build swaps it once. A write
+    commits manifest ``_meta/chunks_vN.json`` and adds its rows to
+    ``dirty``; a build of library L writes index version M with its record
+    ``_meta/index_vM.json`` (``library_id``, ``algorithm``, ``chunks``,
+    ``size``), points only L at it and sets ``dirty[L] = 0``."""
 
     def __init__(self, spark: SparkSession, root: str, dim: int = DEFAULT_DIM):
         self.spark = spark
@@ -134,15 +144,16 @@ class VectorStore:
             with open(self._pointer_path()) as f:
                 return json.load(f)
         except FileNotFoundError:
-            return {"chunks": 0, "index": 0, "libraries": {}}
+            return {"chunks": 0, "index": 0, "libraries": {}, "dirty": {}}
 
     def _swap_pointer(self, **updates) -> None:
         """Atomic pointer swap (write-temp + os.replace) — the
         IndexSnapshot version bump of index_service.py:270-283. A
-        ``libraries`` update merges into the per-library map."""
+        ``libraries`` or ``dirty`` update merges into its per-library map."""
         vs = self.versions()
-        libs = {**vs["libraries"], **updates.get("libraries", {})}
-        payload = {**vs, **updates, "libraries": libs}
+        payload = {**vs, **updates}
+        for key in ("libraries", "dirty"):
+            payload[key] = {**vs[key], **updates.get(key, {})}
         fd, tmp = tempfile.mkstemp(dir=os.path.join(self.root, "_meta"))
         with os.fdopen(fd, "w") as f:
             json.dump(payload, f)
@@ -158,7 +169,7 @@ class VectorStore:
         if index is None:
             index = vs["libraries"].get(str(library_id), vs["index"])
         record, dead = None, ()
-        manifest = self._chunks_sources(vs["chunks"]) or {"data": [], "deletes": []}
+        manifest = self._chunks_sources(vs["chunks"]) or {"data": [], "deletes": [], "rows": {}}
         if 1 <= index <= vs["index"]:  # committed builds only
             with open(self._index_record_path(index)) as f:
                 record = json.load(f)
@@ -166,7 +177,7 @@ class VectorStore:
             if version is not None and library_id not in (None, owner):
                 raise ValueError(f"index v{version} was built for library {owner}")
             dead = tuple(p for p, seq in manifest["deletes"] if seq > record["chunks"])
-        return _Snapshot(vs["chunks"], manifest, index, record, dead)
+        return _Snapshot(vs["chunks"], manifest, index, record, dead, vs["dirty"])
 
     def _open(self, path: str, load):
         """``load()`` once per immutable path: only paths a committed
@@ -185,19 +196,18 @@ class VectorStore:
         return os.path.join(self.root, "_meta", f"chunks_v{version}.json")
 
     def _chunks_sources(self, version: int) -> dict | None:
-        """A chunks version is either a MANIFEST — ``{"data": [[dir, seq]…],
-        "deletes": [[file, seq]…]}`` of immutable segments (append-only
-        ingest / merge-on-read delete) — or a plain rewritten dir
-        (compaction). A delete file tombstones a chunk_id in data segments
-        with a LOWER seq only, so re-ingesting a previously deleted id
-        behaves like delete-then-create (Iceberg-style sequence rule).
-        Manifest wins if both exist."""
-        mp = self._chunks_manifest_path(version)
-        if os.path.exists(mp):
-            with open(mp) as f:
+        """The MANIFEST of a chunks version, None if it has none:
+        ``{"data": [[dir, seq]…], "deletes": [[file, seq]…], "rows":
+        {"<lib>": n}}`` — immutable segments (append-only ingest, or one
+        compacted dir), merge-on-read delete files, and the version's live
+        rows per library. A delete file tombstones a chunk_id in data
+        segments with a LOWER seq only, so re-ingesting a previously deleted
+        id behaves like delete-then-create (Iceberg-style sequence rule)."""
+        try:
+            with open(self._chunks_manifest_path(version)) as f:
                 return json.load(f)
-        p = self._chunks_path(version)
-        return {"data": [[p, version]], "deletes": []} if os.path.exists(p) else None
+        except FileNotFoundError:
+            return None
 
     def _index_path(self, version: int) -> str:
         return os.path.join(self.root, "index", f"v{version}")
@@ -209,7 +219,8 @@ class VectorStore:
 
     def ingest_chunks(self, rows: DataFrame, compute_embedding: bool = True) -> int:
         """Validate (P7), default end_index (F6), optionally eager-embed
-        (F3), write the next chunks version, bump dirty counters."""
+        (F3), write the next chunks version; its commit adds the rows to
+        the live and dirty counters."""
         if "similarity_threshold" not in rows.columns:
             rows = rows.withColumn(
                 "similarity_threshold", F.lit(None).cast("float")
@@ -269,34 +280,58 @@ class VectorStore:
         v = snap.chunks + 1
         seg = os.path.join(self.root, "chunks", f"seg_{v}")
         validated.select(*_CHUNK_COLS).write.mode("overwrite").parquet(seg)
+        added = self._library_rows(seg)
         m = snap.manifest
-        self._write_manifest(v, m["data"] + [[seg, v]], m["deletes"])
-        self._swap_pointer(chunks=v)
-        self._bump_dirty(validated)
-        return v
+        return self._commit_chunks(
+            v,
+            {"data": m["data"] + [[seg, v]], "deletes": m["deletes"],
+             "rows": _plus(m["rows"], added)},
+            dirty=_plus(snap.dirty, added),
+        )
 
-    def _write_manifest(self, version: int, data: list, deletes: list) -> None:
-        with open(self._chunks_manifest_path(version), "w") as f:
-            json.dump({"data": data, "deletes": deletes}, f)
+    def _library_rows(self, path: str) -> dict:
+        """``{"<lib>": rows}`` of the file a write just produced: one
+        single-task job (after coalesce(1) the grouping needs no shuffle),
+        its schema given so no inference job runs."""
+        rows = self.spark.read.schema("library_id long").parquet(path).coalesce(1)
+        return {
+            str(r["library_id"]): r["count"]
+            for r in rows.groupBy("library_id").count().collect()
+        }
+
+    def _commit_chunks(self, v: int, manifest: dict, **pointer) -> int:
+        """Write chunks version ``v``'s manifest, then commit it and the
+        ``pointer`` counter updates with the write's one pointer swap."""
+        with open(self._chunks_manifest_path(v), "w") as f:
+            json.dump(manifest, f)
+        self._swap_pointer(chunks=v, **pointer)
+        return v
 
     def _tombstone(
-        self, snap: _Snapshot, chunk_ids: DataFrame, new_data: tuple = ()
+        self, snap: _Snapshot, matched: DataFrame, new_data: tuple = (),
+        bump: bool = False, dirty: dict | None = None,
     ) -> int:
-        """Merge-on-read delete: write the matched ids as one small delete
-        file, then commit the next chunks version (manifest + pointer swap)
-        — O(matched), never a corpus rewrite. Readers anti-join tombstones
-        onto lower-seq segments only. ``new_data`` adds already-written
-        segments to the same version."""
-        v, prev = snap.chunks + 1, snap.manifest
+        """Merge-on-read delete: write the matched rows' (chunk_id,
+        library_id) as one small delete file, then commit the next chunks
+        version — O(matched), never a corpus rewrite. Readers anti-join
+        tombstones onto lower-seq segments only. The matched rows leave the
+        live counts; ``bump`` adds them to the dirty counts, ``dirty`` sets
+        counts. ``new_data`` adds an update's segment, which re-adds each
+        matched row: the live counts stay."""
+        v, m = snap.chunks + 1, snap.manifest
         path = os.path.join(self.root, "chunks", f"del_{v}")
-        chunk_ids.select(F.col("chunk_id").cast("long")).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(path)
-        self._write_manifest(
-            v, prev["data"] + list(new_data), prev["deletes"] + [[path, v]]
+        matched.select(
+            F.col("chunk_id").cast("long"), F.col("library_id").cast("long")
+        ).coalesce(1).write.mode("overwrite").parquet(path)
+        gone = self._library_rows(path)
+        if bump:
+            dirty = _plus(snap.dirty, gone)
+        return self._commit_chunks(
+            v,
+            {"data": m["data"] + list(new_data), "deletes": m["deletes"] + [[path, v]],
+             "rows": m["rows"] if new_data else _plus(m["rows"], gone, -1)},
+            dirty=dirty or {},
         )
-        self._swap_pointer(chunks=v)
-        return v
 
     def _normalize(self, df: DataFrame) -> DataFrame:
         """Common column order/types across partitioned dirs (library_id
@@ -390,7 +425,9 @@ class VectorStore:
         """Fold the manifest's segments into one partition-pruned rewrite —
         the maintenance job that bounds small-file count and restores
         partitionBy(library_id) pruning after a run of appends. Readers
-        pinned to older versions are untouched (segments are immutable)."""
+        pinned to older versions are untouched (segments are immutable).
+        Delete files stay listed: their lower seq never masks the compacted
+        data, and searches still skip those newer than their build."""
         snap = self._snapshot()
         cur = self.read_chunks(snap.chunks)
         if cur is None:
@@ -399,8 +436,11 @@ class VectorStore:
         cur.write.mode("overwrite").partitionBy("library_id").parquet(
             self._chunks_path(v)
         )
-        self._swap_pointer(chunks=v)
-        return v
+        m = snap.manifest
+        return self._commit_chunks(
+            v, {"data": [[self._chunks_path(v), v]], "deletes": m["deletes"],
+                "rows": m["rows"]}
+        )
 
     def update_chunk(
         self,
@@ -468,9 +508,7 @@ class VectorStore:
         v = snap.chunks + 1
         seg = os.path.join(self.root, "chunks", f"seg_{v}")
         updated.select(*_CHUNK_COLS).coalesce(1).write.mode("overwrite").parquet(seg)
-        self._tombstone(snap, old.select("chunk_id"), ([seg, v],))
-        self._bump_dirty(old)
-        return v
+        return self._tombstone(snap, old, ([seg, v],), bump=True)
 
     def delete_chunk(self, chunk_id: int) -> int:
         """Single-chunk delete — the reference's DELETE /chunks/{id}
@@ -483,9 +521,7 @@ class VectorStore:
         old = cur.filter(F.col("chunk_id") == chunk_id) if cur is not None else None
         if old is None or old.isEmpty():
             raise ValueError(f"chunk {chunk_id} not found")
-        v = self._tombstone(snap, old.select("chunk_id"))
-        self._bump_dirty(old)
-        return v
+        return self._tombstone(snap, old, bump=True)
 
     # ---- cascade delete (J4, trace library_service.py:67-77) -------------
 
@@ -499,62 +535,17 @@ class VectorStore:
             raise ValueError("empty store")
         matched = cur.join(
             doc_ids.select(F.col("document_id")), "document_id", "left_semi"
-        ).select("chunk_id")
+        )
         return self._tombstone(snap, matched)
 
-    # ---- dirty control table (A7) ----------------------------------------
-
-    def _dirty_path(self) -> str:
-        return os.path.join(self.root, "control", "dirty")
-
-    def _write_dirty(self, df: DataFrame) -> None:
-        # tiny control table (O(libraries) rows) → the guarded staged
-        # single-file rewrite; MAX_CONTROL_ROWS turns the size assumption
-        # into an enforced contract.
-        self._rewrite_control(df, self._dirty_path())
-
-    def _bump_dirty(self, new_rows: DataFrame) -> None:
-        inc = new_rows.groupBy("library_id").agg(F.count(F.lit(1)).alias("dirty_count"))
-        if os.path.exists(self._dirty_path()):
-            prev = self.spark.read.parquet(self._dirty_path())
-            inc = (
-                prev.unionByName(inc)
-                .groupBy("library_id")
-                .agg(F.sum("dirty_count").alias("dirty_count"))
-            )
-        self._write_dirty(inc)
+    # ---- dirty counters (A7): JSON the snapshot holds, no Spark job -------
 
     def dirty_count(self, library_id: int) -> int:
-        if not os.path.exists(self._dirty_path()):
-            return 0
-        row = (
-            self.spark.read.parquet(self._dirty_path())
-            .filter(F.col("library_id") == library_id)
-            .collect()
-        )
-        return row[0]["dirty_count"] if row else 0
+        return self.versions()["dirty"].get(str(library_id), 0)
 
     def needs_rebuild(self, library_id: int) -> bool:
-        """dirty_count / total >= 0.1 (index_service.py:88-97)."""
-        return self._needs_rebuild(self._snapshot(), library_id)
-
-    def _needs_rebuild(self, snap: _Snapshot, library_id: int) -> bool:
-        cur = self.read_chunks(snap.chunks)
-        total = (
-            cur.filter(F.col("library_id") == library_id).count()
-            if cur is not None
-            else 0
-        )
-        return self.dirty_count(library_id) / max(total, 1) >= REBUILD_THRESHOLD
-
-    def _reset_dirty(self, library_id: int) -> None:
-        if not os.path.exists(self._dirty_path()):
-            return
-        self._write_dirty(
-            self.spark.read.parquet(self._dirty_path()).filter(
-                F.col("library_id") != library_id
-            )
-        )
+        """dirty_count / live rows >= 0.1 (index_service.py:88-97)."""
+        return self.index_status(library_id)["needs_rebuild"]
 
     # ---- index build (trace §3.2) ----------------------------------------
 
@@ -578,7 +569,8 @@ class VectorStore:
         algorithm: str | None = None,
     ) -> int:
         """Backfill embeddings, KMeans centroids, cluster-partitioned write,
-        pointer swap, dirty reset — the full build trace as one batch job.
+        then one pointer swap that also resets the library's dirty count —
+        the full build trace as one batch job.
         ``algorithm`` None → auto-selected from (n, dim); "linear" writes a
         single-cluster layout (every probe scans everything — exact)."""
         snap = self._snapshot()
@@ -638,9 +630,9 @@ class VectorStore:
         # (older ones were already excluded by the merge-on-read build scan).
         with open(self._index_record_path(new_v), "w") as f:
             json.dump({"library_id": int(library_id), "algorithm": algorithm,
-                       "chunks": snap.chunks}, f)
-        self._swap_pointer(index=new_v, libraries={str(library_id): new_v})
-        self._reset_dirty(library_id)
+                       "chunks": snap.chunks, "size": n}, f)
+        lib = str(library_id)
+        self._swap_pointer(index=new_v, libraries={lib: new_v}, dirty={lib: 0})
         return new_v
 
     def read_index(self, version: int | None = None) -> tuple[DataFrame, DataFrame]:
@@ -788,21 +780,21 @@ class VectorStore:
     def index_status(self, library_id: int) -> dict:
         """IndexStatus analog (reference ``index_service.py:285-302``):
         built?, version, algorithm, size, dirty count, rebuild flag — all
-        of the library's own build."""
+        of the library's own build, read from the snapshot's JSON with no
+        Spark job."""
         snap = self._snapshot(library_id)
         built = snap.record is not None and snap.record["library_id"] == library_id
-        size = 0
-        if built:
-            idx, _ = self._open_index(snap)
-            size = idx.filter(F.col("library_id") == library_id).count()
+        lib = str(library_id)
+        dirty = snap.dirty.get(lib, 0)
+        live = snap.manifest["rows"].get(lib, 0)
         return {
             "is_built": built,
             "index_version": snap.index if built else 0,
             "chunks_version": snap.chunks,
             "algorithm": snap.record["algorithm"] if built else None,
-            "size": size,
-            "dirty_count": self.dirty_count(library_id),
-            "needs_rebuild": self._needs_rebuild(snap, library_id),
+            "size": snap.record["size"] if built else 0,
+            "dirty_count": dirty,
+            "needs_rebuild": dirty / max(live, 1) >= REBUILD_THRESHOLD,
         }
 
     # ---- library entities (reference routers/libraries.py) ----------------
@@ -1048,12 +1040,12 @@ class VectorStore:
             raise ValueError(f"library {library_id} not found")
         remaining = cur.filter(F.col("library_id") != library_id)
         self._rewrite_control(remaining, self._libraries_path())
-        self._tombstone_where(F.col("library_id") == library_id)
-        self._reset_dirty(library_id)
+        self._tombstone_where(F.col("library_id") == library_id, {str(library_id): 0})
 
-    def _tombstone_where(self, cond) -> None:
-        """Cascade step: tombstone every current chunk matching ``cond``."""
+    def _tombstone_where(self, cond, dirty: dict | None = None) -> None:
+        """Cascade step: tombstone every current chunk matching ``cond``,
+        setting ``dirty`` counts in the same commit."""
         snap = self._snapshot()
         chunks = self.read_chunks(snap.chunks)
         if chunks is not None:
-            self._tombstone(snap, chunks.filter(cond).select("chunk_id"))
+            self._tombstone(snap, chunks.filter(cond), dirty=dirty)

@@ -1,9 +1,10 @@
 """Model-based lifecycle fuzz for the versioned VectorStore: a random
 sequence of ingest / update / delete-document / delete-chunk-via-library /
-compact operations must leave read_chunks() agreeing with a plain Python
-dict model at every step. This exercises the manifest + tombstone
-sequence rules (Iceberg-style: a delete masks only lower-seq segments,
-re-ingest after delete revives) far beyond the hand-written cases."""
+compact / build operations must leave read_chunks() and the dirty counters
+agreeing with a plain Python dict model at every step. This exercises the
+manifest + tombstone sequence rules (Iceberg-style: a delete masks only
+lower-seq segments, re-ingest after delete revives) far beyond the
+hand-written cases."""
 
 from __future__ import annotations
 
@@ -37,6 +38,7 @@ def _ingest(spark, store, model, rng, next_id):
         text = f"text for chunk {cid} take {rng.randint(0, 9)}"
         rows.append((cid, doc, 1, text, None, 0, None))
         model[cid] = text
+    model["dirty"] += n
     df = spark.createDataFrame(
         rows,
         "chunk_id long, document_id long, library_id long, text string, "
@@ -56,6 +58,7 @@ def _update(store, model, rng):
     new_text = f"updated {cid} r{rng.randint(0, 99)}"
     store.update_chunk(cid, text=new_text)
     model[cid] = new_text
+    model["dirty"] += 1
 
 
 def _delete_doc(spark, store, model, rng):
@@ -75,6 +78,12 @@ def _delete_doc(spark, store, model, rng):
             model[c] = None
 
 
+def _build(store, model):
+    if any(isinstance(c, int) and t is not None for c, t in model.items()):
+        store.build_index(1, algorithm="linear")
+        model["dirty"] = 0
+
+
 def _check(store, model):
     got = {
         r["chunk_id"]: r["text"]
@@ -82,6 +91,9 @@ def _check(store, model):
     }
     want = {c: t for c, t in model.items() if isinstance(c, int) and t is not None}
     assert got == want
+    # delete_documents adds nothing to the dirty tally
+    assert store.dirty_count(1) == model["dirty"]
+    assert store.needs_rebuild(1) == (model["dirty"] / max(len(want), 1) >= 0.1)
 
 
 def _empty():
@@ -90,7 +102,7 @@ def _empty():
 
 def test_store_lifecycle_against_model(spark, store):
     rng = random.Random(42)
-    model: dict = {}
+    model: dict = {"dirty": 0}
     next_id = [1000]
     ops = [_ingest, _ingest, _update, _delete_doc]  # ingest-weighted
     _ingest(spark, store, model, rng, next_id)
@@ -104,4 +116,6 @@ def test_store_lifecycle_against_model(spark, store):
             _delete_doc(spark, store, model, rng)
         if step % 6 == 5:
             store.compact_chunks()  # folding segments must not change reads
+        if step % 7 == 3:
+            _build(store, model)
         _check(store, model)
