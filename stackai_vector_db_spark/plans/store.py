@@ -9,6 +9,9 @@ Maps the reference's in-memory machinery to immutable-table conventions
   file. Each operation reads the pointer once, then only touches immutable
   files — the snapshot-isolation the reference gets from RWLocks falls
   out of storage immutability, zero locking.
+- library/document repositories → control tables ``control/{libraries,
+  documents}_vN`` the pointer names; an entity write and its chunk cascade
+  (``library_service.py:67-77``) commit with one pointer swap.
 - per-library RWLock (``utils/rwlock.py``) → single-writer job discipline;
   readers never block.
 - tombstone deletes (``base.py:196-206``) → merge-on-read delete files;
@@ -49,7 +52,9 @@ from stackai_vector_db_spark.plans.metadata import (
     CHUNK_METADATA_BOUNDS,
     CHUNK_METADATA_DDL,
     CHUNK_METADATA_FIELDS,
+    DOCUMENT_METADATA_DDL,
     DOCUMENT_METADATA_FIELDS,
+    LIBRARY_METADATA_DDL,
     LIBRARY_METADATA_FIELDS,
     DOCUMENT_METADATA_BOUNDS,
     LIBRARY_METADATA_BOUNDS,
@@ -73,6 +78,12 @@ _CHUNK_TYPES = [
 ]
 CHUNK_SCHEMA = ", ".join(f"{n} {t}" for n, t in _CHUNK_TYPES)
 _CHUNK_COLS = [c for c, _ in _CHUNK_TYPES]
+_CONTROL_SCHEMAS = {
+    "libraries": "library_id long, name string, description string, "
+    f"metadata {LIBRARY_METADATA_DDL}",
+    "documents": "document_id long, library_id long, title string, "
+    f"metadata {DOCUMENT_METADATA_DDL}",
+}
 
 DEFAULT_DIM = 16
 REBUILD_THRESHOLD = 0.1  # reference config.py:58
@@ -99,6 +110,15 @@ def _validate_query_text(text: str) -> str:
     return text.strip()
 
 
+def _first(df: DataFrame | None, cond, missing: str):
+    """Point lookup: the first row of ``df`` matching ``cond``, else a
+    clean not-found ``ValueError(missing)``."""
+    rows = [] if df is None else df.filter(cond).limit(1).collect()
+    if not rows:
+        raise ValueError(missing)
+    return rows[0]
+
+
 def _plus(counts: dict, delta: dict, sign: int = 1) -> dict:
     """Per-library counters ``counts + sign * delta``."""
     return {k: counts.get(k, 0) + sign * delta.get(k, 0) for k in {**counts, **delta}}
@@ -114,16 +134,21 @@ class _Snapshot(NamedTuple):
     record: dict | None  # the build record of ``index``; None if unbuilt
     dead: tuple  # delete files newer than the build: skipped by searches
     dirty: dict  # {"<library_id>": rows written since its last build}
+    control: dict  # {"libraries": n, "documents": m}; missing or 0: no table
 
 
 class VectorStore:
-    """Chunks and index carry independent versions behind one pointer file,
-    ``{"chunks": N, "index": M, "libraries": {"<lib>": M_lib}, "dirty":
-    {"<lib>": n}}``; each chunk write or index build swaps it once. A write
-    commits manifest ``_meta/chunks_vN.json`` and adds its rows to
-    ``dirty``; a build of library L writes index version M with its record
-    ``_meta/index_vM.json`` (``library_id``, ``algorithm``, ``chunks``,
-    ``size``), points only L at it and sets ``dirty[L] = 0``."""
+    """Chunks, index and control tables carry independent versions behind
+    one pointer file, ``{"chunks": N, "index": M, "libraries": {"<lib>":
+    M_lib}, "dirty": {"<lib>": n}, "control": {"libraries": n,
+    "documents": m}}``; every public write swaps it exactly once, as its
+    last filesystem write. A chunk write commits manifest
+    ``_meta/chunks_vN.json`` and adds its rows to ``dirty``; a build of
+    library L writes index version M with its record ``_meta/index_vM.json``
+    (``library_id``, ``algorithm``, ``chunks``, ``size``), points only L at
+    it and sets ``dirty[L] = 0``. An entity write writes the next immutable
+    version of its control table; a delete commits it together with the
+    tombstone of the entity's chunks."""
 
     def __init__(self, spark: SparkSession, root: str, dim: int = DEFAULT_DIM):
         self.spark = spark
@@ -144,20 +169,24 @@ class VectorStore:
             with open(self._pointer_path()) as f:
                 return json.load(f)
         except FileNotFoundError:
-            return {"chunks": 0, "index": 0, "libraries": {}, "dirty": {}}
+            return {"chunks": 0, "index": 0, "libraries": {}, "dirty": {}, "control": {}}
 
     def _swap_pointer(self, **updates) -> None:
         """Atomic pointer swap (write-temp + os.replace) — the
         IndexSnapshot version bump of index_service.py:270-283. A
-        ``libraries`` or ``dirty`` update merges into its per-library map."""
+        ``libraries``, ``dirty`` or ``control`` update merges into its map."""
         vs = self.versions()
         payload = {**vs, **updates}
-        for key in ("libraries", "dirty"):
+        for key in ("libraries", "dirty", "control"):
             payload[key] = {**vs[key], **updates.get(key, {})}
         fd, tmp = tempfile.mkstemp(dir=os.path.join(self.root, "_meta"))
-        with os.fdopen(fd, "w") as f:
-            json.dump(payload, f)
-        os.replace(tmp, self._pointer_path())
+        try:
+            with os.fdopen(fd, "w") as f:
+                json.dump(payload, f)
+            os.replace(tmp, self._pointer_path())
+        except BaseException:
+            os.unlink(tmp)
+            raise
 
     def _snapshot(self, library_id=None, version=None) -> _Snapshot:
         """Read the pointer once. The index is ``version`` if pinned (a
@@ -177,9 +206,9 @@ class VectorStore:
             if version is not None and library_id not in (None, owner):
                 raise ValueError(f"index v{version} was built for library {owner}")
             dead = tuple(p for p, seq in manifest["deletes"] if seq > record["chunks"])
-        return _Snapshot(vs["chunks"], manifest, index, record, dead, vs["dirty"])
+        return _Snapshot(vs["chunks"], manifest, index, record, dead, vs["dirty"], vs["control"])
 
-    def _open(self, path: str, load):
+    def _open(self, path: str | tuple, load):
         """``load()`` once per immutable path: only paths a committed
         pointer names, as the next writer may rewrite uncommitted ones.
         Concurrent first callers may both load; setdefault hands all of
@@ -309,15 +338,15 @@ class VectorStore:
 
     def _tombstone(
         self, snap: _Snapshot, matched: DataFrame, new_data: tuple = (),
-        bump: bool = False, dirty: dict | None = None,
+        bump: bool = False, **pointer,
     ) -> int:
         """Merge-on-read delete: write the matched rows' (chunk_id,
         library_id) as one small delete file, then commit the next chunks
         version — O(matched), never a corpus rewrite. Readers anti-join
         tombstones onto lower-seq segments only. The matched rows leave the
-        live counts; ``bump`` adds them to the dirty counts, ``dirty`` sets
-        counts. ``new_data`` adds an update's segment, which re-adds each
-        matched row: the live counts stay."""
+        live counts; ``bump`` adds them to the dirty counts; ``pointer``
+        updates ride the commit. ``new_data`` adds an update's segment,
+        which re-adds each matched row: the live counts stay."""
         v, m = snap.chunks + 1, snap.manifest
         path = os.path.join(self.root, "chunks", f"del_{v}")
         matched.select(
@@ -325,28 +354,12 @@ class VectorStore:
         ).coalesce(1).write.mode("overwrite").parquet(path)
         gone = self._library_rows(path)
         if bump:
-            dirty = _plus(snap.dirty, gone)
+            pointer["dirty"] = _plus(snap.dirty, gone)
         return self._commit_chunks(
             v,
             {"data": m["data"] + list(new_data), "deletes": m["deletes"] + [[path, v]],
              "rows": m["rows"] if new_data else _plus(m["rows"], gone, -1)},
-            dirty=dirty or {},
-        )
-
-    def _normalize(self, df: DataFrame) -> DataFrame:
-        """Common column order/types across partitioned dirs (library_id
-        inferred from directory names) and unpartitioned segments.
-
-        Schema evolution guard: segments written before a column existed
-        (e.g. pre-metadata, pre-threshold stores) read back with typed
-        nulls instead of failing analysis — the additive-column rule of
-        every table format."""
-        cols = set(df.columns)
-        return df.select(
-            *(
-                (F.col(c) if c in cols else F.lit(None)).cast(t).alias(c)
-                for c, t in _CHUNK_TYPES
-            )
+            **pointer,
         )
 
     def read_chunks(self, version: int | None = None) -> DataFrame | None:
@@ -356,10 +369,12 @@ class VectorStore:
         )
         if sources is None:
             return None
+        # Pinned schemas: no inference job per source. A segment written
+        # before a column existed reads it as nulls (the additive-column
+        # rule); the select puts a compacted dir's partition column back.
         parts = [
-            self._normalize(self.spark.read.parquet(p)).withColumn(
-                "__seq", F.lit(seq)
-            )
+            self.spark.read.schema(CHUNK_SCHEMA).parquet(p)
+            .select(*_CHUNK_COLS, F.lit(seq).alias("__seq"))
             for p, seq in sources["data"]
         ]
         if not parts:
@@ -370,7 +385,7 @@ class VectorStore:
         if sources["deletes"]:
             dels = None
             for p, seq in sources["deletes"]:
-                d = self.spark.read.parquet(p).select(
+                d = self.spark.read.schema("chunk_id long").parquet(p).select(
                     F.col("chunk_id").alias("__del_id"),
                     F.lit(seq).alias("__del_seq"),
                 )
@@ -389,14 +404,9 @@ class VectorStore:
         ChunkNotFoundError equivalent. The predicate pushes down to the
         parquet scan — at scale this reads the one row group holding the
         id, not the corpus."""
-        cur = self.read_chunks()
-        rows = (
-            [] if cur is None
-            else cur.filter(F.col("chunk_id") == chunk_id).limit(1).collect()
+        return _first(
+            self.read_chunks(), F.col("chunk_id") == chunk_id, f"chunk {chunk_id} not found"
         )
-        if not rows:
-            raise ValueError(f"chunk {chunk_id} not found")
-        return rows[0]
 
     def list_chunks(
         self,
@@ -663,8 +673,8 @@ class VectorStore:
         new build runs)."""
         _validate_k(k)
         text = _validate_query_text(text)
-        self._check_library_exists(library_id)
         snap = self._snapshot(library_id, version)
+        self._check_library_exists(snap, library_id)
         # One-row SQL relation, not createDataFrame: a pickled-rows
         # ExistingRDD runs a Python-worker job (see knn.local_queries_df).
         q = self.spark.sql("SELECT :t AS qtext", args={"t": text}).select(
@@ -672,18 +682,21 @@ class VectorStore:
         )
         return self._search(snap, library_id, q.collect()[0][0], k, nprobe)
 
-    def _check_library_exists(self, library_id: int) -> None:
+    def _check_library_exists(self, snap: _Snapshot, library_id: int) -> None:
         """Reference LibraryNotFoundError (search_service.py: a query names
-        a library; unknown ids 404). Checked against the control table when
-        one exists — stores driven purely through ingest_chunks (no library
-        CRUD) skip it, since chunk rows are then the only library record.
-        The search itself additionally scopes the index scan to the
-        library's rows, so a wrong id can never return another library's
-        hits (the filter pushes down to the parquet scan)."""
-        libs = self.list_libraries()
-        if libs is not None and libs.filter(
-            F.col("library_id") == library_id
-        ).isEmpty():
+        a library; unknown ids 404). Checked against the snapshot's
+        libraries table when one exists — stores driven purely through
+        ingest_chunks (no library CRUD) skip it, since chunk rows are then
+        the only library record. The ids of a table version are collected
+        once, like centroid rows. The search itself additionally scopes the
+        index scan to the library's rows, so a wrong id can never return
+        another library's hits (the filter pushes down to the parquet
+        scan)."""
+        libs = self._control(snap, "libraries")
+        if libs is not None and library_id not in self._open(
+            (self._control_path("libraries", snap.control["libraries"]), "ids"),
+            lambda: frozenset(r[0] for r in libs.select("library_id").collect()),
+        ):
             raise ValueError(f"library {library_id} not found")
 
     def _hydrate_and_threshold(self, hits: DataFrame, idx: DataFrame) -> DataFrame:
@@ -736,8 +749,8 @@ class VectorStore:
                 raise ValueError(
                     f"embedding value at index {i} is out of range (±1e6)"
                 )
-        self._check_library_exists(library_id)
         snap = self._snapshot(library_id, version)
+        self._check_library_exists(snap, library_id)
         return self._search(snap, library_id, vector, k, nprobe)
 
     def _search(
@@ -768,7 +781,7 @@ class VectorStore:
         if snap.dead:
             # Tombstone files are tiny → broadcast anti-join, no index rewrite.
             dead = reduce(DataFrame.unionByName, (
-                self._open(p, lambda p=p: self.spark.read.parquet(p).select("chunk_id"))
+                self._open(p, lambda p=p: self.spark.read.schema("chunk_id long").parquet(p))
                 for p in snap.dead
             ))
             cand = cand.join(F.broadcast(dead), "chunk_id", "left_anti")
@@ -797,44 +810,80 @@ class VectorStore:
             "needs_rebuild": dirty / max(live, 1) >= REBUILD_THRESHOLD,
         }
 
+    # ---- control tables (libraries, documents) ----------------------------
+
+    MAX_CONTROL_ROWS = 1_000_000
+
+    def _control_path(self, table: str, version: int) -> str:
+        return os.path.join(self.root, "control", f"{table}_v{version}")
+
+    def _control(self, snap: _Snapshot, table: str) -> DataFrame | None:
+        """The snapshot's version of control ``table`` with its pinned
+        schema, opened once per version; None if the store has none."""
+        v = snap.control.get(table, 0)
+        if not v:
+            return None
+        path = self._control_path(table, v)
+        read = self.spark.read.schema(_CONTROL_SCHEMAS[table]).parquet
+        return self._open(path, lambda: read(path))
+
+    def _control_with(self, snap: _Snapshot, table: str, key: str, value: int) -> DataFrame:
+        """Control ``table``, which must hold the entity ``key == value``."""
+        cur = self._control(snap, table)
+        if cur is None or cur.filter(F.col(key) == value).isEmpty():
+            raise ValueError(f"{key.removesuffix('_id')} {value} not found")
+        return cur
+
+    def _rewrite_control(self, snap: _Snapshot, table: str, df: DataFrame) -> dict:
+        """Write ``df`` as the next immutable version of control ``table``,
+        one file; return the ``control`` pointer update naming it, which
+        the caller commits with its one swap. A failed writer's leftover
+        directory is never named, and the next writer overwrites it."""
+        v = snap.control.get(table, 0) + 1
+        df.coalesce(1).write.mode("overwrite").parquet(self._control_path(table, v))
+        return {table: v}
+
+    def _append_control(
+        self, snap: _Snapshot, table: str, cur: DataFrame | None, row: DataFrame
+    ) -> dict:
+        """``cur`` plus one created ``row`` as the next version of
+        ``table``. The single-writer rewrite is legal ONLY for control-plane
+        metadata, whose cardinality is entities, not chunks; creates alone
+        grow a table, so here a table grown toward data scale fails loudly
+        before anything is written. The count reads parquet footers only."""
+        if cur is not None:
+            n = cur.count() + 1
+            if n > self.MAX_CONTROL_ROWS:
+                raise RuntimeError(
+                    f"control table {table} would have {n} rows "
+                    f"(> {self.MAX_CONTROL_ROWS}); single-writer metadata "
+                    "rewrite is out of contract at this size"
+                )
+            row = cur.unionByName(row)
+        return self._rewrite_control(snap, table, row)
+
     # ---- library entities (reference routers/libraries.py) ----------------
 
-    def _libraries_path(self) -> str:
-        return os.path.join(self.root, "control", "libraries")
-
     def list_libraries(self) -> DataFrame | None:
-        if not os.path.exists(self._libraries_path()):
-            return None
-        return self.spark.read.parquet(self._libraries_path()).orderBy(
-            F.lower("name")
-        )
+        libs = self._control(self._snapshot(), "libraries")
+        return None if libs is None else libs.orderBy(F.lower("name"))
 
     def get_library(self, library_id: int):
         """Point lookup (reference GET /libraries/{id},
         library_service.py get_library): the row or a clean not-found."""
-        libs = self.list_libraries()
-        rows = (
-            [] if libs is None
-            else libs.filter(F.col("library_id") == library_id).limit(1).collect()
+        return _first(
+            self.list_libraries(), F.col("library_id") == library_id,
+            f"library {library_id} not found",
         )
-        if not rows:
-            raise ValueError(f"library {library_id} not found")
-        return rows[0]
 
     def get_library_by_name(self, name: str):
         """Name lookup, case-insensitive — the uniqueness invariant the
         create path enforces makes lower(name) a key (reference
         library_service.py get_library_by_name + repository name index)."""
-        libs = self.list_libraries()
-        rows = (
-            [] if libs is None
-            else libs.filter(
-                F.lower("name") == name.strip().lower()
-            ).limit(1).collect()
+        return _first(
+            self.list_libraries(), F.lower("name") == name.strip().lower(),
+            f"library named {name!r} not found",
         )
-        if not rows:
-            raise ValueError(f"library named {name!r} not found")
-        return rows[0]
 
     def library_exists(self, library_id: int) -> bool:
         libs = self.list_libraries()
@@ -850,14 +899,10 @@ class VectorStore:
 
     def get_document(self, document_id: int):
         """Point lookup (reference GET /documents/{id})."""
-        docs = self.list_documents()
-        rows = (
-            [] if docs is None
-            else docs.filter(F.col("document_id") == document_id).limit(1).collect()
+        return _first(
+            self.list_documents(), F.col("document_id") == document_id,
+            f"document {document_id} not found",
         )
-        if not rows:
-            raise ValueError(f"document {document_id} not found")
-        return rows[0]
 
     def create_library(
         self,
@@ -875,7 +920,8 @@ class VectorStore:
             raise ValueError("library name must be non-empty")
         if len(name) > 255:
             raise ValueError("library name too long")  # config.py:53-54
-        cur = self.list_libraries()
+        snap = self._snapshot()
+        cur = self._control(snap, "libraries")
         row = self.spark.createDataFrame(
             [(library_id, name.strip(), description)],
             "library_id long, name string, description string",
@@ -887,8 +933,7 @@ class VectorStore:
             )
             if not clash.isEmpty():
                 raise ValueError(f"library name/id already exists: {name!r}")
-            row = cur.unionByName(row)
-        self._rewrite_control(row, self._libraries_path())
+        self._swap_pointer(control=self._append_control(snap, "libraries", cur, row))
 
     def update_library(
         self, library_id: int, name: str | None = None, description: str | None = None
@@ -896,9 +941,8 @@ class VectorStore:
         """Copy-on-write update (reference ``entities.py:114-135``: updates
         return new instances; ``routers/libraries.py`` PATCH). Name keeps
         the case-insensitive uniqueness invariant against OTHER libraries."""
-        cur = self.list_libraries()
-        if cur is None or cur.filter(F.col("library_id") == library_id).isEmpty():
-            raise ValueError(f"library {library_id} not found")
+        snap = self._snapshot()
+        cur = self._control_with(snap, "libraries", "library_id", library_id)
         if name is not None:
             if not name.strip():
                 raise ValueError("library name must be non-empty")
@@ -921,53 +965,16 @@ class VectorStore:
                 "description",
                 F.when(hit, F.lit(description)).otherwise(F.col("description")),
             )
-        self._rewrite_control(df, self._libraries_path())
-
-    MAX_CONTROL_ROWS = 1_000_000
-
-    def _rewrite_control(self, df: DataFrame, path: str) -> None:
-        """Whole-table single-writer rewrite — legal ONLY for control-plane
-        metadata (libraries/documents), whose cardinality is entities, not
-        chunks; it never touches the chunks table. The guard turns that
-        O(metadata) assumption into an explicit contract: a deployment that
-        somehow grows a control table toward data scale fails loudly here
-        instead of silently serializing it through one writer. The guard
-        counts the STAGED tmp write, not the incoming plan: callers pass
-        unmaterialized join/agg plans, and a pre-write df.count() would
-        evaluate each one twice (parquet row-count reads are footer
-        metadata — no second scan). The stage itself writes PARALLEL (no
-        coalesce) so an out-of-contract table is never funneled through
-        one writer before the guard fires (round-5 review); only the
-        guarded final rewrite single-writes, and the tmp dir is removed on
-        BOTH exits — a failed guard and a completed rewrite (round-5
-        advisor: leaving it after success doubles control-table storage on
-        every rewrite, indefinitely)."""
-        import shutil
-
-        tmp = path + "_tmp"
-        df.write.mode("overwrite").parquet(tmp)
-        staged = self.spark.read.parquet(tmp)
-        n = staged.count()
-        if n > self.MAX_CONTROL_ROWS:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise RuntimeError(
-                f"control table {path} has {n} rows (> {self.MAX_CONTROL_ROWS}); "
-                "single-writer metadata rewrite is out of contract at this size"
-            )
-        staged.coalesce(1).write.mode("overwrite").parquet(path)
-        shutil.rmtree(tmp, ignore_errors=True)
+        self._swap_pointer(control=self._rewrite_control(snap, "libraries", df))
 
     # ---- document entities (reference routers/documents.py) ---------------
-
-    def _documents_path(self) -> str:
-        return os.path.join(self.root, "control", "documents")
 
     def list_documents(self, library_id: int | None = None) -> DataFrame | None:
         """Documents ordered by lower(title) (reference
         ``document_repository.py:24-27``)."""
-        if not os.path.exists(self._documents_path()):
+        df = self._control(self._snapshot(), "documents")
+        if df is None:
             return None
-        df = self.spark.read.parquet(self._documents_path())
         if library_id is not None:
             df = df.filter(F.col("library_id") == library_id)
         return df.orderBy(F.lower("title"))
@@ -987,19 +994,16 @@ class VectorStore:
             raise ValueError("document title must be non-empty")
         if len(title) > 255:
             raise ValueError("document title too long")
-        libs = self.list_libraries()
-        if libs is None or libs.filter(F.col("library_id") == library_id).isEmpty():
-            raise ValueError(f"library {library_id} not found")
+        snap = self._snapshot()
+        self._control_with(snap, "libraries", "library_id", library_id)
         row = self.spark.createDataFrame(
             [(document_id, library_id, title.strip())],
             "document_id long, library_id long, title string",
         ).withColumn("metadata", metadata_lit(DOCUMENT_METADATA_FIELDS, metadata, DOCUMENT_METADATA_BOUNDS))
-        cur = self.list_documents()
-        if cur is not None:
-            if not cur.filter(F.col("document_id") == document_id).isEmpty():
-                raise ValueError(f"document {document_id} already exists")
-            row = cur.unionByName(row)
-        self._rewrite_control(row, self._documents_path())
+        cur = self._control(snap, "documents")
+        if cur is not None and not cur.filter(F.col("document_id") == document_id).isEmpty():
+            raise ValueError(f"document {document_id} already exists")
+        self._swap_pointer(control=self._append_control(snap, "documents", cur, row))
 
     def update_document(self, document_id: int, title: str) -> None:
         """Copy-on-write title update (reference ``entities.py:177-199``,
@@ -1008,44 +1012,38 @@ class VectorStore:
             raise ValueError("document title must be non-empty")
         if len(title) > 255:
             raise ValueError("document title too long")
-        cur = self.list_documents()
-        if cur is None or cur.filter(F.col("document_id") == document_id).isEmpty():
-            raise ValueError(f"document {document_id} not found")
-        self._rewrite_control(
-            cur.withColumn(
-                "title",
-                F.when(
-                    F.col("document_id") == document_id, F.lit(title.strip())
-                ).otherwise(F.col("title")),
-            ),
-            self._documents_path(),
+        snap = self._snapshot()
+        cur = self._control_with(snap, "documents", "document_id", document_id)
+        df = cur.withColumn(
+            "title",
+            F.when(
+                F.col("document_id") == document_id, F.lit(title.strip())
+            ).otherwise(F.col("title")),
         )
+        self._swap_pointer(control=self._rewrite_control(snap, "documents", df))
 
     def delete_document(self, document_id: int) -> None:
         """Cascade: drop the document row and its chunks (reference
         ``document_repository.py:70-81`` + chunk cascade)."""
-        cur = self.list_documents()
-        if cur is None or cur.filter(F.col("document_id") == document_id).isEmpty():
-            raise ValueError(f"document {document_id} not found")
-        self._rewrite_control(
-            cur.filter(F.col("document_id") != document_id), self._documents_path()
-        )
-        self._tombstone_where(F.col("document_id") == document_id)
+        self._delete_entity("documents", "document_id", document_id)
 
     def delete_library(self, library_id: int) -> None:
-        """Cascade: drop the library row and anti-join its chunks away
-        (reference ``library_service.py:67-77``)."""
-        cur = self.list_libraries()
-        if cur is None or cur.filter(F.col("library_id") == library_id).isEmpty():
-            raise ValueError(f"library {library_id} not found")
-        remaining = cur.filter(F.col("library_id") != library_id)
-        self._rewrite_control(remaining, self._libraries_path())
-        self._tombstone_where(F.col("library_id") == library_id, {str(library_id): 0})
+        """Cascade: drop the library row and its chunks, and reset its
+        dirty count (reference ``library_service.py:67-77``)."""
+        self._delete_entity(
+            "libraries", "library_id", library_id, dirty={str(library_id): 0}
+        )
 
-    def _tombstone_where(self, cond, dirty: dict | None = None) -> None:
-        """Cascade step: tombstone every current chunk matching ``cond``,
-        setting ``dirty`` counts in the same commit."""
+    def _delete_entity(self, table: str, key: str, value: int, **pointer) -> None:
+        """Drop the entity ``key == value`` from control ``table`` and
+        tombstone its chunks: both, with the ``pointer`` updates, in one
+        commit."""
         snap = self._snapshot()
+        hit = F.col(key) == value
+        cur = self._control_with(snap, table, key, value)
+        control = self._rewrite_control(snap, table, cur.filter(~hit))
         chunks = self.read_chunks(snap.chunks)
-        if chunks is not None:
-            self._tombstone(snap, chunks.filter(cond), dirty=dirty)
+        if chunks is None:
+            self._swap_pointer(control=control, **pointer)
+        else:
+            self._tombstone(snap, chunks.filter(hit), control=control, **pointer)

@@ -21,6 +21,17 @@ def store(spark):
     shutil.rmtree(root, ignore_errors=True)
 
 
+def _jobs(spark, group, fn):
+    """(Spark jobs ``fn()`` ran, its result), counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
 def _chunk_rows(spark, n=60, library_id=1, start_doc=0):
     rows = [
         (
@@ -462,7 +473,8 @@ def test_pinned_version_skips_later_deletes(spark, store):
 def test_search_reads_pointer_once(spark, store, monkeypatch):
     """A search resolves one snapshot: one read of the pointer file, so a
     concurrent build between reads can never pair one build's index with
-    another build's tombstone cut-off."""
+    another build's tombstone cut-off — with or without a libraries
+    table."""
     store.ingest_chunks(_chunk_rows(spark, 20))
     store.build_index(1, n_clusters=2)
     store.delete_chunk(100003)
@@ -473,12 +485,17 @@ def test_search_reads_pointer_once(spark, store, monkeypatch):
         reads.append(1)
         return orig(self)
 
-    monkeypatch.setattr(VectorStore, "versions", counting)
-    store.search_vector(1, [0.0] * 16, k=3).collect()
-    assert len(reads) == 1
-    reads.clear()
-    store.search_text(1, "chunk text number 3", k=3).collect()
-    assert len(reads) == 1
+    for libraries in (False, True):
+        if libraries:  # the library check reads the search's own snapshot
+            store.create_library(1, "lib-one")
+        with monkeypatch.context() as m:
+            m.setattr(VectorStore, "versions", counting)
+            reads.clear()
+            store.search_vector(1, [0.0] * 16, k=3).collect()
+            assert len(reads) == 1
+            reads.clear()
+            store.search_text(1, "chunk text number 3", k=3).collect()
+            assert len(reads) == 1
 
 
 # ---- serving-path parity guards (reference schemas/search.py:22-27,
@@ -838,35 +855,26 @@ def test_delete_chunk_single(spark, store):
 
 def test_control_rewrite_size_guard(spark, store):
     """The single-writer coalesce(1) metadata rewrite is legal ONLY for
-    O(entities) control tables — the guard makes the contract fail loudly
-    instead of silently serializing a data-scale table through one writer
-    (round-3/4 judge ask)."""
-    store.MAX_CONTROL_ROWS = 10  # shrink the contract for the test
-    big = spark.range(11).select(
-        F.col("id").alias("library_id"), F.concat(F.lit("lib-"), "id").alias("name")
-    )
+    O(entities) control tables — a create that would grow one past the
+    contract fails loudly, before anything is written."""
     import os
 
-    path = store._libraries_path()
+    store.MAX_CONTROL_ROWS = 2  # shrink the contract for the test
+    store.create_library(1, "one")
+    store.create_library(2, "two")
+    before = sorted(store.list_libraries().collect(), key=lambda r: r["library_id"])
+    control = store.versions()["control"]
+    dirs = sorted(os.listdir(os.path.join(store.root, "control")))
     with pytest.raises(RuntimeError, match="out of contract"):
-        store._rewrite_control(big, path)
-    # a failed guard must not leave its staging dir behind (round-5
-    # review: the stage is parallel, so even an out-of-contract table is
-    # never funneled through one writer — and its tmp dir is removed).
-    # Checked IMMEDIATELY after the failing call and on the exact suffix
-    # _rewrite_control stages to (round-5 advisor: the old assert ran
-    # after a successful rewrite and on a different path, so it held
-    # vacuously).
-    assert not os.path.exists(path + "_tmp")
-    with pytest.raises(RuntimeError, match="out of contract"):
-        store._rewrite_control(big, path + "_direct")
-    assert not os.path.exists(path + "_direct_tmp")
-    # within contract: still writes fine — and the SUCCESS path must also
-    # remove its staging copy (round-5 advisor: leaving it doubles
-    # control-table storage on every rewrite)
-    store._rewrite_control(big.limit(3), path)
-    assert spark.read.parquet(path).count() == 3
-    assert not os.path.exists(path + "_tmp")
+        store.create_library(3, "three")
+    after = sorted(store.list_libraries().collect(), key=lambda r: r["library_id"])
+    assert after == before
+    assert store.versions()["control"] == control  # nothing committed
+    assert sorted(os.listdir(os.path.join(store.root, "control"))) == dirs  # nor written
+    # within contract: an update still commits
+    store.update_library(1, name="uno")
+    assert store.get_library(1)["name"] == "uno"
+    assert store.versions()["control"]["libraries"] == control["libraries"] + 1
 
 
 def test_compaction_keeps_deletes(spark, store):
@@ -890,16 +898,30 @@ class _Fault(Exception):
 
 
 def test_failed_write_leaves_old_state(spark, store, monkeypatch):
-    """Fail each parquet write, then the pointer replace, of every chunk
-    write and index build in turn: a reopened store reads exactly the old
-    state (rows, dirty count, rebuild flag, index status) and then accepts
-    the same write."""
+    """Fail each parquet write, then the pointer replace, of every chunk,
+    index and entity write in turn: a reopened store reads exactly the old
+    state (pointer, rows, libraries, documents, dirty count, rebuild flag,
+    index status), no pointer temp file is left behind, and the store then
+    accepts the same write."""
     import os
+    from functools import reduce
 
-    from pyspark.sql import DataFrameWriter
+    from pyspark.sql import DataFrame, DataFrameWriter
 
     store.ingest_chunks(_chunk_rows(spark, 40))
     store.build_index(1, algorithm="linear")
+    # Libraries 21.. hold two chunks each; library 2 holds documents 31..
+    # and 41.., the latter with one chunk each.
+    store.ingest_chunks(reduce(DataFrame.unionByName, [
+        *(_chunk_rows(spark, 2, library_id=20 + k) for k in range(1, 5)),
+        *(_chunk_rows(spark, 1, library_id=2, start_doc=40 + k) for k in range(1, 5)),
+    ]))
+    store.create_library(2, "documents")
+    for k in range(1, 5):
+        store.create_library(20 + k, f"doomed {k}")
+        store.create_document(30 + k, 2, f"title {k}")
+        store.create_document(40 + k, 2, f"doomed {k}")
+    meta = os.path.join(store.root, "_meta")
 
     def reopen():
         return VectorStore(spark, store.root, dim=16)
@@ -907,13 +929,20 @@ def test_failed_write_leaves_old_state(spark, store, monkeypatch):
     def state():
         st = reopen()
         rows = sorted(st.read_chunks().collect(), key=lambda r: r["chunk_id"])
-        return rows, st.dirty_count(1), st.needs_rebuild(1), st.index_status(1)
+        libs = sorted(st.list_libraries().collect(), key=lambda r: r["library_id"])
+        docs = sorted(st.list_documents().collect(), key=lambda r: r["document_id"])
+        return (st.versions(), rows, libs, docs, st.dirty_count(1),
+                st.needs_rebuild(1), st.index_status(1))
 
-    writes = {  # write k of each kind touches rows no other write touches
+    writes = {  # write k of each kind touches entities and rows no other write touches
         "ingest": lambda st, k: st.ingest_chunks(_chunk_rows(spark, 3, start_doc=100 + k)),
         "update": lambda st, k: st.update_chunk(100000 + k, text=f"pass {k}"),
         "delete": lambda st, k: st.delete_chunk(100020 + k),
         "build": lambda st, k: st.build_index(1, algorithm="linear"),
+        "create_library": lambda st, k: st.create_library(10 + k, f"new {k}"),
+        "update_document": lambda st, k: st.update_document(30 + k, f"pass {k}"),
+        "delete_library": lambda st, k: st.delete_library(20 + k),
+        "delete_document": lambda st, k: st.delete_document(40 + k),
     }
     for name, write in writes.items():
         k = 1
@@ -939,6 +968,7 @@ def test_failed_write_leaves_old_state(spark, store, monkeypatch):
                 else:
                     break  # k is past the last step: the write went through
             assert state() == before, f"{name} failed at step {k}"
+            assert not [f for f in os.listdir(meta) if f.startswith("tmp")], name
             write(reopen(), k)
             k += 1
         assert k >= 3, name  # at least one parquet write and the swap
@@ -949,19 +979,28 @@ def test_rebuild_state_reads_run_no_spark_job(spark, store):
     store.ingest_chunks(_chunk_rows(spark, 30))
     store.build_index(1, algorithm="linear")
     store.delete_chunk(100003)
-    sc = spark.sparkContext
-
-    def jobs(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group)), out
-
-    assert jobs("count-chunks", store.count_chunks)[0] > 0  # the tracker sees jobs
-    n, (rebuild, st) = jobs(
-        "rebuild-state", lambda: (store.needs_rebuild(1), store.index_status(1))
+    assert _jobs(spark, "count-chunks", store.count_chunks)[0] > 0  # the tracker sees jobs
+    n, (rebuild, st) = _jobs(
+        spark, "rebuild-state", lambda: (store.needs_rebuild(1), store.index_status(1))
     )
     assert n == 0
     assert not rebuild and (st["size"], st["dirty_count"]) == (30, 1)
+
+
+def test_library_check_adds_no_search_job(spark, store):
+    """A search checks its library against the snapshot's libraries table,
+    whose ids are collected once per table version: once warm, a search
+    with a libraries table runs no more jobs than one without."""
+    store.ingest_chunks(_chunk_rows(spark, 40))
+    store.build_index(1, algorithm="linear")
+
+    def search():
+        return store.search_vector(1, [0.1] * 16, k=3).collect()
+
+    search()
+    without, want = _jobs(spark, "search-no-libraries", search)
+    store.create_library(1, "lib-one")
+    search()  # warm-up: collects the new table version's ids
+    with_table, got = _jobs(spark, "search-libraries", search)
+    assert got == want
+    assert with_table <= without
