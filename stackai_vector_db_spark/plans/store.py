@@ -119,6 +119,11 @@ def _first(df: DataFrame | None, cond, missing: str):
     return rows[0]
 
 
+def _has(df: DataFrame | None, cond) -> bool:
+    """Whether ``df`` exists and holds a row matching ``cond``."""
+    return df is not None and not df.filter(cond).isEmpty()
+
+
 def _plus(counts: dict, delta: dict, sign: int = 1) -> dict:
     """Per-library counters ``counts + sign * delta``."""
     return {k: counts.get(k, 0) + sign * delta.get(k, 0) for k in {**counts, **delta}}
@@ -155,7 +160,8 @@ class VectorStore:
         self.root = root
         self.dim = dim
         # Opened immutable paths (index DataFrames, centroid rows, delete
-        # files), each named by a committed pointer — see _open.
+        # files), each named by a committed pointer — see _open; and the
+        # latest opened version of each control table — see _latest.
         self._opened: dict = {}
         os.makedirs(os.path.join(root, "_meta"), exist_ok=True)
 
@@ -178,7 +184,7 @@ class VectorStore:
         vs = self.versions()
         payload = {**vs, **updates}
         for key in ("libraries", "dirty", "control"):
-            payload[key] = {**vs[key], **updates.get(key, {})}
+            payload[key] = {**vs.get(key, {}), **updates.get(key, {})}
         fd, tmp = tempfile.mkstemp(dir=os.path.join(self.root, "_meta"))
         try:
             with os.fdopen(fd, "w") as f:
@@ -206,7 +212,8 @@ class VectorStore:
             if version is not None and library_id not in (None, owner):
                 raise ValueError(f"index v{version} was built for library {owner}")
             dead = tuple(p for p, seq in manifest["deletes"] if seq > record["chunks"])
-        return _Snapshot(vs["chunks"], manifest, index, record, dead, vs["dirty"], vs["control"])
+        return _Snapshot(vs["chunks"], manifest, index, record, dead, vs["dirty"],
+                         vs.get("control", {}))
 
     def _open(self, path: str | tuple, load):
         """``load()`` once per immutable path: only paths a committed
@@ -217,6 +224,17 @@ class VectorStore:
         if got is None:
             got = self._opened.setdefault(path, load())
         return got
+
+    def _latest(self, key: tuple, version: int, load):
+        """``load()`` once per committed ``version`` of ``key``, holding
+        only the newest version loaded: a superseded control table version
+        is never read again through the pointer, so it is not kept."""
+        got = self._opened.get(key, (0, None))
+        if got[0] != version:
+            got = (version, load())
+            if version > self._opened.get(key, (0,))[0]:
+                self._opened[key] = got
+        return got[1]
 
     def _chunks_path(self, version: int) -> str:
         return os.path.join(self.root, "chunks", f"v{version}")
@@ -308,7 +326,11 @@ class VectorStore:
         snap = self._snapshot()
         v = snap.chunks + 1
         seg = os.path.join(self.root, "chunks", f"seg_{v}")
-        validated.select(*_CHUNK_COLS).write.mode("overwrite").parquet(seg)
+        # Stored in the chunk schema, which read_chunks pins: a source's
+        # wider types (array<double>, double) would not read back narrowed.
+        validated.select(
+            *(F.col(c).cast(t).alias(c) for c, t in _CHUNK_TYPES)
+        ).write.mode("overwrite").parquet(seg)
         added = self._library_rows(seg)
         m = snap.manifest
         return self._commit_chunks(
@@ -379,17 +401,14 @@ class VectorStore:
         ]
         if not parts:
             return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+        out = reduce(DataFrame.unionByName, parts)
         if sources["deletes"]:
-            dels = None
-            for p, seq in sources["deletes"]:
-                d = self.spark.read.schema("chunk_id long").parquet(p).select(
-                    F.col("chunk_id").alias("__del_id"),
-                    F.lit(seq).alias("__del_seq"),
+            dels = reduce(DataFrame.unionByName, (
+                self.spark.read.schema("chunk_id long").parquet(p).select(
+                    F.col("chunk_id").alias("__del_id"), F.lit(seq).alias("__del_seq")
                 )
-                dels = d if dels is None else dels.unionByName(d)
+                for p, seq in sources["deletes"]
+            ))
             out = out.join(
                 F.broadcast(dels),
                 (F.col("chunk_id") == F.col("__del_id"))
@@ -443,14 +462,9 @@ class VectorStore:
         if cur is None:
             raise ValueError("empty store")
         v = snap.chunks + 1
-        cur.write.mode("overwrite").partitionBy("library_id").parquet(
-            self._chunks_path(v)
-        )
-        m = snap.manifest
-        return self._commit_chunks(
-            v, {"data": [[self._chunks_path(v), v]], "deletes": m["deletes"],
-                "rows": m["rows"]}
-        )
+        path = self._chunks_path(v)
+        cur.write.mode("overwrite").partitionBy("library_id").parquet(path)
+        return self._commit_chunks(v, {**snap.manifest, "data": [[path, v]]})
 
     def update_chunk(
         self,
@@ -693,8 +707,8 @@ class VectorStore:
         another library's hits (the filter pushes down to the parquet
         scan)."""
         libs = self._control(snap, "libraries")
-        if libs is not None and library_id not in self._open(
-            (self._control_path("libraries", snap.control["libraries"]), "ids"),
+        if libs is not None and library_id not in self._latest(
+            ("library ids",), snap.control["libraries"],
             lambda: frozenset(r[0] for r in libs.select("library_id").collect()),
         ):
             raise ValueError(f"library {library_id} not found")
@@ -819,18 +833,18 @@ class VectorStore:
 
     def _control(self, snap: _Snapshot, table: str) -> DataFrame | None:
         """The snapshot's version of control ``table`` with its pinned
-        schema, opened once per version; None if the store has none."""
+        schema, opened once; None if the store has none."""
         v = snap.control.get(table, 0)
         if not v:
             return None
         path = self._control_path(table, v)
         read = self.spark.read.schema(_CONTROL_SCHEMAS[table]).parquet
-        return self._open(path, lambda: read(path))
+        return self._latest(("control", table), v, lambda: read(path))
 
     def _control_with(self, snap: _Snapshot, table: str, key: str, value: int) -> DataFrame:
         """Control ``table``, which must hold the entity ``key == value``."""
         cur = self._control(snap, table)
-        if cur is None or cur.filter(F.col(key) == value).isEmpty():
+        if not _has(cur, F.col(key) == value):
             raise ValueError(f"{key.removesuffix('_id')} {value} not found")
         return cur
 
@@ -886,16 +900,10 @@ class VectorStore:
         )
 
     def library_exists(self, library_id: int) -> bool:
-        libs = self.list_libraries()
-        return libs is not None and not libs.filter(
-            F.col("library_id") == library_id
-        ).isEmpty()
+        return _has(self.list_libraries(), F.col("library_id") == library_id)
 
     def library_name_exists(self, name: str) -> bool:
-        libs = self.list_libraries()
-        return libs is not None and not libs.filter(
-            F.lower("name") == name.strip().lower()
-        ).isEmpty()
+        return _has(self.list_libraries(), F.lower("name") == name.strip().lower())
 
     def get_document(self, document_id: int):
         """Point lookup (reference GET /documents/{id})."""
@@ -926,13 +934,9 @@ class VectorStore:
             [(library_id, name.strip(), description)],
             "library_id long, name string, description string",
         ).withColumn("metadata", metadata_lit(LIBRARY_METADATA_FIELDS, metadata, LIBRARY_METADATA_BOUNDS))
-        if cur is not None:
-            clash = cur.filter(
-                (F.lower("name") == name.strip().lower())
-                | (F.col("library_id") == library_id)
-            )
-            if not clash.isEmpty():
-                raise ValueError(f"library name/id already exists: {name!r}")
+        if _has(cur, (F.lower("name") == name.strip().lower())
+                | (F.col("library_id") == library_id)):
+            raise ValueError(f"library name/id already exists: {name!r}")
         self._swap_pointer(control=self._append_control(snap, "libraries", cur, row))
 
     def update_library(
@@ -948,11 +952,8 @@ class VectorStore:
                 raise ValueError("library name must be non-empty")
             if len(name) > 255:
                 raise ValueError("library name too long")
-            clash = cur.filter(
-                (F.lower("name") == name.strip().lower())
-                & (F.col("library_id") != library_id)
-            )
-            if not clash.isEmpty():
+            if _has(cur, (F.lower("name") == name.strip().lower())
+                    & (F.col("library_id") != library_id)):
                 raise ValueError(f"library name already exists: {name!r}")
         hit = F.col("library_id") == library_id
         df = cur
@@ -1001,7 +1002,7 @@ class VectorStore:
             "document_id long, library_id long, title string",
         ).withColumn("metadata", metadata_lit(DOCUMENT_METADATA_FIELDS, metadata, DOCUMENT_METADATA_BOUNDS))
         cur = self._control(snap, "documents")
-        if cur is not None and not cur.filter(F.col("document_id") == document_id).isEmpty():
+        if _has(cur, F.col("document_id") == document_id):
             raise ValueError(f"document {document_id} already exists")
         self._swap_pointer(control=self._append_control(snap, "documents", cur, row))
 

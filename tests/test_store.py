@@ -1004,3 +1004,65 @@ def test_library_check_adds_no_search_job(spark, store):
     with_table, got = _jobs(spark, "search-libraries", search)
     assert got == want
     assert with_table <= without
+
+
+def test_ingest_stores_the_chunk_schema(spark, store):
+    """Rows in wider types than the chunk schema — embedding array<double>
+    and similarity_threshold double, as sources/ingest.py parses JSON —
+    are stored in the chunk schema, so every later read of the store
+    works."""
+    rows = spark.createDataFrame(
+        [(i, 0, 1, f"wide typed chunk {i}", [float(i)] * 16, 0, None, 5.0)
+         for i in range(10)],
+        "chunk_id long, document_id long, library_id long, text string, "
+        "embedding array<double>, start_index long, end_index long, "
+        "similarity_threshold double",
+    )
+    store.ingest_chunks(rows)
+    assert len(store.read_chunks().collect()) == 10
+    assert store.get_chunk(3)["similarity_threshold"] == 5.0
+    store.build_index(1, algorithm="linear")
+    hits = store.search_vector(1, [3.0] * 16, k=1).collect()
+    assert [r["chunk_id"] for r in hits] == [3]
+    store.update_chunk(4, text="updated wide chunk")
+    store.delete_chunk(3)
+    assert store.count_chunks(1) == 9
+
+
+def test_pointer_without_control_key(spark, store):
+    """A pointer written before the ``control`` key existed reads as a
+    store with no library or document table: its chunks and index still
+    serve, and the first entity write adds the key."""
+    import json
+    import os
+
+    store.ingest_chunks(_chunk_rows(spark, 10))
+    store.build_index(1, algorithm="linear")
+    vs = store.versions()
+    del vs["control"]
+    with open(os.path.join(store.root, "_meta", "CURRENT"), "w") as f:
+        json.dump(vs, f)
+    old = VectorStore(spark, store.root, dim=16)
+    assert old.list_libraries() is None and old.count_chunks(1) == 10
+    assert len(old.search_vector(1, [0.1] * 16, k=3).collect()) == 3
+    old.create_library(1, "one")
+    assert old.versions()["control"] == {"libraries": 1}
+    assert old.get_library(1)["name"] == "one"
+
+
+def test_only_latest_control_versions_stay_open(spark, store):
+    """Superseded library and document table versions are not kept open:
+    after many entity writes, one table and one id set per kind remain."""
+    store.ingest_chunks(_chunk_rows(spark, 10))
+    store.build_index(1, algorithm="linear")
+    store.create_library(1, "one")
+    for k in range(4):
+        store.create_document(k, 1, f"title {k}")
+        store.update_library(1, description=f"pass {k}")
+        store.search_vector(1, [0.1] * 16, k=3)
+        assert store.list_documents().count() == k + 1
+    control = [key for key in store._opened if isinstance(key, tuple)
+               and key[0] in ("control", "library ids")]
+    assert sorted(control) == [("control", "documents"), ("control", "libraries"),
+                               ("library ids",)]
+    assert store._opened[("control", "libraries")][0] == store.versions()["control"]["libraries"]
