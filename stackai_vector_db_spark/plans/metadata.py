@@ -110,24 +110,40 @@ LIBRARY_METADATA_BOUNDS: dict[str, tuple[str, int]] = {
 }
 
 
-def metadata_lit(
-    fields: list[tuple[str, str]],
-    values: dict | None,
-    bounds: dict[str, tuple] | None = None,
-) -> Column:
-    """Build a struct literal from a (possibly partial) dict, validating the
-    closed schema — the dataclass constructor's unknown-field error
-    (reference entities.py: frozen dataclasses reject unexpected kwargs) —
-    plus the per-field Pydantic bounds when ``bounds`` is given (the
-    control-plane 422-equivalents; this path is driver-side by design:
-    library/document metadata arrives as an API payload, not as data)."""
+def _is_int(v) -> bool:
+    return isinstance(v, int) and not isinstance(v, bool)
+
+
+# DDL type → whether a Python value has it; an ``int`` field is 32-bit.
+_TYPE_CHECKS = {
+    "string": lambda v: isinstance(v, str),
+    "int": lambda v: _is_int(v) and -(2**31) <= v < 2**31,
+    "float": lambda v: _is_int(v) or isinstance(v, float),
+    "boolean": lambda v: isinstance(v, bool),
+    "array<string>": lambda v: isinstance(v, list) and all(isinstance(x, str) for x in v),
+}
+
+
+def metadata_values(fields: list[tuple[str, str]], values: dict | None,
+                    bounds: dict) -> dict | None:
+    """The full metadata dict (absent fields None) of a (possibly partial)
+    ``values``, validating the closed schema — the dataclass constructor's
+    unknown-field error (reference entities.py: frozen dataclasses reject
+    unexpected kwargs) — each value's declared type, and the per-field
+    Pydantic ``bounds`` (the 422-equivalents; this path is driver-side by
+    design: metadata arrives as an API payload, not as data). None stays
+    None: no metadata."""
     if values is None:
-        return null_metadata(fields)
+        return None
     known = {n for n, _ in fields}
     unknown = set(values) - known
     if unknown:
         raise ValueError(f"unknown metadata fields: {sorted(unknown)}")
-    for name, spec in (bounds or {}).items():
+    for name, typ in fields:
+        v = values.get(name)
+        if v is not None and not _TYPE_CHECKS[typ](v):
+            raise ValueError(f"metadata field {name!r} must be of type {typ}, got {v!r}")
+    for name, spec in bounds.items():
         v = values.get(name)
         if v is None:
             continue
@@ -140,11 +156,15 @@ def metadata_lit(
             raise ValueError(
                 f"metadata field {name!r} must be in [{spec[1]}, {spec[2]}]"
             )
-    cols = []
-    for name, typ in fields:
-        v = values.get(name)
-        cols.append(F.lit(v).cast(typ).alias(name))
-    return F.struct(*cols)
+    return {name: values.get(name) for name, _ in fields}
+
+
+def metadata_lit(fields: list[tuple[str, str]], values: dict | None, bounds: dict) -> Column:
+    """:func:`metadata_values` as a struct literal of the closed schema."""
+    values = metadata_values(fields, values, bounds)
+    if values is None:
+        return null_metadata(fields)
+    return F.struct(*(F.lit(values[n]).cast(t).alias(n) for n, t in fields))
 
 
 def chunk_metadata_valid(col: Column) -> Column:

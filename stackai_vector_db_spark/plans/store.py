@@ -9,9 +9,11 @@ Maps the reference's in-memory machinery to immutable-table conventions
   file. Each operation reads the pointer once, then only touches immutable
   files — the snapshot-isolation the reference gets from RWLocks falls
   out of storage immutability, zero locking.
-- library/document repositories → control tables ``control/{libraries,
-  documents}_vN`` the pointer names; an entity write and its chunk cascade
-  (``library_service.py:67-77``) commit with one pointer swap.
+- library/document repositories (dicts keyed by id) → the same dicts on
+  the driver: each version of ``control/{libraries,documents}_vN.parquet``
+  the pointer names is read once and written with pyarrow, no Spark job;
+  an entity write and its chunk cascade (``library_service.py:67-77``)
+  commit with one pointer swap.
 - per-library RWLock (``utils/rwlock.py``) → single-writer job discipline;
   readers never block.
 - tombstone deletes (``base.py:196-206``) → merge-on-read delete files;
@@ -25,8 +27,8 @@ Maps the reference's in-memory machinery to immutable-table conventions
   ``partitionBy("cluster_id")`` layout; probe filters prune directories.
 
 The store is the serving-side composition of the operators in
-``operators/``; every step is a plain DataFrame job that would run
-unchanged on a multi-node cluster.
+``operators/``; every chunk and index step is a plain DataFrame job that
+would run unchanged on a multi-node cluster.
 """
 
 from __future__ import annotations
@@ -34,11 +36,15 @@ from __future__ import annotations
 import json
 import os
 import tempfile
-from functools import reduce
+from functools import cache, reduce
 from typing import NamedTuple
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Row, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from stackai_vector_db_spark.functions.vector import fake_embedding
 from stackai_vector_db_spark.operators.ivf import (
@@ -61,6 +67,7 @@ from stackai_vector_db_spark.plans.metadata import (
     chunk_metadata_valid,
     coerce_metadata,
     metadata_lit,
+    metadata_values,
     null_metadata,
 )
 
@@ -110,18 +117,23 @@ def _validate_query_text(text: str) -> str:
     return text.strip()
 
 
-def _first(df: DataFrame | None, cond, missing: str):
-    """Point lookup: the first row of ``df`` matching ``cond``, else a
-    clean not-found ``ValueError(missing)``."""
-    rows = [] if df is None else df.filter(cond).limit(1).collect()
-    if not rows:
-        raise ValueError(missing)
-    return rows[0]
+@cache
+def _arrow_schema(table: str) -> pa.Schema:
+    """Control ``table``'s Arrow schema, parsed once from its DDL."""
+    return to_arrow_schema(StructType.fromDDL(_CONTROL_SCHEMAS[table]))
 
 
-def _has(df: DataFrame | None, cond) -> bool:
-    """Whether ``df`` exists and holds a row matching ``cond``."""
-    return df is not None and not df.filter(cond).isEmpty()
+def _row(d: dict) -> Row:
+    """A control row dict as the Row its listing's ``collect()`` returns,
+    nested metadata struct included."""
+    return Row(**{k: _row(v) if isinstance(v, dict) else v for k, v in d.items()})
+
+
+def _named(libs: dict | None, name: str) -> dict | None:
+    """The library of ``libs`` named ``name`` casefolded — the key the
+    create path keeps unique (reference ``library_repository.py:18-19``)."""
+    key = name.strip().casefold()
+    return next((r for r in (libs or {}).values() if r["name"].casefold() == key), None)
 
 
 def _plus(counts: dict, delta: dict, sign: int = 1) -> dict:
@@ -161,7 +173,7 @@ class VectorStore:
         self.dim = dim
         # Opened immutable paths (index DataFrames, centroid rows, delete
         # files), each named by a committed pointer — see _open; and the
-        # latest opened version of each control table — see _latest.
+        # latest read version of each control table — see _latest.
         self._opened: dict = {}
         os.makedirs(os.path.join(root, "_meta"), exist_ok=True)
 
@@ -423,9 +435,11 @@ class VectorStore:
         ChunkNotFoundError equivalent. The predicate pushes down to the
         parquet scan — at scale this reads the one row group holding the
         id, not the corpus."""
-        return _first(
-            self.read_chunks(), F.col("chunk_id") == chunk_id, f"chunk {chunk_id} not found"
-        )
+        cur = self.read_chunks()
+        rows = [] if cur is None else cur.filter(F.col("chunk_id") == chunk_id).limit(1).collect()
+        if not rows:
+            raise ValueError(f"chunk {chunk_id} not found")
+        return rows[0]
 
     def list_chunks(
         self,
@@ -669,8 +683,11 @@ class VectorStore:
             # a clean domain error, not a storage-layer stack trace.
             raise ValueError(f"index not built (version {snap.index})")
         path = self._index_path(snap.index)
-        read = self.spark.read.parquet
-        return self._open(path, lambda: (read(path), read(path + "/_centroids")))
+        read = self.spark.read.schema
+        return self._open(path, lambda: (
+            read(CHUNK_SCHEMA + ", cluster_id int").parquet(path),
+            read("cluster_id int, centroid array<double>").parquet(path + "/_centroids"),
+        ))
 
     # ---- search (trace §3.1) ---------------------------------------------
 
@@ -701,16 +718,12 @@ class VectorStore:
         a library; unknown ids 404). Checked against the snapshot's
         libraries table when one exists — stores driven purely through
         ingest_chunks (no library CRUD) skip it, since chunk rows are then
-        the only library record. The ids of a table version are collected
-        once, like centroid rows. The search itself additionally scopes the
+        the only library record. The search itself additionally scopes the
         index scan to the library's rows, so a wrong id can never return
         another library's hits (the filter pushes down to the parquet
         scan)."""
         libs = self._control(snap, "libraries")
-        if libs is not None and library_id not in self._latest(
-            ("library ids",), snap.control["libraries"],
-            lambda: frozenset(r[0] for r in libs.select("library_id").collect()),
-        ):
+        if libs is not None and library_id not in libs:
             raise ValueError(f"library {library_id} not found")
 
     def _hydrate_and_threshold(self, hits: DataFrame, idx: DataFrame) -> DataFrame:
@@ -829,88 +842,87 @@ class VectorStore:
     MAX_CONTROL_ROWS = 1_000_000
 
     def _control_path(self, table: str, version: int) -> str:
-        return os.path.join(self.root, "control", f"{table}_v{version}")
+        return os.path.join(self.root, "control", f"{table}_v{version}.parquet")
 
-    def _control(self, snap: _Snapshot, table: str) -> DataFrame | None:
-        """The snapshot's version of control ``table`` with its pinned
-        schema, opened once; None if the store has none."""
+    def _control(self, snap: _Snapshot, table: str) -> dict | None:
+        """The snapshot's version of control ``table`` as ``{id: row}``
+        dicts, read once with pyarrow; None if the store has none. Every
+        reader shares it: never mutate it or its rows."""
         v = snap.control.get(table, 0)
         if not v:
             return None
         path = self._control_path(table, v)
-        read = self.spark.read.schema(_CONTROL_SCHEMAS[table]).parquet
-        return self._latest(("control", table), v, lambda: read(path))
+        schema = _arrow_schema(table)
+        return self._latest(("control", table), v, lambda: {
+            r[schema.names[0]]: r for r in pq.read_table(path, schema=schema).to_pylist()
+        })
 
-    def _control_with(self, snap: _Snapshot, table: str, key: str, value: int) -> DataFrame:
+    def _control_with(self, snap: _Snapshot, table: str, key: str, value: int) -> dict:
         """Control ``table``, which must hold the entity ``key == value``."""
-        cur = self._control(snap, table)
-        if not _has(cur, F.col(key) == value):
+        rows = self._control(snap, table) or {}
+        if value not in rows:
             raise ValueError(f"{key.removesuffix('_id')} {value} not found")
-        return cur
+        return rows
 
-    def _rewrite_control(self, snap: _Snapshot, table: str, df: DataFrame) -> dict:
-        """Write ``df`` as the next immutable version of control ``table``,
-        one file; return the ``control`` pointer update naming it, which
-        the caller commits with its one swap. A failed writer's leftover
-        directory is never named, and the next writer overwrites it."""
+    def _write_control(self, snap: _Snapshot, table: str, rows: dict) -> dict:
+        """Write ``rows`` as the next immutable version of control
+        ``table``, one parquet file; return the ``control`` pointer update
+        naming it, which the caller commits with its one swap. A failed
+        writer's leftover file is never named, and the next writer
+        overwrites it. The single-writer rewrite is legal ONLY for
+        control-plane metadata, whose cardinality is entities, not chunks:
+        a table grown toward data scale fails loudly before anything is
+        written."""
+        if len(rows) > self.MAX_CONTROL_ROWS:
+            raise RuntimeError(
+                f"control table {table} would have {len(rows)} rows "
+                f"(> {self.MAX_CONTROL_ROWS}); single-writer metadata "
+                "rewrite is out of contract at this size"
+            )
         v = snap.control.get(table, 0) + 1
-        df.coalesce(1).write.mode("overwrite").parquet(self._control_path(table, v))
+        path = self._control_path(table, v)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        pq.write_table(pa.Table.from_pylist(list(rows.values()), schema=_arrow_schema(table)), path)
         return {table: v}
 
-    def _append_control(
-        self, snap: _Snapshot, table: str, cur: DataFrame | None, row: DataFrame
-    ) -> dict:
-        """``cur`` plus one created ``row`` as the next version of
-        ``table``. The single-writer rewrite is legal ONLY for control-plane
-        metadata, whose cardinality is entities, not chunks; creates alone
-        grow a table, so here a table grown toward data scale fails loudly
-        before anything is written. The count reads parquet footers only."""
-        if cur is not None:
-            n = cur.count() + 1
-            if n > self.MAX_CONTROL_ROWS:
-                raise RuntimeError(
-                    f"control table {table} would have {n} rows "
-                    f"(> {self.MAX_CONTROL_ROWS}); single-writer metadata "
-                    "rewrite is out of contract at this size"
-                )
-            row = cur.unionByName(row)
-        return self._rewrite_control(snap, table, row)
+    def _listing(self, table: str, rows, key: str) -> DataFrame:
+        """``rows`` of control ``table`` ordered by lower(``key``), as a
+        DataFrame over an Arrow table: a local relation, so its
+        ``collect()`` runs no Spark job."""
+        rows = sorted(rows, key=lambda r: r[key].lower())
+        return self.spark.createDataFrame(pa.Table.from_pylist(rows, schema=_arrow_schema(table)))
 
     # ---- library entities (reference routers/libraries.py) ----------------
 
     def list_libraries(self) -> DataFrame | None:
         libs = self._control(self._snapshot(), "libraries")
-        return None if libs is None else libs.orderBy(F.lower("name"))
+        return None if libs is None else self._listing("libraries", libs.values(), "name")
 
-    def get_library(self, library_id: int):
+    def get_library(self, library_id: int) -> Row:
         """Point lookup (reference GET /libraries/{id},
         library_service.py get_library): the row or a clean not-found."""
-        return _first(
-            self.list_libraries(), F.col("library_id") == library_id,
-            f"library {library_id} not found",
-        )
+        libs = self._control_with(self._snapshot(), "libraries", "library_id", library_id)
+        return _row(libs[library_id])
 
-    def get_library_by_name(self, name: str):
-        """Name lookup, case-insensitive — the uniqueness invariant the
-        create path enforces makes lower(name) a key (reference
+    def get_library_by_name(self, name: str) -> Row:
+        """Name lookup, casefolded — the uniqueness invariant the create
+        path enforces makes the casefolded name a key (reference
         library_service.py get_library_by_name + repository name index)."""
-        return _first(
-            self.list_libraries(), F.lower("name") == name.strip().lower(),
-            f"library named {name!r} not found",
-        )
+        row = _named(self._control(self._snapshot(), "libraries"), name)
+        if row is None:
+            raise ValueError(f"library named {name!r} not found")
+        return _row(row)
 
     def library_exists(self, library_id: int) -> bool:
-        return _has(self.list_libraries(), F.col("library_id") == library_id)
+        return library_id in (self._control(self._snapshot(), "libraries") or {})
 
     def library_name_exists(self, name: str) -> bool:
-        return _has(self.list_libraries(), F.lower("name") == name.strip().lower())
+        return _named(self._control(self._snapshot(), "libraries"), name) is not None
 
-    def get_document(self, document_id: int):
+    def get_document(self, document_id: int) -> Row:
         """Point lookup (reference GET /documents/{id})."""
-        return _first(
-            self.list_documents(), F.col("document_id") == document_id,
-            f"document {document_id} not found",
-        )
+        docs = self._control_with(self._snapshot(), "documents", "document_id", document_id)
+        return _row(docs[document_id])
 
     def create_library(
         self,
@@ -919,7 +931,7 @@ class VectorStore:
         description: str = "",
         metadata: dict | None = None,
     ) -> None:
-        """Create with case-insensitive name uniqueness (reference
+        """Create with casefolded name uniqueness (reference
         ``library_repository.py:18-19``, ``36-39``: casefolded unique
         index; duplicate → error). ``metadata`` is the closed
         LibraryMetadata schema (entities.py:57-72) stored as a typed
@@ -929,56 +941,47 @@ class VectorStore:
         if len(name) > 255:
             raise ValueError("library name too long")  # config.py:53-54
         snap = self._snapshot()
-        cur = self._control(snap, "libraries")
-        row = self.spark.createDataFrame(
-            [(library_id, name.strip(), description)],
-            "library_id long, name string, description string",
-        ).withColumn("metadata", metadata_lit(LIBRARY_METADATA_FIELDS, metadata, LIBRARY_METADATA_BOUNDS))
-        if _has(cur, (F.lower("name") == name.strip().lower())
-                | (F.col("library_id") == library_id)):
+        libs = self._control(snap, "libraries") or {}
+        meta = metadata_values(LIBRARY_METADATA_FIELDS, metadata, LIBRARY_METADATA_BOUNDS)
+        if library_id in libs or _named(libs, name) is not None:
             raise ValueError(f"library name/id already exists: {name!r}")
-        self._swap_pointer(control=self._append_control(snap, "libraries", cur, row))
+        libs = {**libs, library_id: {"library_id": library_id, "name": name.strip(),
+                                     "description": description, "metadata": meta}}
+        self._swap_pointer(control=self._write_control(snap, "libraries", libs))
 
     def update_library(
         self, library_id: int, name: str | None = None, description: str | None = None
     ) -> None:
         """Copy-on-write update (reference ``entities.py:114-135``: updates
         return new instances; ``routers/libraries.py`` PATCH). Name keeps
-        the case-insensitive uniqueness invariant against OTHER libraries."""
+        the casefolded uniqueness invariant against OTHER libraries."""
         snap = self._snapshot()
-        cur = self._control_with(snap, "libraries", "library_id", library_id)
+        libs = self._control_with(snap, "libraries", "library_id", library_id)
+        changes = {}
         if name is not None:
             if not name.strip():
                 raise ValueError("library name must be non-empty")
             if len(name) > 255:
                 raise ValueError("library name too long")
-            if _has(cur, (F.lower("name") == name.strip().lower())
-                    & (F.col("library_id") != library_id)):
+            other = _named(libs, name)
+            if other is not None and other["library_id"] != library_id:
                 raise ValueError(f"library name already exists: {name!r}")
-        hit = F.col("library_id") == library_id
-        df = cur
-        if name is not None:
-            df = df.withColumn(
-                "name", F.when(hit, F.lit(name.strip())).otherwise(F.col("name"))
-            )
+            changes["name"] = name.strip()
         if description is not None:
-            df = df.withColumn(
-                "description",
-                F.when(hit, F.lit(description)).otherwise(F.col("description")),
-            )
-        self._swap_pointer(control=self._rewrite_control(snap, "libraries", df))
+            changes["description"] = description
+        libs = {**libs, library_id: {**libs[library_id], **changes}}
+        self._swap_pointer(control=self._write_control(snap, "libraries", libs))
 
     # ---- document entities (reference routers/documents.py) ---------------
 
     def list_documents(self, library_id: int | None = None) -> DataFrame | None:
         """Documents ordered by lower(title) (reference
         ``document_repository.py:24-27``)."""
-        df = self._control(self._snapshot(), "documents")
-        if df is None:
+        docs = self._control(self._snapshot(), "documents")
+        if docs is None:
             return None
-        if library_id is not None:
-            df = df.filter(F.col("library_id") == library_id)
-        return df.orderBy(F.lower("title"))
+        mine = [r for r in docs.values() if library_id is None or r["library_id"] == library_id]
+        return self._listing("documents", mine, "title")
 
     def create_document(
         self,
@@ -997,14 +1000,13 @@ class VectorStore:
             raise ValueError("document title too long")
         snap = self._snapshot()
         self._control_with(snap, "libraries", "library_id", library_id)
-        row = self.spark.createDataFrame(
-            [(document_id, library_id, title.strip())],
-            "document_id long, library_id long, title string",
-        ).withColumn("metadata", metadata_lit(DOCUMENT_METADATA_FIELDS, metadata, DOCUMENT_METADATA_BOUNDS))
-        cur = self._control(snap, "documents")
-        if _has(cur, F.col("document_id") == document_id):
+        meta = metadata_values(DOCUMENT_METADATA_FIELDS, metadata, DOCUMENT_METADATA_BOUNDS)
+        docs = self._control(snap, "documents") or {}
+        if document_id in docs:
             raise ValueError(f"document {document_id} already exists")
-        self._swap_pointer(control=self._append_control(snap, "documents", cur, row))
+        docs = {**docs, document_id: {"document_id": document_id, "library_id": library_id,
+                                      "title": title.strip(), "metadata": meta}}
+        self._swap_pointer(control=self._write_control(snap, "documents", docs))
 
     def update_document(self, document_id: int, title: str) -> None:
         """Copy-on-write title update (reference ``entities.py:177-199``,
@@ -1014,14 +1016,9 @@ class VectorStore:
         if len(title) > 255:
             raise ValueError("document title too long")
         snap = self._snapshot()
-        cur = self._control_with(snap, "documents", "document_id", document_id)
-        df = cur.withColumn(
-            "title",
-            F.when(
-                F.col("document_id") == document_id, F.lit(title.strip())
-            ).otherwise(F.col("title")),
-        )
-        self._swap_pointer(control=self._rewrite_control(snap, "documents", df))
+        docs = self._control_with(snap, "documents", "document_id", document_id)
+        docs = {**docs, document_id: {**docs[document_id], "title": title.strip()}}
+        self._swap_pointer(control=self._write_control(snap, "documents", docs))
 
     def delete_document(self, document_id: int) -> None:
         """Cascade: drop the document row and its chunks (reference
@@ -1040,11 +1037,10 @@ class VectorStore:
         tombstone its chunks: both, with the ``pointer`` updates, in one
         commit."""
         snap = self._snapshot()
-        hit = F.col(key) == value
-        cur = self._control_with(snap, table, key, value)
-        control = self._rewrite_control(snap, table, cur.filter(~hit))
+        rows = self._control_with(snap, table, key, value)
+        control = self._write_control(snap, table, {k: r for k, r in rows.items() if k != value})
         chunks = self.read_chunks(snap.chunks)
         if chunks is None:
             self._swap_pointer(control=control, **pointer)
         else:
-            self._tombstone(snap, chunks.filter(hit), control=control, **pointer)
+            self._tombstone(snap, chunks.filter(F.col(key) == value), control=control, **pointer)

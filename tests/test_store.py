@@ -136,19 +136,22 @@ def test_select_algorithm_heuristic():
 def test_library_crud_and_cascade(spark, store):
     store.create_library(1, "Research Papers")
     store.create_library(2, "Notes")
-    with pytest.raises(ValueError, match="exists"):
-        store.create_library(3, "research papers")  # case-insensitive clash
+    store.create_library(5, "Straße")
+    for clash in ("research papers", "STRASSE"):  # casefolded clash
+        with pytest.raises(ValueError, match="exists"):
+            store.create_library(3, clash)
     with pytest.raises(ValueError, match="non-empty"):
         store.create_library(4, "   ")
     assert [r["name"] for r in store.list_libraries().collect()] == [
         "Notes",
         "Research Papers",
+        "Straße",
     ]
 
     store.ingest_chunks(_chunk_rows(spark, 20, library_id=1))
     store.ingest_chunks(_chunk_rows(spark, 20, library_id=2))
     store.delete_library(1)
-    assert [r["name"] for r in store.list_libraries().collect()] == ["Notes"]
+    assert [r["name"] for r in store.list_libraries().collect()] == ["Notes", "Straße"]
     assert store.read_chunks().filter(F.col("library_id") == 1).count() == 0
     assert store.read_chunks().filter(F.col("library_id") == 2).count() == 20
 
@@ -536,9 +539,11 @@ def test_library_document_read_surface(spark, store):
     per the create path's uniqueness invariant) / exists checks, each with
     a clean not-found."""
     store.create_library(1, "My Library", "desc")
+    store.create_library(2, "Straße")
     store.create_document(10, 1, "Doc Title")
     assert store.get_library(1)["name"] == "My Library"
     assert store.get_library_by_name("my library")["library_id"] == 1
+    assert store.get_library_by_name("strasse")["library_id"] == 2  # casefolded
     assert store.library_exists(1) and not store.library_exists(9)
     assert store.library_name_exists("MY LIBRARY")
     assert not store.library_name_exists("other")
@@ -898,14 +903,15 @@ class _Fault(Exception):
 
 
 def test_failed_write_leaves_old_state(spark, store, monkeypatch):
-    """Fail each parquet write, then the pointer replace, of every chunk,
-    index and entity write in turn: a reopened store reads exactly the old
-    state (pointer, rows, libraries, documents, dirty count, rebuild flag,
-    index status), no pointer temp file is left behind, and the store then
-    accepts the same write."""
+    """Fail each parquet write (Spark's and pyarrow's), then the pointer
+    replace, of every chunk, index and entity write in turn: a reopened
+    store reads exactly the old state (pointer, rows, libraries, documents,
+    dirty count, rebuild flag, index status), no pointer temp file is left
+    behind, and the store then accepts the same write."""
     import os
     from functools import reduce
 
+    import pyarrow.parquet as pq
     from pyspark.sql import DataFrame, DataFrameWriter
 
     store.ingest_chunks(_chunk_rows(spark, 40))
@@ -960,6 +966,7 @@ def test_failed_write_leaves_old_state(spark, store, monkeypatch):
             before = state()
             with monkeypatch.context() as m:
                 m.setattr(DataFrameWriter, "parquet", failing(DataFrameWriter.parquet))
+                m.setattr(pq, "write_table", failing(pq.write_table))
                 m.setattr(os, "replace", failing(os.replace))
                 try:
                     write(reopen(), k)
@@ -989,8 +996,8 @@ def test_rebuild_state_reads_run_no_spark_job(spark, store):
 
 def test_library_check_adds_no_search_job(spark, store):
     """A search checks its library against the snapshot's libraries table,
-    whose ids are collected once per table version: once warm, a search
-    with a libraries table runs no more jobs than one without."""
+    read once per table version: once warm, a search with a libraries
+    table runs no more jobs than one without."""
     store.ingest_chunks(_chunk_rows(spark, 40))
     store.build_index(1, algorithm="linear")
 
@@ -1000,7 +1007,7 @@ def test_library_check_adds_no_search_job(spark, store):
     search()
     without, want = _jobs(spark, "search-no-libraries", search)
     store.create_library(1, "lib-one")
-    search()  # warm-up: collects the new table version's ids
+    search()  # warm-up: reads the new table version
     with_table, got = _jobs(spark, "search-libraries", search)
     assert got == want
     assert with_table <= without
@@ -1052,7 +1059,7 @@ def test_pointer_without_control_key(spark, store):
 
 def test_only_latest_control_versions_stay_open(spark, store):
     """Superseded library and document table versions are not kept open:
-    after many entity writes, one table and one id set per kind remain."""
+    after many entity writes, one table per kind remains."""
     store.ingest_chunks(_chunk_rows(spark, 10))
     store.build_index(1, algorithm="linear")
     store.create_library(1, "one")
@@ -1063,6 +1070,97 @@ def test_only_latest_control_versions_stay_open(spark, store):
         assert store.list_documents().count() == k + 1
     control = [key for key in store._opened if isinstance(key, tuple)
                and key[0] in ("control", "library ids")]
-    assert sorted(control) == [("control", "documents"), ("control", "libraries"),
-                               ("library ids",)]
+    assert sorted(control) == [("control", "documents"), ("control", "libraries")]
     assert store._opened[("control", "libraries")][0] == store.versions()["control"]["libraries"]
+
+
+def test_entity_ops_run_no_spark_job(spark, store, monkeypatch):
+    """Libraries and documents live on the driver: on a store without
+    chunks every entity operation runs no Spark job, and a point lookup
+    returns the row its listing collects, nested metadata included. On a
+    store with chunks, a cascade delete runs only its tombstone's jobs."""
+    ops = {
+        "create_library": lambda: store.create_library(
+            1, "one", "first", metadata={"tags": ["a"], "is_public": True}),
+        "create_library 2": lambda: store.create_library(2, "two"),
+        "create_document": lambda: store.create_document(
+            10, 1, "doc", metadata={"word_count": 3}),
+        "create_document 2": lambda: store.create_document(11, 2, "other"),
+        "update_library": lambda: store.update_library(2, name="Two", description="2nd"),
+        "update_document": lambda: store.update_document(10, "Doc"),
+        "get_library": lambda: store.get_library(1),
+        "get_library_by_name": lambda: store.get_library_by_name("TWO"),
+        "get_document": lambda: store.get_document(10),
+        "library_exists": lambda: store.library_exists(1),
+        "library_name_exists": lambda: store.library_name_exists("one"),
+        "list_libraries": lambda: store.list_libraries().collect(),
+        "list_documents": lambda: store.list_documents(1).collect(),
+    }
+    for name, op in ops.items():
+        assert _jobs(spark, f"entity-{name}", op)[0] == 0, name
+    lib = store.get_library(1)
+    assert [r for r in store.list_libraries().collect() if r["library_id"] == 1] == [lib]
+    assert lib["metadata"]["tags"] == ["a"] and lib["metadata"]["is_public"] is True
+    doc = store.get_document(10)
+    assert store.list_documents(1).collect() == [doc]
+    assert doc["metadata"]["word_count"] == 3
+    for name, op in {"delete_document": lambda: store.delete_document(11),
+                     "delete_library": lambda: store.delete_library(2)}.items():
+        assert _jobs(spark, f"entity-{name}", op)[0] == 0, name
+    assert [r["library_id"] for r in store.list_libraries().collect()] == [1]
+
+    store.ingest_chunks(_chunk_rows(spark, 4))
+    tombstone, inner = store._tombstone, []
+
+    def counted(*args, **kwargs):  # the commit's last step: no job follows it
+        n, out = _jobs(spark, "entity-cascade-tombstone", lambda: tombstone(*args, **kwargs))
+        inner.append(n)
+        return out
+
+    monkeypatch.setattr(store, "_tombstone", counted)
+    assert _jobs(spark, "entity-cascade", lambda: store.delete_library(1))[0] == 0
+    assert inner[0] > 0 and store.count_chunks() == 0
+
+
+@pytest.mark.parametrize("write, metadata", [
+    ("library", {"author": 5}),
+    ("library", {"tags": "a"}),
+    ("library", {"is_public": "yes"}),
+    ("document", {"word_count": "x"}),
+    ("document", {"chunk_count": True}),
+    ("document", {"word_count": 2**31}),
+    ("chunk", {"page_number": "1"}),
+    ("chunk", {"confidence": "high"}),
+    ("chunk", {"tags": ["a", 1]}),
+])
+def test_metadata_of_wrong_type_is_a_value_error(spark, store, write, metadata):
+    """A metadata value that is not of its field's declared type is a clean
+    ValueError, before anything is written."""
+    store.create_library(1, "lib")
+    if write == "chunk":
+        store.ingest_chunks(_chunk_rows(spark, 2))
+    before = store.versions()
+    with pytest.raises(ValueError, match="must be of type"):
+        if write == "library":
+            store.create_library(2, "lib2", metadata=metadata)
+        elif write == "document":
+            store.create_document(10, 1, "doc", metadata=metadata)
+        else:
+            store.update_chunk(100001, metadata=metadata)
+    assert store.versions() == before
+
+
+def test_read_index_runs_no_spark_job(spark, store):
+    """A new index version opens with pinned schemas — the schemas and rows
+    an inferring read finds — so no inference job runs."""
+    import os
+
+    store.ingest_chunks(_chunk_rows(spark, 20))
+    v = store.build_index(1, n_clusters=2, algorithm="ivf")
+    n, (idx, cents) = _jobs(spark, "read-index", store.read_index)
+    assert n == 0
+    path = os.path.join(store.root, "index", f"v{v}")
+    for got, inferred in ((idx, spark.read.parquet(path)),
+                          (cents, spark.read.parquet(path + "/_centroids"))):
+        assert got.schema == inferred.schema
+        assert sorted(got.collect()) == sorted(inferred.collect())
