@@ -155,6 +155,19 @@ def fake_embedding(text: Column | str, dim: int) -> Column:
     return F.element_at(F.transform(props, components), 1)
 
 
+def fake_embedding_py(text: str, dim: int) -> list[float]:
+    """:func:`fake_embedding` of one string, computed in Python with no
+    Spark job — for a single query text on the driver. The reference
+    formula itself (``str.strip``/``lower``/``split`` and codepoint sums),
+    which the Column form reproduces value for value."""
+    clean = text.strip().lower()
+    cs, length, words = sum(map(ord, clean)), len(clean), len(clean.split())
+    return [
+        ((cs * (i + 1) + length * (i + 7) + words * (i + 13)) % 1000) / 1000.0 - 0.5
+        for i in range(dim)
+    ]
+
+
 def _char_sum_arrow() -> Column:
     """Arrow-batched char-sum kernel: Σ codepoint(c) per row.
 

@@ -25,10 +25,17 @@ Maps the reference's in-memory machinery to immutable-table conventions
   with empty embeddings at build time.
 - IVF inverted lists (``ivf.py:54-130``) → KMeans centroids +
   ``partitionBy("cluster_id")`` layout; probe filters prune directories.
+- in-memory numpy search (``linear.py:45-61``, ``ivf.py:142-166``) → below
+  a size gate (``DRIVER_SEARCH_MAX_VALUES``), a library's index version is
+  read once with pyarrow and held on the driver; a search probes, scores,
+  ranks and hydrates it in numpy and returns the hits as an Arrow-backed
+  DataFrame, with no Spark job. Above the gate, the same search is a Spark
+  plan.
 
 The store is the serving-side composition of the operators in
-``operators/``; every chunk and index step is a plain DataFrame job that
-would run unchanged on a multi-node cluster.
+``operators/``; every chunk and index step, and every search above the
+gate, is a plain DataFrame job that would run unchanged on a multi-node
+cluster.
 """
 
 from __future__ import annotations
@@ -41,18 +48,21 @@ from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-from stackai_vector_db_spark.functions.vector import fake_embedding
+from stackai_vector_db_spark.functions.vector import fake_embedding, fake_embedding_py
 from stackai_vector_db_spark.operators.ivf import (
     assign_clusters,
     kmeans_centroids,
     local_probes_df,
+    probe_pairs_local,
 )
-from stackai_vector_db_spark.operators.knn import brute_force_topk, local_queries_df
+from stackai_vector_db_spark.operators.knn import ROUND, brute_force_topk, local_queries_df
 
 from stackai_vector_db_spark.plans.metadata import (
     CHUNK_METADATA_BOUNDS,
@@ -91,6 +101,9 @@ _CONTROL_SCHEMAS = {
     "documents": "document_id long, library_id long, title string, "
     f"metadata {DOCUMENT_METADATA_DDL}",
 }
+# A search's result rows, as the Spark plan types them.
+_HITS_SCHEMA = ("qid long, chunk_id long, document_id long, dist double, rank int, "
+                f"text string, metadata {CHUNK_METADATA_DDL}")
 
 DEFAULT_DIM = 16
 REBUILD_THRESHOLD = 0.1  # reference config.py:58
@@ -98,6 +111,12 @@ MAX_KNN_RESULTS = 1000  # reference config.py:49, schemas/search.py:22-27
 MAX_QUERY_TEXT_LEN = 10_000  # reference schemas/search.py:15-19
 MAX_QUERY_EMBED_VALUE = 1e6  # reference schemas/search.py:61-68
 MAX_SIMILARITY_THRESHOLD = 10.0  # reference schemas/chunk.py:43-54
+# A search whose index holds at most this many vector components (the
+# build record's size × dim) runs in numpy on the driver; a larger one
+# runs the Spark plan. The driver path won at every size measured (4k to
+# 400k vectors of dim 64, CHANGES.md), so the cap is set by driver memory:
+# one library's float32 matrix stays under 4 × 2**24 bytes = 64 MiB.
+DRIVER_SEARCH_MAX_VALUES = 2**24
 
 
 def _validate_k(k: int) -> None:
@@ -119,8 +138,9 @@ def _validate_query_text(text: str) -> str:
 
 @cache
 def _arrow_schema(table: str) -> pa.Schema:
-    """Control ``table``'s Arrow schema, parsed once from its DDL."""
-    return to_arrow_schema(StructType.fromDDL(_CONTROL_SCHEMAS[table]))
+    """Control ``table``'s Arrow schema, or the hits' for ``"hits"``,
+    parsed once from its DDL."""
+    return to_arrow_schema(StructType.fromDDL({**_CONTROL_SCHEMAS, "hits": _HITS_SCHEMA}[table]))
 
 
 def _row(d: dict) -> Row:
@@ -134,6 +154,15 @@ def _named(libs: dict | None, name: str) -> dict | None:
     create path keeps unique (reference ``library_repository.py:18-19``)."""
     key = name.strip().casefold()
     return next((r for r in (libs or {}).values() if r["name"].casefold() == key), None)
+
+
+def _require(kind: type, **fields) -> None:
+    """Each of ``fields`` that is not None is a ``kind`` (a bool is no
+    int): a clean ValueError before anything is written, not an Arrow
+    error at the write."""
+    for field, value in fields.items():
+        if value is not None and (not isinstance(value, kind) or isinstance(value, bool)):
+            raise ValueError(f"{field} must be of type {kind.__name__}, got {value!r}")
 
 
 def _plus(counts: dict, delta: dict, sign: int = 1) -> dict:
@@ -154,6 +183,16 @@ class _Snapshot(NamedTuple):
     control: dict  # {"libraries": n, "documents": m}; missing or 0: no table
 
 
+class _LocalIndex(NamedTuple):
+    """One library's rows of one index version, held on the driver."""
+
+    ids: np.ndarray  # chunk_id, int64
+    mat: np.ndarray  # embeddings, float32, rows × dim
+    cluster: np.ndarray  # cluster_id, int32
+    threshold: np.ndarray  # similarity_threshold as float64; null → inf
+    payload: pa.Table  # document_id, text, metadata, in the hits' types
+
+
 class VectorStore:
     """Chunks, index and control tables carry independent versions behind
     one pointer file, ``{"chunks": N, "index": M, "libraries": {"<lib>":
@@ -171,9 +210,9 @@ class VectorStore:
         self.spark = spark
         self.root = root
         self.dim = dim
-        # Opened immutable paths (index DataFrames, centroid rows, delete
-        # files), each named by a committed pointer — see _open; and the
-        # latest read version of each control table — see _latest.
+        # The newest version read of each control table, and per library
+        # of its index (DataFrames, centroid rows, driver copy) and dead-id
+        # mask — see _latest.
         self._opened: dict = {}
         os.makedirs(os.path.join(root, "_meta"), exist_ok=True)
 
@@ -227,24 +266,17 @@ class VectorStore:
         return _Snapshot(vs["chunks"], manifest, index, record, dead, vs["dirty"],
                          vs.get("control", {}))
 
-    def _open(self, path: str | tuple, load):
-        """``load()`` once per immutable path: only paths a committed
-        pointer names, as the next writer may rewrite uncommitted ones.
-        Concurrent first callers may both load; setdefault hands all of
-        them the first stored result."""
-        got = self._opened.get(path)
-        if got is None:
-            got = self._opened.setdefault(path, load())
-        return got
-
-    def _latest(self, key: tuple, version: int, load):
+    def _latest(self, key: tuple, version, load):
         """``load()`` once per committed ``version`` of ``key``, holding
-        only the newest version loaded: a superseded control table version
-        is never read again through the pointer, so it is not kept."""
-        got = self._opened.get(key, (0, None))
-        if got[0] != version:
+        only the newest version loaded: a superseded version is read again
+        only by a pinned search, so it is not kept. Only files a committed
+        pointer names are loaded, as the next writer may rewrite
+        uncommitted ones; concurrent first callers may both load."""
+        got = self._opened.get(key)
+        if got is None or got[0] != version:
             got = (version, load())
-            if version > self._opened.get(key, (0,))[0]:
+            held = self._opened.get(key)
+            if held is None or version > held[0]:
                 self._opened[key] = got
         return got[1]
 
@@ -684,7 +716,7 @@ class VectorStore:
             raise ValueError(f"index not built (version {snap.index})")
         path = self._index_path(snap.index)
         read = self.spark.read.schema
-        return self._open(path, lambda: (
+        return self._latest(("index df", snap.record["library_id"]), snap.index, lambda: (
             read(CHUNK_SCHEMA + ", cluster_id int").parquet(path),
             read("cluster_id int, centroid array<double>").parquet(path + "/_centroids"),
         ))
@@ -699,19 +731,14 @@ class VectorStore:
         nprobe: int = 2,
         version: int | None = None,
     ) -> DataFrame:
-        """Embed query text (F3) on the driver, then :meth:`search_vector`'s
-        plan. Passing ``version`` pins a snapshot (reads are stable while a
-        new build runs)."""
+        """Embed query text (F3) in Python on the driver, then
+        :meth:`search_vector`'s search. Passing ``version`` pins a snapshot
+        (reads are stable while a new build runs)."""
         _validate_k(k)
         text = _validate_query_text(text)
         snap = self._snapshot(library_id, version)
         self._check_library_exists(snap, library_id)
-        # One-row SQL relation, not createDataFrame: a pickled-rows
-        # ExistingRDD runs a Python-worker job (see knn.local_queries_df).
-        q = self.spark.sql("SELECT :t AS qtext", args={"t": text}).select(
-            fake_embedding(F.col("qtext"), self.dim).cast("array<float>")
-        )
-        return self._search(snap, library_id, q.collect()[0][0], k, nprobe)
+        return self._search(snap, library_id, fake_embedding_py(text, self.dim), k, nprobe)
 
     def _check_library_exists(self, snap: _Snapshot, library_id: int) -> None:
         """Reference LibraryNotFoundError (search_service.py: a query names
@@ -783,13 +810,10 @@ class VectorStore:
     def _search(
         self, snap: _Snapshot, library_id: int, vector: list[float], k: int, nprobe: int
     ) -> DataFrame:
-        """The one search plan, over ``snap``'s index: probe → top-k →
-        hydrate, skipping the snapshot's tombstones."""
-        # LocalRelation query vector + driver-side probe selection over the
-        # stored centroid table (value-identical to probe_clusters, see
-        # operators/ivf.probe_pairs_local): no ExistingRDD broadcast job and
-        # no probe-window exchange per search.
-        #
+        """The one search, over ``snap``'s index: probe → top-k → hydrate,
+        skipping the snapshot's tombstones. An index of at most
+        ``DRIVER_SEARCH_MAX_VALUES`` vector components is searched on the
+        driver (:meth:`_search_local`), a larger one by a Spark plan."""
         # Round-trip the query through float32 FIRST: candidate scoring via
         # local_queries_df casts to array<float>, so probe selection must
         # see the same float32-quantized values — a raw float64 component
@@ -797,25 +821,91 @@ class VectorStore:
         # truncation ~0.06 ≫ the 0.5e-6 round-6 granularity) could
         # otherwise pick a different cluster than the scoring space would.
         qpair = (0, [float(x) for x in np.asarray(vector, dtype=np.float32)])
-        q = local_queries_df(self.spark, [qpair])
         idx, cents = self._open_index(snap)
+        rows = self._latest(("centroids", library_id), snap.index, cents.collect)
+        if snap.record["size"] * self.dim <= DRIVER_SEARCH_MAX_VALUES:
+            return self._search_local(snap, library_id, qpair, rows, k, nprobe)
+        # LocalRelation query vector + driver-side probe selection over the
+        # stored centroid table (value-identical to probe_clusters, see
+        # operators/ivf.probe_pairs_local): no ExistingRDD broadcast job and
+        # no probe-window exchange per search.
+        q = local_queries_df(self.spark, [qpair])
         idx = idx.filter(F.col("library_id") == library_id)
-        rows = self._open(self._index_path(snap.index) + "/_centroids", cents.collect)
         probes = local_probes_df(self.spark, [qpair], cents, rows, nprobe)
         cand = idx.join(
             F.broadcast(probes.select("cluster_id").distinct()), "cluster_id"
         )
         if snap.dead:
             # Tombstone files are tiny → broadcast anti-join, no index rewrite.
-            dead = reduce(DataFrame.unionByName, (
-                self._open(p, lambda p=p: self.spark.read.schema("chunk_id long").parquet(p))
-                for p in snap.dead
+            dead = self._latest(("dead df", library_id), (snap.index, snap.chunks), lambda: reduce(
+                DataFrame.unionByName,
+                (self.spark.read.schema("chunk_id long").parquet(p) for p in snap.dead),
             ))
             cand = cand.join(F.broadcast(dead), "chunk_id", "left_anti")
         hits = brute_force_topk(
             q, cand, k, id_col="chunk_id", vec_col="embedding"
         ).withColumnRenamed("vec_id", "chunk_id")
         return self._hydrate_and_threshold(hits, idx)
+
+    def _search_local(
+        self, snap: _Snapshot, library_id: int, qpair: tuple, centroid_rows, k: int,
+        nprobe: int,
+    ) -> DataFrame:
+        """:meth:`_search` in numpy, over the library's index rows held on
+        the driver, in the Spark plan's order: probes by probe_pairs_local,
+        float64 difference-form distances rounded to ROUND, rank by (dist,
+        chunk_id), then the threshold filter, which leaves a gap in rank
+        where it drops a hit. The hits come back as a DataFrame over an
+        Arrow table, whose ``collect()`` runs no Spark job."""
+        ix = self._latest(("index", library_id), snap.index,
+                          lambda: self._load_local(snap.index, library_id))
+        probes = [c for _, c in probe_pairs_local([qpair], centroid_rows, nprobe)]
+        live = np.isin(ix.cluster, probes)
+        if snap.dead:
+            live &= ~self._latest(("dead", library_id), (snap.index, snap.chunks), lambda: np.isin(
+                ix.ids,
+                np.concatenate([pq.read_table(p, columns=["chunk_id"])["chunk_id"].to_numpy()
+                                for p in snap.dead]),
+            ))
+        cand = np.flatnonzero(live)
+        diff = ix.mat[cand] - np.asarray(qpair[1])
+        dist = np.round(np.sqrt((diff * diff).sum(axis=1)), ROUND)
+        top = np.lexsort((ix.ids[cand], dist))[:k]
+        keep = dist[top] <= ix.threshold[cand[top]]
+        hit = cand[top][keep]
+        payload = ix.payload.take(hit)
+        return self.spark.createDataFrame(pa.table({
+            "qid": np.zeros(len(hit), np.int64),
+            "chunk_id": ix.ids[hit],
+            "document_id": payload["document_id"],
+            "dist": dist[top][keep],
+            "rank": np.flatnonzero(keep).astype(np.int32) + 1,
+            "text": payload["text"],
+            "metadata": payload["metadata"],
+        }, schema=_arrow_schema("hits")))
+
+    def _load_local(self, version: int, library_id: int) -> _LocalIndex:
+        """Library ``library_id``'s rows of index ``version``, read with
+        pyarrow: no Spark job."""
+        t = ds.dataset(
+            self._index_path(version), format="parquet",
+            partitioning=ds.partitioning(pa.schema([("cluster_id", pa.int32())]), flavor="hive"),
+        ).to_table(
+            columns=["chunk_id", "embedding", "cluster_id", "similarity_threshold",
+                     "document_id", "text", "metadata"],
+            filter=ds.field("library_id") == library_id,
+        )
+        emb = pc.list_flatten(t["embedding"]).to_numpy()
+        if len(emb) != t.num_rows * self.dim:
+            raise ValueError(f"index v{version} holds embeddings whose dim is not {self.dim}")
+        hits = _arrow_schema("hits")
+        return _LocalIndex(
+            t["chunk_id"].to_numpy(),
+            emb.reshape(-1, self.dim),
+            t["cluster_id"].to_numpy(),
+            pc.fill_null(t["similarity_threshold"], np.inf).to_numpy().astype(np.float64),
+            pa.table({c: t[c].cast(hits.field(c).type) for c in ("document_id", "text", "metadata")}),
+        )
 
     def index_status(self, library_id: int) -> dict:
         """IndexStatus analog (reference ``index_service.py:285-302``):
@@ -936,6 +1026,8 @@ class VectorStore:
         index; duplicate → error). ``metadata`` is the closed
         LibraryMetadata schema (entities.py:57-72) stored as a typed
         struct column; unknown keys raise."""
+        _require(int, library_id=library_id)
+        _require(str, name=name, description=description)
         if not name.strip():
             raise ValueError("library name must be non-empty")
         if len(name) > 255:
@@ -955,6 +1047,8 @@ class VectorStore:
         """Copy-on-write update (reference ``entities.py:114-135``: updates
         return new instances; ``routers/libraries.py`` PATCH). Name keeps
         the casefolded uniqueness invariant against OTHER libraries."""
+        _require(int, library_id=library_id)
+        _require(str, name=name, description=description)
         snap = self._snapshot()
         libs = self._control_with(snap, "libraries", "library_id", library_id)
         changes = {}
@@ -994,6 +1088,8 @@ class VectorStore:
         ``document_service.py:64-65``); title non-empty, ≤ 255.
         ``metadata`` is the closed DocumentMetadata schema
         (entities.py:20-36) stored as a typed struct column."""
+        _require(int, document_id=document_id, library_id=library_id)
+        _require(str, title=title)
         if not title.strip():
             raise ValueError("document title must be non-empty")
         if len(title) > 255:
@@ -1011,6 +1107,8 @@ class VectorStore:
     def update_document(self, document_id: int, title: str) -> None:
         """Copy-on-write title update (reference ``entities.py:177-199``,
         ``routers/documents.py`` PATCH); same title invariants as create."""
+        _require(int, document_id=document_id)
+        _require(str, title=title)
         if not title.strip():
             raise ValueError("document title must be non-empty")
         if len(title) > 255:
@@ -1026,19 +1124,24 @@ class VectorStore:
         self._delete_entity("documents", "document_id", document_id)
 
     def delete_library(self, library_id: int) -> None:
-        """Cascade: drop the library row and its chunks, and reset its
-        dirty count (reference ``library_service.py:67-77``)."""
+        """Cascade: drop the library row, its documents and its chunks, and
+        reset its dirty count (reference ``library_service.py:67-77``)."""
         self._delete_entity(
             "libraries", "library_id", library_id, dirty={str(library_id): 0}
         )
 
     def _delete_entity(self, table: str, key: str, value: int, **pointer) -> None:
-        """Drop the entity ``key == value`` from control ``table`` and
-        tombstone its chunks: both, with the ``pointer`` updates, in one
-        commit."""
+        """Drop the entity ``key == value`` of control ``table``, the rows
+        of every control table with ``key == value`` and its chunks: all,
+        with the ``pointer`` updates, in one commit."""
         snap = self._snapshot()
-        rows = self._control_with(snap, table, key, value)
-        control = self._write_control(snap, table, {k: r for k, r in rows.items() if k != value})
+        self._control_with(snap, table, key, value)
+        control = {}
+        for name in _CONTROL_SCHEMAS:
+            rows = self._control(snap, name) or {}
+            kept = {k: r for k, r in rows.items() if r.get(key) != value}
+            if len(kept) < len(rows):
+                control.update(self._write_control(snap, name, kept))
         chunks = self.read_chunks(snap.chunks)
         if chunks is None:
             self._swap_pointer(control=control, **pointer)

@@ -11,6 +11,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from stackai_vector_db_spark.plans import store as store_mod
+from stackai_vector_db_spark.plans.metadata import CHUNK_METADATA_DDL, CHUNK_METADATA_FIELDS
 from stackai_vector_db_spark.plans.store import VectorStore
 
 
@@ -137,6 +139,8 @@ def test_library_crud_and_cascade(spark, store):
     store.create_library(1, "Research Papers")
     store.create_library(2, "Notes")
     store.create_library(5, "Straße")
+    store.create_document(10, 1, "paper")
+    store.create_document(20, 2, "note")
     for clash in ("research papers", "STRASSE"):  # casefolded clash
         with pytest.raises(ValueError, match="exists"):
             store.create_library(3, clash)
@@ -152,6 +156,10 @@ def test_library_crud_and_cascade(spark, store):
     store.ingest_chunks(_chunk_rows(spark, 20, library_id=2))
     store.delete_library(1)
     assert [r["name"] for r in store.list_libraries().collect()] == ["Notes", "Straße"]
+    # the cascade drops the library's documents too (library_service.py:67-77)
+    with pytest.raises(ValueError, match="document 10 not found"):
+        store.get_document(10)
+    assert [r["document_id"] for r in store.list_documents().collect()] == [20]
     assert store.read_chunks().filter(F.col("library_id") == 1).count() == 0
     assert store.read_chunks().filter(F.col("library_id") == 2).count() == 20
 
@@ -916,15 +924,16 @@ def test_failed_write_leaves_old_state(spark, store, monkeypatch):
 
     store.ingest_chunks(_chunk_rows(spark, 40))
     store.build_index(1, algorithm="linear")
-    # Libraries 21.. hold two chunks each; library 2 holds documents 31..
-    # and 41.., the latter with one chunk each.
+    # Libraries 21.. hold two chunks and one document (51..) each; library
+    # 2 holds documents 31.. and 41.., the latter with one chunk each.
     store.ingest_chunks(reduce(DataFrame.unionByName, [
-        *(_chunk_rows(spark, 2, library_id=20 + k) for k in range(1, 5)),
-        *(_chunk_rows(spark, 1, library_id=2, start_doc=40 + k) for k in range(1, 5)),
+        *(_chunk_rows(spark, 2, library_id=20 + k) for k in range(1, 6)),
+        *(_chunk_rows(spark, 1, library_id=2, start_doc=40 + k) for k in range(1, 6)),
     ]))
     store.create_library(2, "documents")
-    for k in range(1, 5):
+    for k in range(1, 6):
         store.create_library(20 + k, f"doomed {k}")
+        store.create_document(50 + k, 20 + k, f"cascaded {k}")
         store.create_document(30 + k, 2, f"title {k}")
         store.create_document(40 + k, 2, f"doomed {k}")
     meta = os.path.join(store.root, "_meta")
@@ -1164,3 +1173,162 @@ def test_read_index_runs_no_spark_job(spark, store):
                           (cents, spark.read.parquet(path + "/_centroids"))):
         assert got.schema == inferred.schema
         assert sorted(got.collect()) == sorted(inferred.collect())
+
+
+@pytest.mark.parametrize("method, args, kwargs", [
+    ("create_library", (2, "x"), {"description": 5}),
+    ("create_library", ("3", "y"), {}),
+    ("create_library", (True, "z"), {}),
+    ("create_library", (4, 4), {}),
+    ("update_library", (1,), {"name": 5}),
+    ("update_library", ("1",), {"description": "d"}),
+    ("create_document", (10, 1, 7), {}),
+    ("create_document", (10.0, 1, "t"), {}),
+    ("create_document", (10, "1", "t"), {}),
+    ("update_document", (11, b"t"), {}),
+    ("update_document", (True, "t"), {}),
+])
+def test_scalar_field_of_wrong_type_is_a_value_error(spark, store, method, args, kwargs):
+    """Ids are ints (not bools); names, titles and descriptions are
+    strings: anything else is a clean ValueError, before anything is
+    written."""
+    store.create_library(1, "lib")
+    store.create_document(11, 1, "doc")
+    before = store.versions()
+    with pytest.raises(ValueError, match="must be of type"):
+        getattr(store, method)(*args, **kwargs)
+    assert store.versions() == before
+
+
+# ---- the driver search path and the Spark plan -------------------------------
+
+
+def _on_spark_path(monkeypatch):
+    """Send every search of any size to the Spark plan."""
+    monkeypatch.setattr(store_mod, "DRIVER_SEARCH_MAX_VALUES", 0)
+
+
+def _hits(df):
+    return sorted((r.asDict(recursive=True) for r in df.collect()),
+                  key=lambda r: (r["rank"], r["chunk_id"]))
+
+
+@pytest.mark.parametrize("test", [
+    test_search_skips_tombstones_without_rebuild,
+    test_similarity_threshold_post_filter,
+    test_search_scoped_to_library,
+    test_pinned_version_skips_later_deletes,
+    test_parallel_readers_during_rebuild,
+], ids=lambda t: t.__name__)
+def test_search_on_the_spark_path(spark, store, monkeypatch, test):
+    """The search tests above run below the size gate, on the driver; each
+    runs here again on the Spark plan."""
+    _on_spark_path(monkeypatch)
+    test(spark, store)
+
+
+def test_driver_and_spark_paths_return_the_same_hits(spark, store, monkeypatch):
+    """Below the gate a search runs in numpy on the driver, above it as a
+    Spark plan: both return the same dtypes and the same rows, nested
+    metadata included — on IVF and linear indexes, with tombstones newer
+    than the build, thresholds (one dropping a middle-ranked hit), ties on
+    id between duplicate vectors, k past the candidate count, a pinned
+    version, and an empty result where every probed row is deleted."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    vecs = rng.standard_normal((48, 16)).astype(np.float32)
+    vecs[3] = vecs[2] + np.float32(0.01)  # rank 3 of a search at chunk 2
+    blank = {n: None for n, _ in CHUNK_METADATA_FIELDS}
+    rows = []
+    for i, v in enumerate(vecs):
+        thr = 0.0 if i % 7 == 3 else 9.9 if i % 7 == 5 else None
+        meta = {**blank, "chunk_type": "p", "page_number": i + 1, "tags": ["t", str(i)]}
+        rows.append((i, i // 4, 1, f"chunk {i}", v.tolist(), thr, meta if i % 2 else None))
+    for j in range(6):  # duplicates of chunks 0..5 under other ids
+        rows.append((100 + j, 50, 1, f"copy {j}", vecs[j].tolist(), None, None))
+    for i in range(12):
+        v = rng.standard_normal(16).astype(np.float32)
+        rows.append((200 + i, 60 + i // 3, 2, f"other {i}", v.tolist(), None, None))
+    for i in range(3):
+        rows.append((300 + i, 70, 3, f"gone {i}", vecs[i].tolist(), None, None))
+    store.ingest_chunks(spark.createDataFrame(
+        [(c, d, lib, t, e, 0, None, thr, m) for c, d, lib, t, e, thr, m in rows],
+        "chunk_id long, document_id long, library_id long, text string, "
+        "embedding array<float>, start_index int, end_index int, "
+        f"similarity_threshold float, metadata {CHUNK_METADATA_DDL}",
+    ))
+    pinned = store.build_index(1, algorithm="ivf", n_clusters=4)
+    store.build_index(2, algorithm="linear")
+    store.build_index(3, algorithm="linear")
+    store.delete_chunk(1)
+    store.delete_documents(spark.createDataFrame([(2,), (70,)], "document_id long"))
+    store.build_index(1, algorithm="ivf", n_clusters=4)
+    store.delete_chunk(7)
+    store.delete_chunk(203)
+
+    q = rng.standard_normal(16).astype(np.float32).tolist()
+    searches = {
+        "tie on id, middle hit dropped": lambda: store.search_vector(1, vecs[2].tolist(), k=10, nprobe=4),
+        "one probe": lambda: store.search_vector(1, q, k=10, nprobe=1),
+        "k past the candidates": lambda: store.search_vector(1, q, k=1000, nprobe=2),
+        "pinned version": lambda: store.search_vector(1, vecs[0].tolist(), k=20, nprobe=4, version=pinned),
+        "text": lambda: store.search_text(1, "chunk 5", k=10, nprobe=2),
+        "linear": lambda: store.search_vector(2, q, k=1000),
+        "all deleted": lambda: store.search_vector(3, vecs[0].tolist(), k=5),
+    }
+    for name, search in searches.items():
+        driver = search()
+        with monkeypatch.context() as m:
+            _on_spark_path(m)
+            plan = search()
+        assert driver.dtypes == plan.dtypes, name
+        assert _hits(driver) == _hits(plan), name
+    hits = _hits(searches["tie on id, middle hit dropped"]())
+    assert [(h["chunk_id"], h["rank"]) for h in hits[:3]] == [(2, 1), (102, 2), (103, 4)]
+    assert any(h["metadata"] and h["metadata"]["tags"] == ["t", str(h["chunk_id"])] for h in hits)
+    assert len(_hits(searches["linear"]())) == 11
+    assert _hits(searches["all deleted"]()) == []
+    assert not {1, 7, 8, 9, 10, 11} & {h["chunk_id"] for h in _hits(searches["pinned version"]())}
+
+
+def test_warm_search_runs_no_spark_job(spark, store):
+    """Once its index version is open, a search below the gate runs no
+    Spark job — vector or text, with tombstones and a libraries table —
+    and still returns a DataFrame."""
+    from pyspark.sql import DataFrame
+
+    store.ingest_chunks(_chunk_rows(spark, 40))
+    store.build_index(1, algorithm="ivf", n_clusters=4)
+    store.delete_chunk(100003)
+    store.create_library(1, "lib-one")
+    text = "chunk text number 7 for library 1 with words"
+    vec = list(store.get_chunk(100007)["embedding"])
+    store.search_vector(1, vec, k=5).collect()  # opens the index version
+    for name, search in {"vector": lambda: store.search_vector(1, vec, k=5),
+                         "text": lambda: store.search_text(1, text, k=5)}.items():
+        n, df = _jobs(spark, f"warm-search-{name}", lambda: search())
+        m, hits = _jobs(spark, f"warm-collect-{name}", lambda: _hits(df))
+        assert isinstance(df, DataFrame)
+        assert (n, m) == (0, 0), name
+        assert hits[0]["chunk_id"] == 100007 and hits[0]["dist"] == 0.0
+
+
+@pytest.mark.parametrize("path", ["driver", "spark"])
+def test_only_latest_index_versions_stay_open(spark, store, monkeypatch, path):
+    """A library's index, centroids and dead-id mask stay open for its
+    newest build only: after three builds with a search after each, then a
+    delete and a search, one entry of each kind remains."""
+    if path == "spark":
+        _on_spark_path(monkeypatch)
+    store.ingest_chunks(_chunk_rows(spark, 20))
+    for _ in range(3):
+        v = store.build_index(1, algorithm="linear")
+        store.search_vector(1, [0.1] * 16, k=3).collect()
+    store.delete_chunk(100003)
+    store.search_vector(1, [0.1] * 16, k=3).collect()
+    kinds = {"driver": ["centroids", "dead", "index", "index df"],
+             "spark": ["centroids", "dead df", "index df"]}[path]
+    assert sorted(store._opened) == [(kind, 1) for kind in kinds]
+    now = (v, store.versions()["chunks"])
+    assert all(store._opened[key][0] in (v, now) for key in store._opened)

@@ -111,3 +111,17 @@ def test_fake_embedding_arrow_parity(spark):
         "doc_id", F.col("emb").alias("emb2")
     )
     assert a.join(b, "doc_id").filter(F.expr("emb <> emb2")).count() == 0
+
+
+def test_fake_embedding_py_equals_the_column_form(spark):
+    """The Python twin a search embeds its query text with returns exactly
+    the Column form's values, over unicode case mapping and whitespace."""
+    from stackai_vector_db_spark.functions.vector import fake_embedding_py
+
+    texts = ["Straße", "İstanbul", "ΟΔΟΣ", "λόγος ΚΑΙ ΟΔΟΣ", "中文 混合 text", "emoji 😀 end",
+             "　 padded \x85", "\x85　 \t", "", "Hello   World", "a\xa0b"]
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    got = df.select("text", fake_embedding(F.col("text"), 16).alias("e")).collect()
+    assert len(got) == len(texts)
+    for r in got:
+        assert fake_embedding_py(r["text"], 16) == list(r["e"]), repr(r["text"])
