@@ -27,10 +27,10 @@ Maps the reference's in-memory machinery to immutable-table conventions
   ``partitionBy("cluster_id")`` layout; probe filters prune directories.
 - in-memory numpy search (``linear.py:45-61``, ``ivf.py:142-166``) → below
   a size gate (``DRIVER_SEARCH_MAX_VALUES``), a library's index version is
-  read once with pyarrow and held on the driver; a search probes, scores,
-  ranks and hydrates it in numpy and returns the hits as an Arrow-backed
-  DataFrame, with no Spark job. Above the gate, the same search is a Spark
-  plan.
+  read once with pyarrow and held on the driver, the copies of all
+  libraries within a byte budget; a search probes, scores, ranks and
+  hydrates it in numpy and returns the hits as an Arrow-backed DataFrame,
+  with no Spark job. Above the gate, the same search is a Spark plan.
 
 The store is the serving-side composition of the operators in
 ``operators/``; every chunk and index step, and every search above the
@@ -113,10 +113,17 @@ MAX_QUERY_EMBED_VALUE = 1e6  # reference schemas/search.py:61-68
 MAX_SIMILARITY_THRESHOLD = 10.0  # reference schemas/chunk.py:43-54
 # A search whose index holds at most this many vector components (the
 # build record's size × dim) runs in numpy on the driver; a larger one
-# runs the Spark plan. The driver path won at every size measured (4k to
-# 400k vectors of dim 64, CHANGES.md), so the cap is set by driver memory:
-# one library's float32 matrix stays under 4 × 2**24 bytes = 64 MiB.
+# runs the Spark plan, the only path for an index the driver cannot hold.
+# The value is a driver-memory budget, not a speed crossover: the driver
+# path was faster at every size measured (4k to 400k vectors of dim 64,
+# CHANGES.md), and the driver's out-of-memory point was not measured. One
+# library's float32 matrix stays under 4 × 2**24 bytes = 64 MiB, and the
+# driver copies held across libraries (embeddings, ids and payload) stay
+# under the same 64 MiB, save the copy of the library just searched.
 DRIVER_SEARCH_MAX_VALUES = 2**24
+# Vector components scored per numpy block by a driver search: bounds its
+# float64 temporaries to 16 MiB per block, whatever the library's size.
+_SCORE_BLOCK_VALUES = 2**20
 
 
 def _validate_k(k: int) -> None:
@@ -191,6 +198,8 @@ class _LocalIndex(NamedTuple):
     cluster: np.ndarray  # cluster_id, int32
     threshold: np.ndarray  # similarity_threshold as float64; null → inf
     payload: pa.Table  # document_id, text, metadata, in the hits' types
+    centroids: list  # the build's centroid rows, {"cluster_id", "centroid"}
+    nbytes: int  # of the arrays and the payload, which the cache bounds
 
 
 class VectorStore:
@@ -211,8 +220,8 @@ class VectorStore:
         self.root = root
         self.dim = dim
         # The newest version read of each control table, and per library
-        # of its index (DataFrames, centroid rows, driver copy) and dead-id
-        # mask — see _latest.
+        # of its index (DataFrames and centroid rows, or the driver copy)
+        # and dead ids — see _latest and _driver_copy.
         self._opened: dict = {}
         os.makedirs(os.path.join(root, "_meta"), exist_ok=True)
 
@@ -352,6 +361,9 @@ class VectorStore:
                 "embedding",
                 F.coalesce(F.col("embedding"), F.array().cast("array<float>")),
             )
+            # update_chunk's dim check, per row: an embedding is empty (the
+            # build embeds it) or of the store's dim; other rows are rejected.
+            .filter(F.size("embedding").isin(0, self.dim))
         )
         if compute_embedding:
             validated = validated.withColumn(
@@ -821,10 +833,10 @@ class VectorStore:
         # truncation ~0.06 ≫ the 0.5e-6 round-6 granularity) could
         # otherwise pick a different cluster than the scoring space would.
         qpair = (0, [float(x) for x in np.asarray(vector, dtype=np.float32)])
-        idx, cents = self._open_index(snap)
+        if snap.record is not None and snap.record["size"] * self.dim <= DRIVER_SEARCH_MAX_VALUES:
+            return self._search_local(snap, library_id, qpair, k, nprobe)
+        idx, cents = self._open_index(snap)  # raises if nothing is built
         rows = self._latest(("centroids", library_id), snap.index, cents.collect)
-        if snap.record["size"] * self.dim <= DRIVER_SEARCH_MAX_VALUES:
-            return self._search_local(snap, library_id, qpair, rows, k, nprobe)
         # LocalRelation query vector + driver-side probe selection over the
         # stored centroid table (value-identical to probe_clusters, see
         # operators/ivf.probe_pairs_local): no ExistingRDD broadcast job and
@@ -848,8 +860,7 @@ class VectorStore:
         return self._hydrate_and_threshold(hits, idx)
 
     def _search_local(
-        self, snap: _Snapshot, library_id: int, qpair: tuple, centroid_rows, k: int,
-        nprobe: int,
+        self, snap: _Snapshot, library_id: int, qpair: tuple, k: int, nprobe: int,
     ) -> DataFrame:
         """:meth:`_search` in numpy, over the library's index rows held on
         the driver, in the Spark plan's order: probes by probe_pairs_local,
@@ -857,19 +868,18 @@ class VectorStore:
         chunk_id), then the threshold filter, which leaves a gap in rank
         where it drops a hit. The hits come back as a DataFrame over an
         Arrow table, whose ``collect()`` runs no Spark job."""
-        ix = self._latest(("index", library_id), snap.index,
-                          lambda: self._load_local(snap.index, library_id))
-        probes = [c for _, c in probe_pairs_local([qpair], centroid_rows, nprobe)]
+        ix = self._driver_copy(snap, library_id)
+        probes = [c for _, c in probe_pairs_local([qpair], ix.centroids, nprobe)]
         live = np.isin(ix.cluster, probes)
         if snap.dead:
-            live &= ~self._latest(("dead", library_id), (snap.index, snap.chunks), lambda: np.isin(
-                ix.ids,
-                np.concatenate([pq.read_table(p, columns=["chunk_id"])["chunk_id"].to_numpy()
-                                for p in snap.dead]),
-            ))
+            live &= ~self._dead_mask(snap, library_id, ix)
         cand = np.flatnonzero(live)
-        diff = ix.mat[cand] - np.asarray(qpair[1])
-        dist = np.round(np.sqrt((diff * diff).sum(axis=1)), ROUND)
+        q, step = np.asarray(qpair[1]), max(1, _SCORE_BLOCK_VALUES // self.dim)
+        dist = np.empty(len(cand))
+        for s in range(0, len(cand), step):
+            diff = ix.mat[cand[s:s + step]] - q
+            dist[s:s + step] = np.sqrt((diff * diff).sum(axis=1))
+        dist = np.round(dist, ROUND)
         top = np.lexsort((ix.ids[cand], dist))[:k]
         keep = dist[top] <= ix.threshold[cand[top]]
         hit = cand[top][keep]
@@ -884,28 +894,70 @@ class VectorStore:
             "metadata": payload["metadata"],
         }, schema=_arrow_schema("hits")))
 
+    def _driver_copy(self, snap: _Snapshot, library_id: int) -> _LocalIndex:
+        """The library's copy of ``snap``'s index version, loaded once per
+        version (:meth:`_latest`). Past 4 × DRIVER_SEARCH_MAX_VALUES bytes
+        held across libraries, the copies and dead ids of the least
+        recently searched libraries are dropped, never the copy just
+        searched. Racing searches may drop or load a copy twice; each
+        still uses the copy of its own snapshot."""
+        key = ("index", library_id)
+        ix = self._latest(key, snap.index, lambda: self._load_local(snap.index, library_id))
+        held = self._opened.pop(key, None)
+        if held is not None:
+            self._opened[key] = held  # the most recently searched last
+        copies = [(k, v[1].nbytes) for k, v in list(self._opened.items()) if k[0] == "index"]
+        total = sum(n for _, n in copies)
+        for k, n in copies[:-1]:
+            if total <= 4 * DRIVER_SEARCH_MAX_VALUES:
+                break
+            self._opened.pop(k, None)
+            self._opened.pop(("dead", k[1]), None)
+            total -= n
+        return ix
+
+    def _dead_mask(self, snap: _Snapshot, library_id: int, ix: _LocalIndex) -> np.ndarray:
+        """Which of ``ix``'s rows the snapshot's delete files newer than its
+        build name. Held per library with the files read so far, so a later
+        chunks version reads only the delete files added since."""
+        key = ("dead", library_id)
+        held = self._opened.get(key)
+        if held is None or held[2] is not ix.ids or snap.dead[:len(held[1])] != held[1]:
+            held = (snap.index, (), ix.ids, np.zeros(len(ix.ids), bool))
+        new = snap.dead[len(held[1]):]
+        if new:
+            gone = np.concatenate([pq.read_table(p, columns=["chunk_id"])["chunk_id"].to_numpy()
+                                   for p in new])
+            held = (snap.index, snap.dead, ix.ids, held[3] | np.isin(ix.ids, gone))
+            if self._opened.get(("index", library_id), (0, None))[1] is ix:
+                self._opened[key] = held
+        return held[3]
+
     def _load_local(self, version: int, library_id: int) -> _LocalIndex:
-        """Library ``library_id``'s rows of index ``version``, read with
-        pyarrow: no Spark job."""
+        """Library ``library_id``'s rows of index ``version`` and its
+        centroid rows, read with pyarrow: no Spark job."""
+        path = self._index_path(version)
         t = ds.dataset(
-            self._index_path(version), format="parquet",
+            path, format="parquet",
             partitioning=ds.partitioning(pa.schema([("cluster_id", pa.int32())]), flavor="hive"),
         ).to_table(
             columns=["chunk_id", "embedding", "cluster_id", "similarity_threshold",
                      "document_id", "text", "metadata"],
             filter=ds.field("library_id") == library_id,
         )
-        emb = pc.list_flatten(t["embedding"]).to_numpy()
-        if len(emb) != t.num_rows * self.dim:
+        lengths = pc.fill_null(pc.list_value_length(t["embedding"]), 0)
+        if pc.any(pc.not_equal(lengths, self.dim)).as_py():
             raise ValueError(f"index v{version} holds embeddings whose dim is not {self.dim}")
         hits = _arrow_schema("hits")
-        return _LocalIndex(
+        parts = (
             t["chunk_id"].to_numpy(),
-            emb.reshape(-1, self.dim),
+            pc.list_flatten(t["embedding"]).to_numpy().reshape(-1, self.dim),
             t["cluster_id"].to_numpy(),
             pc.fill_null(t["similarity_threshold"], np.inf).to_numpy().astype(np.float64),
             pa.table({c: t[c].cast(hits.field(c).type) for c in ("document_id", "text", "metadata")}),
         )
+        centroids = pq.read_table(os.path.join(path, "_centroids")).to_pylist()
+        return _LocalIndex(*parts, centroids, sum(p.nbytes for p in parts))
 
     def index_status(self, library_id: int) -> dict:
         """IndexStatus analog (reference ``index_service.py:285-302``):

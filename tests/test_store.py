@@ -4,6 +4,7 @@ trip, dirty lifecycle, cascade delete, snapshot stability during rebuild."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -1233,7 +1234,8 @@ def test_driver_and_spark_paths_return_the_same_hits(spark, store, monkeypatch):
     metadata included — on IVF and linear indexes, with tombstones newer
     than the build, thresholds (one dropping a middle-ranked hit), ties on
     id between duplicate vectors, k past the candidate count, a pinned
-    version, and an empty result where every probed row is deleted."""
+    version, and an empty result where every probed row is deleted. The
+    driver path scores in blocks of rows; small blocks rank the same."""
     import numpy as np
 
     rng = np.random.default_rng(7)
@@ -1282,8 +1284,11 @@ def test_driver_and_spark_paths_return_the_same_hits(spark, store, monkeypatch):
         with monkeypatch.context() as m:
             _on_spark_path(m)
             plan = search()
+        with monkeypatch.context() as m:
+            m.setattr(store_mod, "_SCORE_BLOCK_VALUES", 3 * 16)  # three rows per block
+            blocked = search()
         assert driver.dtypes == plan.dtypes, name
-        assert _hits(driver) == _hits(plan), name
+        assert _hits(driver) == _hits(plan) == _hits(blocked), name
     hits = _hits(searches["tie on id, middle hit dropped"]())
     assert [(h["chunk_id"], h["rank"]) for h in hits[:3]] == [(2, 1), (102, 2), (103, 4)]
     assert any(h["metadata"] and h["metadata"]["tags"] == ["t", str(h["chunk_id"])] for h in hits)
@@ -1293,8 +1298,8 @@ def test_driver_and_spark_paths_return_the_same_hits(spark, store, monkeypatch):
 
 
 def test_warm_search_runs_no_spark_job(spark, store):
-    """Once its index version is open, a search below the gate runs no
-    Spark job — vector or text, with tombstones and a libraries table —
+    """A search below the gate runs no Spark job — vector or text, with
+    tombstones and a libraries table, the first after a build included —
     and still returns a DataFrame."""
     from pyspark.sql import DataFrame
 
@@ -1304,7 +1309,8 @@ def test_warm_search_runs_no_spark_job(spark, store):
     store.create_library(1, "lib-one")
     text = "chunk text number 7 for library 1 with words"
     vec = list(store.get_chunk(100007)["embedding"])
-    store.search_vector(1, vec, k=5).collect()  # opens the index version
+    first, _ = _jobs(spark, "first-search", lambda: _hits(store.search_vector(1, vec, k=5)))
+    assert first == 0  # the index version and its centroids open with pyarrow
     for name, search in {"vector": lambda: store.search_vector(1, vec, k=5),
                          "text": lambda: store.search_text(1, text, k=5)}.items():
         n, df = _jobs(spark, f"warm-search-{name}", lambda: search())
@@ -1316,8 +1322,8 @@ def test_warm_search_runs_no_spark_job(spark, store):
 
 @pytest.mark.parametrize("path", ["driver", "spark"])
 def test_only_latest_index_versions_stay_open(spark, store, monkeypatch, path):
-    """A library's index, centroids and dead-id mask stay open for its
-    newest build only: after three builds with a search after each, then a
+    """A library's index (the driver copy, or the DataFrames and centroid
+    rows) and dead ids stay open for its newest build only: after three builds with a search after each, then a
     delete and a search, one entry of each kind remains."""
     if path == "spark":
         _on_spark_path(monkeypatch)
@@ -1327,8 +1333,77 @@ def test_only_latest_index_versions_stay_open(spark, store, monkeypatch, path):
         store.search_vector(1, [0.1] * 16, k=3).collect()
     store.delete_chunk(100003)
     store.search_vector(1, [0.1] * 16, k=3).collect()
-    kinds = {"driver": ["centroids", "dead", "index", "index df"],
+    kinds = {"driver": ["dead", "index"],
              "spark": ["centroids", "dead df", "index df"]}[path]
     assert sorted(store._opened) == [(kind, 1) for kind in kinds]
     now = (v, store.versions()["chunks"])
     assert all(store._opened[key][0] in (v, now) for key in store._opened)
+
+
+def test_driver_copies_stay_within_the_budget(spark, store, monkeypatch):
+    """The driver copies held across libraries stay within 4 ×
+    DRIVER_SEARCH_MAX_VALUES bytes: past it, the least recently searched
+    library's copy and dead ids are dropped, never the copy just searched."""
+    for lib in (1, 2):
+        store.ingest_chunks(_chunk_rows(spark, 20, library_id=lib))
+        store.build_index(lib, algorithm="linear")
+    store.delete_chunk(100003)
+    store.delete_chunk(200003)
+    vec = list(store.get_chunk(100007)["embedding"])
+
+    def held():
+        return sorted(key for key in store._opened if key[0] in ("index", "dead"))
+
+    want = _hits(store.search_vector(1, vec, k=5))
+    store.search_vector(2, vec, k=5)
+    assert held() == [("dead", 1), ("dead", 2), ("index", 1), ("index", 2)]
+    # 20 × 16 values: each library passes the gate, but two copies (and
+    # even one, with its ids and payload) are over the 1,280-byte budget.
+    monkeypatch.setattr(store_mod, "DRIVER_SEARCH_MAX_VALUES", 20 * 16)
+    store.search_vector(2, vec, k=5)
+    assert held() == [("dead", 2), ("index", 2)]
+    assert _hits(store.search_vector(1, vec, k=5)) == want
+    assert held() == [("dead", 1), ("index", 1)]
+
+
+def test_dead_ids_read_each_delete_file_once(spark, store, monkeypatch):
+    """A driver search reads each delete file newer than its build once:
+    after another delete, only the new file is read."""
+    reads = []
+    read_table = store_mod.pq.read_table
+
+    def counted(path, *args, **kwargs):
+        reads.append(os.path.basename(path))
+        return read_table(path, *args, **kwargs)
+
+    monkeypatch.setattr(store_mod.pq, "read_table", counted)
+    store.ingest_chunks(_chunk_rows(spark, 20))
+    store.build_index(1, algorithm="linear")
+    vec = list(store.get_chunk(100007)["embedding"])
+    gone = set()
+    for cid in (100007, 100008, 100009):
+        store.delete_chunk(cid)
+        gone.add(cid)
+        assert not gone & {h["chunk_id"] for h in _hits(store.search_vector(1, vec, k=20))}
+    store.search_vector(1, vec, k=20)
+    assert [r for r in reads if r.startswith("del_")] == ["del_2", "del_3", "del_4"]
+
+
+def test_ingest_rejects_embeddings_of_another_dim(spark, store, monkeypatch):
+    """An ingested embedding is empty (the build embeds it) or of the
+    store's dim; rows of any other dim are rejected, as update_chunk
+    rejects them, so both search paths rank the same stored rows."""
+    rows = [(i, 1, 1, f"chunk {i}", e, 0, None) for i, e in enumerate([
+        [0.5] * 15, [0.5] * 17, [0.5] * 16, [], None, [0.25] * 17, [0.25] * 16, [0.75] * 15,
+    ])]
+    store.ingest_chunks(spark.createDataFrame(
+        rows, "chunk_id long, document_id long, library_id long, text string, "
+        "embedding array<float>, start_index int, end_index int"))
+    assert sorted(r["chunk_id"] for r in store.read_chunks().collect()) == [2, 3, 4, 6]
+    store.build_index(1, algorithm="linear")
+    driver = store.search_vector(1, [0.5] * 16, k=10)
+    with monkeypatch.context() as m:
+        _on_spark_path(m)
+        plan = store.search_vector(1, [0.5] * 16, k=10)
+    assert _hits(driver) == _hits(plan)
+    assert [h["chunk_id"] for h in _hits(driver)][:2] == [2, 6]
