@@ -57,7 +57,7 @@ def _key_part(arg):
 
 # Per-builder cache bound: serving paths may legitimately call a builder
 # with an unbounded stream of distinct literals (e.g. fake_embedding over
-# F.lit(chunk_text) in store.update_chunk) — without a cap every distinct
+# one F.lit(text) per call) — without a cap every distinct
 # text would pin a wide expression tree in the dict AND the JVM forever.
 # FIFO eviction keeps the steady-state working set (the query registry's
 # fixed expression shapes) hot while bounding the literal churn.

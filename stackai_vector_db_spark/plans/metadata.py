@@ -159,14 +159,6 @@ def metadata_values(fields: list[tuple[str, str]], values: dict | None,
     return {name: values.get(name) for name, _ in fields}
 
 
-def metadata_lit(fields: list[tuple[str, str]], values: dict | None, bounds: dict) -> Column:
-    """:func:`metadata_values` as a struct literal of the closed schema."""
-    values = metadata_values(fields, values, bounds)
-    if values is None:
-        return null_metadata(fields)
-    return F.struct(*(F.lit(values[n]).cast(t).alias(n) for n, t in fields))
-
-
 def chunk_metadata_valid(col: Column) -> Column:
     """Reference ``ChunkMetadataSchema`` field bounds
     (app/schemas/chunk.py:14-54) as one JVM-side predicate — null metadata

@@ -31,18 +31,23 @@ Maps the reference's in-memory machinery to immutable-table conventions
   libraries within a byte budget; a search probes, scores, ranks and
   hydrates it in numpy and returns the hits as an Arrow-backed DataFrame,
   with no Spark job. Above the gate, the same search is a Spark plan.
+- chunk repository (``chunk_service.py``, a dict) → get, update and
+  delete read and write one chunk id's rows with pyarrow, and
+  ``count_chunks`` reads the manifest: no Spark job at any store size.
 
 The store is the serving-side composition of the operators in
-``operators/``; every chunk and index step, and every search above the
-gate, is a plain DataFrame job that would run unchanged on a multi-node
-cluster.
+``operators/``; every batch chunk step (ingest, cascade delete,
+compaction), every index build and every search above the gate is a
+plain DataFrame job that would run unchanged on a multi-node cluster.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
+from collections import Counter
 from functools import cache, reduce
 from typing import NamedTuple
 
@@ -76,7 +81,6 @@ from stackai_vector_db_spark.plans.metadata import (
     LIBRARY_METADATA_BOUNDS,
     chunk_metadata_valid,
     coerce_metadata,
-    metadata_lit,
     metadata_values,
     null_metadata,
 )
@@ -145,14 +149,15 @@ def _validate_query_text(text: str) -> str:
 
 @cache
 def _arrow_schema(table: str) -> pa.Schema:
-    """Control ``table``'s Arrow schema, or the hits' for ``"hits"``,
-    parsed once from its DDL."""
-    return to_arrow_schema(StructType.fromDDL({**_CONTROL_SCHEMAS, "hits": _HITS_SCHEMA}[table]))
+    """Control ``table``'s Arrow schema, or the hits' for ``"hits"`` and
+    the chunk rows' for ``"chunks"``, parsed once from its DDL."""
+    ddl = {**_CONTROL_SCHEMAS, "hits": _HITS_SCHEMA, "chunks": CHUNK_SCHEMA}[table]
+    return to_arrow_schema(StructType.fromDDL(ddl))
 
 
 def _row(d: dict) -> Row:
-    """A control row dict as the Row its listing's ``collect()`` returns,
-    nested metadata struct included."""
+    """A control or chunk row dict as the Row its listing's ``collect()``
+    returns, nested metadata struct included."""
     return Row(**{k: _row(v) if isinstance(v, dict) else v for k, v in d.items()})
 
 
@@ -414,23 +419,35 @@ class VectorStore:
         self._swap_pointer(chunks=v, **pointer)
         return v
 
+    @staticmethod
+    def _write_part(path: str, table: pa.Table) -> None:
+        """Write ``table`` as directory ``path``'s one parquet file, first
+        removing a failed writer's leftovers, as Spark's overwrite does:
+        their rows would read back, or their ids be tombstoned."""
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
+        pq.write_table(table, os.path.join(path, "part-0.parquet"))
+
     def _tombstone(
-        self, snap: _Snapshot, matched: DataFrame, new_data: tuple = (),
+        self, snap: _Snapshot, matched: DataFrame | pa.Table, new_data: tuple = (),
         bump: bool = False, **pointer,
     ) -> int:
         """Merge-on-read delete: write the matched rows' (chunk_id,
         library_id) as one small delete file, then commit the next chunks
         version — O(matched), never a corpus rewrite. Readers anti-join
-        tombstones onto lower-seq segments only. The matched rows leave the
-        live counts; ``bump`` adds them to the dirty counts; ``pointer``
-        updates ride the commit. ``new_data`` adds an update's segment,
-        which re-adds each matched row: the live counts stay."""
+        tombstones onto lower-seq segments only. ``matched`` is a Spark plan
+        or an Arrow table in hand. The matched rows leave the live counts;
+        ``bump`` adds them to the dirty counts; ``pointer`` updates ride the
+        commit. ``new_data`` adds an update's segment, which re-adds each
+        matched row: the live counts stay."""
         v, m = snap.chunks + 1, snap.manifest
         path = os.path.join(self.root, "chunks", f"del_{v}")
-        matched.select(
-            F.col("chunk_id").cast("long"), F.col("library_id").cast("long")
-        ).coalesce(1).write.mode("overwrite").parquet(path)
-        gone = self._library_rows(path)
+        if isinstance(matched, DataFrame):
+            matched.select("chunk_id", "library_id").coalesce(1).write.mode("overwrite").parquet(path)
+            gone = self._library_rows(path)
+        else:
+            self._write_part(path, matched.select(["chunk_id", "library_id"]))
+            gone = Counter(map(str, matched["library_id"].to_pylist()))
         if bump:
             pointer["dirty"] = _plus(snap.dirty, gone)
         return self._commit_chunks(
@@ -473,17 +490,31 @@ class VectorStore:
             )
         return out.drop("__seq")
 
-    def get_chunk(self, chunk_id: int):
+    def _live_rows(self, snap: _Snapshot, chunk_id: int) -> pa.Table:
+        """Every live row of ``chunk_id`` in ``snap``, read with pyarrow, or
+        a clean not-found. By the sequence rule only segments whose seq is
+        at least the newest delete file naming the id's are live; each is
+        read with a chunk_id filter that skips row groups by statistics."""
+        if chunk_id is None:
+            raise ValueError("chunk_id must be of type int, got None")
+        _require(int, chunk_id=chunk_id)
+        m, hit = snap.manifest, ds.field("chunk_id") == chunk_id
+        killed = next((seq for p, seq in reversed(m["deletes"]) if ds.dataset(
+            p, schema=pa.schema([("chunk_id", pa.int64())])).count_rows(filter=hit)), 0)
+        # A compacted segment keeps library_id in its partition directories.
+        part = ds.partitioning(pa.schema([("library_id", pa.int64())]), flavor="hive")
+        rows = pa.concat_tables([_arrow_schema("chunks").empty_table()] + [
+            ds.dataset(p, schema=_arrow_schema("chunks"), partitioning=part).to_table(filter=hit)
+            for p, seq in m["data"] if seq >= killed])
+        if not rows.num_rows:
+            raise ValueError(f"chunk {chunk_id} not found")
+        return rows
+
+    def get_chunk(self, chunk_id: int) -> Row:
         """Point lookup (reference GET /chunks/{id},
         chunk_service.py get_chunk): the chunk row, or a clean
-        ChunkNotFoundError equivalent. The predicate pushes down to the
-        parquet scan — at scale this reads the one row group holding the
-        id, not the corpus."""
-        cur = self.read_chunks()
-        rows = [] if cur is None else cur.filter(F.col("chunk_id") == chunk_id).limit(1).collect()
-        if not rows:
-            raise ValueError(f"chunk {chunk_id} not found")
-        return rows[0]
+        ChunkNotFoundError equivalent."""
+        return _row(self._live_rows(self._snapshot(), chunk_id).to_pylist()[0])
 
     def list_chunks(
         self,
@@ -503,10 +534,10 @@ class VectorStore:
         return cur
 
     def count_chunks(self, library_id: int | None = None) -> int:
-        """Chunk count (reference chunk_service.py count_chunks) — a
-        metadata-only aggregate over the snapshot."""
-        df = self.list_chunks(library_id=library_id)
-        return 0 if df is None else df.count()
+        """Chunk count (reference chunk_service.py count_chunks): the live
+        rows the snapshot's manifest holds, no scan."""
+        rows = self._snapshot().manifest["rows"]
+        return sum(rows.values()) if library_id is None else rows.get(str(library_id), 0)
 
     def compact_chunks(self) -> int:
         """Fold the manifest's segments into one partition-pruned rewrite —
@@ -542,6 +573,8 @@ class VectorStore:
         (``chunk_service.py:117-120``). Validators mirror the schema:
         non-blank text, start/end >= 0 and end >= start, embedding dim
         matched to the store, metadata per the closed-schema bounds."""
+        _require(str, text=text)
+        _require(int, start_index=start_index, end_index=end_index)
         if text is not None and not text.strip():
             raise ValueError("chunk text must be non-empty")
         if start_index is not None and start_index < 0:
@@ -552,44 +585,25 @@ class VectorStore:
             if start_index is not None and end_index < start_index:
                 raise ValueError("end_index must be >= start_index")
         if embedding is not None and len(embedding) != self.dim:
-            raise ValueError(
-                f"embedding dim {len(embedding)} != store dim {self.dim}"
-            )
+            raise ValueError(f"embedding dim {len(embedding)} != store dim {self.dim}")
+        changes = {k: v for k, v in (("text", text), ("start_index", start_index),
+                                     ("end_index", end_index)) if v is not None}
+        if embedding is not None:
+            changes["embedding"] = [float(x) for x in embedding]
+        elif compute_embedding and text is not None:
+            changes["embedding"] = fake_embedding_py(text, self.dim)
+        if metadata is not None:
+            changes["metadata"] = metadata_values(
+                CHUNK_METADATA_FIELDS, metadata, CHUNK_METADATA_BOUNDS)
         snap = self._snapshot()
-        cur = self.read_chunks(snap.chunks)
-        old = cur.filter(F.col("chunk_id") == chunk_id) if cur is not None else None
-        if old is None or old.isEmpty():
-            raise ValueError(f"chunk {chunk_id} not found")
+        old = self._live_rows(snap, chunk_id)
         # Merge-on-read update = tombstone(old) + one-row segment(new):
         # O(1 row) written, never a corpus rewrite. The new segment's seq
         # equals the tombstone's, so only the OLD row is masked.
-        updated = old
-        if text is not None:
-            updated = updated.withColumn("text", F.lit(text))
-        if embedding is not None:
-            updated = updated.withColumn(
-                "embedding",
-                F.lit([float(x) for x in embedding]).cast("array<float>"),
-            )
-        elif compute_embedding and text is not None:
-            updated = updated.withColumn(
-                "embedding",
-                fake_embedding(F.lit(text), self.dim).cast("array<float>"),
-            )
-        if start_index is not None:
-            updated = updated.withColumn("start_index", F.lit(start_index).cast("int"))
-        if end_index is not None:
-            updated = updated.withColumn("end_index", F.lit(end_index).cast("int"))
-        if metadata is not None:
-            updated = updated.withColumn(
-                "metadata",
-                metadata_lit(
-                    CHUNK_METADATA_FIELDS, metadata, CHUNK_METADATA_BOUNDS
-                ),
-            )
+        new = [{**r, **changes} for r in old.to_pylist()]
         v = snap.chunks + 1
         seg = os.path.join(self.root, "chunks", f"seg_{v}")
-        updated.select(*_CHUNK_COLS).coalesce(1).write.mode("overwrite").parquet(seg)
+        self._write_part(seg, pa.Table.from_pylist(new, schema=_arrow_schema("chunks")))
         return self._tombstone(snap, old, ([seg, v],), bump=True)
 
     def delete_chunk(self, chunk_id: int) -> int:
@@ -599,11 +613,7 @@ class VectorStore:
         dirty). Merge-on-read: one tombstone row written, no segment
         rewrite; readers pinned to the old version are untouched."""
         snap = self._snapshot()
-        cur = self.read_chunks(snap.chunks)
-        old = cur.filter(F.col("chunk_id") == chunk_id) if cur is not None else None
-        if old is None or old.isEmpty():
-            raise ValueError(f"chunk {chunk_id} not found")
-        return self._tombstone(snap, old, bump=True)
+        return self._tombstone(snap, self._live_rows(snap, chunk_id), bump=True)
 
     # ---- cascade delete (J4, trace library_service.py:67-77) -------------
 
@@ -771,14 +781,7 @@ class VectorStore:
         when its chunk carries a threshold AND the distance exceeds it —
         null threshold keeps the row (the three-valued-logic trap from
         SURVEY.md §7.3, encoded explicitly)."""
-        payload = idx.select(
-            "chunk_id",
-            "document_id",
-            "library_id",
-            "text",
-            "similarity_threshold",
-            "metadata",
-        )
+        payload = idx.select("chunk_id", "document_id", "text", "similarity_threshold", "metadata")
         return (
             F.broadcast(hits)
             .join(payload, "chunk_id")

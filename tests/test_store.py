@@ -991,12 +991,77 @@ def test_failed_write_leaves_old_state(spark, store, monkeypatch):
         assert k >= 3, name  # at least one parquet write and the swap
 
 
+def test_point_writes_clear_a_failed_writers_leftovers(spark, store, monkeypatch):
+    """A write that fails after its parquet write and before its commit
+    leaves files at the next version's directory; a point write there
+    removes them first, so their rows never read back and their ids are
+    never tombstoned."""
+    def fail(**_):
+        raise _Fault("before the swap")
+
+    store.ingest_chunks(_chunk_rows(spark, 10))
+    with monkeypatch.context() as m:
+        m.setattr(store, "_swap_pointer", fail)
+        with pytest.raises(_Fault):  # its delete file names 100001 and 100006
+            store.delete_documents(spark.createDataFrame([(1,)], "document_id long"))
+    store.delete_chunk(100000)
+    want = [100000 + i for i in range(1, 10)]
+    assert sorted(r["chunk_id"] for r in store.read_chunks().collect()) == want
+    assert store.count_chunks() == 9
+
+    with monkeypatch.context() as m:
+        m.setattr(store, "_swap_pointer", fail)
+        with pytest.raises(_Fault):
+            store.ingest_chunks(_chunk_rows(spark, 5, start_doc=50))
+    store.update_chunk(100001, text="updated after a failed ingest")
+    assert sorted(r["chunk_id"] for r in store.read_chunks().collect()) == want
+    assert store.get_chunk(100001)["text"] == "updated after a failed ingest"
+    assert store.count_chunks() == 9
+
+
+def test_count_chunks_reads_the_manifest(spark, store):
+    """count_chunks reads the manifest's live rows, which agree with a scan
+    after every kind of chunk write — a duplicated live id included, whose
+    update rewrites and whose delete tombstones every live row."""
+    store.create_library(1, "one")
+    store.create_library(2, "two")
+
+    def agrees():
+        for lib in (None, 1, 2):
+            assert store.count_chunks(lib) == store.list_chunks(library_id=lib).count(), lib
+
+    store.ingest_chunks(_chunk_rows(spark, 10))
+    store.ingest_chunks(_chunk_rows(spark, 6, library_id=2))
+    agrees()
+    store.ingest_chunks(_chunk_rows(spark, 1))  # 100000 again: two live rows
+    agrees()
+    dirty = store.dirty_count(1)
+    store.update_chunk(100000, text="both copies rewritten")
+    agrees()
+    twins = store.list_chunks().filter(F.col("chunk_id") == 100000).collect()
+    assert [r["text"] for r in twins] == ["both copies rewritten"] * 2
+    assert store.dirty_count(1) == dirty + 2
+    store.delete_chunk(100000)
+    agrees()
+    assert store.count_chunks(1) == 9 and store.dirty_count(1) == dirty + 4
+    store.delete_documents(spark.createDataFrame([(1,)], "document_id long"))
+    agrees()
+    store.delete_library(2)
+    agrees()
+    assert store.count_chunks(2) == 0
+    store.compact_chunks()
+    agrees()
+    store.ingest_chunks(_chunk_rows(spark, 1))  # 100000 after its delete
+    agrees()
+    assert store.count_chunks() == 8
+
+
 def test_rebuild_state_reads_run_no_spark_job(spark, store):
     """needs_rebuild and index_status read JSON the snapshot holds."""
     store.ingest_chunks(_chunk_rows(spark, 30))
     store.build_index(1, algorithm="linear")
     store.delete_chunk(100003)
-    assert _jobs(spark, "count-chunks", store.count_chunks)[0] > 0  # the tracker sees jobs
+    assert _jobs(spark, "read-chunks", store.read_chunks().count)[0] > 0  # the tracker sees jobs
     n, (rebuild, st) = _jobs(
         spark, "rebuild-state", lambda: (store.needs_rebuild(1), store.index_status(1))
     )
@@ -1188,13 +1253,19 @@ def test_read_index_runs_no_spark_job(spark, store):
     ("create_document", (10, "1", "t"), {}),
     ("update_document", (11, b"t"), {}),
     ("update_document", (True, "t"), {}),
+    *((method, (bad,), {}) for method in ("get_chunk", "update_chunk", "delete_chunk")
+      for bad in ("3", True, 3.5, None)),
+    ("update_chunk", (100001,), {"text": 5}),
+    ("update_chunk", (100001,), {"start_index": "7"}),
 ])
 def test_scalar_field_of_wrong_type_is_a_value_error(spark, store, method, args, kwargs):
-    """Ids are ints (not bools); names, titles and descriptions are
-    strings: anything else is a clean ValueError, before anything is
-    written."""
+    """Ids and chunk indices are ints (not bools); names, titles,
+    descriptions and chunk texts are strings: anything else is a clean
+    ValueError, before anything is written."""
     store.create_library(1, "lib")
     store.create_document(11, 1, "doc")
+    if method.endswith("_chunk"):
+        store.ingest_chunks(_chunk_rows(spark, 2))
     before = store.versions()
     with pytest.raises(ValueError, match="must be of type"):
         getattr(store, method)(*args, **kwargs)
@@ -1407,3 +1478,88 @@ def test_ingest_rejects_embeddings_of_another_dim(spark, store, monkeypatch):
         plan = store.search_vector(1, [0.5] * 16, k=10)
     assert _hits(driver) == _hits(plan)
     assert [h["chunk_id"] for h in _hits(driver)][:2] == [2, 6]
+
+
+# ---- chunk point operations: pyarrow on the driver ---------------------------
+
+
+def test_point_operations_run_no_spark_job(spark, store):
+    """get_chunk, update_chunk (embedding included), delete_chunk and
+    count_chunks run no Spark job, over several segments and delete files."""
+    import numpy as np
+
+    store.ingest_chunks(_chunk_rows(spark, 20))
+    store.ingest_chunks(_chunk_rows(spark, 5, library_id=2))
+    store.delete_documents(spark.createDataFrame([(1,)], "document_id long"))
+    text = "a point update, embedded on the driver"
+    ops = {
+        "get_chunk": lambda: store.get_chunk(100003),
+        "update_chunk": lambda: store.update_chunk(100003, text=text, compute_embedding=True),
+        "delete_chunk": lambda: store.delete_chunk(200002),
+        "count_chunks": lambda: (store.count_chunks(), store.count_chunks(2)),
+    }
+    for name, op in ops.items():
+        assert _jobs(spark, f"point-{name}", op)[0] == 0, name
+    row = store.get_chunk(100003)
+    assert row["text"] == text
+    assert list(row["embedding"]) == [float(x) for x in
+                                      np.float32(store_mod.fake_embedding_py(text, 16))]
+    assert store.count_chunks() == store.read_chunks().count() == 19
+
+
+def test_spark_reads_the_pyarrow_written_files(spark, store, monkeypatch):
+    """A point write's one-row segment and delete file are plain parquet
+    to Spark: read_chunks returns what get_chunk does, build_index indexes
+    the updated row, and both search paths find it and skip the deleted
+    ids, those deleted after the build included."""
+    store.ingest_chunks(_chunk_rows(spark, 20))
+    text = "rewritten on the driver"
+    store.update_chunk(100003, text=text, compute_embedding=True,
+                       metadata={"page_number": 2, "tags": ["x"]})
+    store.delete_chunk(100005)
+    spark_row = store.read_chunks().filter(F.col("chunk_id") == 100003).collect()
+    assert spark_row == [store.get_chunk(100003)]
+    assert spark_row[0]["metadata"]["tags"] == ["x"]
+    assert store.read_chunks().filter(F.col("chunk_id") == 100005).isEmpty()
+    store.build_index(1, algorithm="linear")
+    store.delete_chunk(100007)  # newer than the build
+    vec = list(store.get_chunk(100003)["embedding"])
+
+    def searches():
+        return [_hits(store.search_vector(1, vec, k=20)), _hits(store.search_text(1, text, k=20))]
+
+    driver = searches()
+    with monkeypatch.context() as m:
+        _on_spark_path(m)
+        plan = searches()
+    assert driver == plan
+    for hits in driver:
+        ids = [h["chunk_id"] for h in hits]
+        assert ids[0] == 100003 and hits[0]["dist"] == 0.0
+        assert len(ids) == 18 and not {100005, 100007} & set(ids)
+
+
+def test_point_reader_reads_spark_written_segments(spark, store):
+    """The pyarrow reader reads Spark's append segments and a compacted
+    partitionBy(library_id) directory, which keeps library_id in its
+    directory names: the rows equal Spark's, and library_id survives an
+    update of a compacted row."""
+    store.ingest_chunks(_chunk_rows(spark, 10))
+    store.ingest_chunks(_chunk_rows(spark, 5, library_id=2))
+
+    def spark_row(cid):
+        return store.read_chunks().filter(F.col("chunk_id") == cid).collect()
+
+    for cid in (100004, 200002):
+        assert [store.get_chunk(cid)] == spark_row(cid)
+    store.compact_chunks()
+    for cid in (100004, 200002):
+        assert [store.get_chunk(cid)] == spark_row(cid)
+    store.update_chunk(200002, start_index=3)
+    row = store.get_chunk(200002)
+    assert (row["library_id"], row["start_index"]) == (2, 3)
+    assert spark_row(200002) == [row]
+    store.delete_chunk(200003)
+    with pytest.raises(ValueError, match="chunk 200003 not found"):
+        store.get_chunk(200003)
+    assert store.count_chunks(2) == store.list_chunks(library_id=2).count() == 4
