@@ -20,7 +20,11 @@ from __future__ import annotations
 
 import sys
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
 P = 1_000_000_007
@@ -576,8 +580,12 @@ def _strip_plan_stats(df: DataFrame) -> DataFrame:
         return df
 
 
-def _resolve_prune_max(spark, prune_max_members: int | None) -> int:
-    """Row ceiling for the canonical-election members broadcast semi join.
+def _resolve_prune_max(
+    spark, prune_max_members: int | None, row_bytes: int = 8
+) -> int:
+    """Row ceiling for the canonical-election members broadcast semi join,
+    or, with ``row_bytes=16`` (a pair of long ids), for collecting the
+    pair set to find its components on the driver.
 
     Explicit values pass through (the manual escape hatch, e.g. the
     ``SPARK_GRAFT_CANON_PRUNE_MAX`` env at the queries.py call site).
@@ -590,7 +598,7 @@ def _resolve_prune_max(spark, prune_max_members: int | None) -> int:
     auto-broadcast (-1) gets 0, i.e. always the eager full-scan path —
     exactly the conservatism the -1 asks for.
 
-    The 8 bytes/row assumes a LONG id column (this engine's doc_id
+    The default 8 bytes/row assumes a LONG id column (this engine's doc_id
     contract). A deployment that re-keys on string doc ids weighs more
     per member and should pass an explicit ``prune_max_members`` scaled
     to its real id width — the derived ceiling would over-admit the
@@ -624,7 +632,7 @@ def _resolve_prune_max(spark, prune_max_members: int | None) -> int:
             file=sys.stderr,
         )
         threshold = -1
-    return max(threshold, 0) // 8
+    return max(threshold, 0) // row_bytes
 
 
 def _plan_is_cached(df: DataFrame) -> bool:
@@ -987,6 +995,61 @@ def duplicate_components(
     return labels.select(F.col("id").alias(id_col), F.col("comp").alias("component_id"))
 
 
+def _driver_components(
+    pairs: DataFrame, id_col: str, ceiling: int
+) -> tuple[DataFrame, int] | None:
+    """:func:`duplicate_components` over the ids in ``pairs``, found on
+    the driver when ``pairs`` has at most ``ceiling`` rows: one action
+    collects ``(id_a, id_b)``; None (having read at most ``ceiling + 1``
+    rows) when it has more.
+
+    The ids are relabelled to their ranks (``np.unique``), so the min
+    label is the min id. Each round hooks every root to the least root
+    across its edges, then pointer-jumps every node to its root; a round
+    that hooks nothing is the loop's fixpoint (component id = min member
+    id). Vectorised over the edge arrays, with no round bound: a chain
+    of any depth converges. As in the loop, a NULL id is no node and
+    links nothing; the pair's other id stays a member. Returns
+    ``((id_col, component_id), rows)`` in the loop's column types, or
+    None."""
+    ceiling = min(ceiling, (1 << 31) - 2)  # limit() takes an int
+    head = pairs.select("id_a", "id_b").limit(ceiling + 1).toArrow()
+    if head.num_rows > ceiling:
+        return None
+    a, b = head.column("id_a"), head.column("id_b")
+    ids = np.unique(np.concatenate([a.drop_null().to_numpy(), b.drop_null().to_numpy()]))
+    edge = pc.and_(pc.is_valid(a), pc.is_valid(b))
+    u = np.searchsorted(ids, a.filter(edge).to_numpy())
+    v = np.searchsorted(ids, b.filter(edge).to_numpy())
+    label = np.arange(len(ids))
+    while True:
+        lu, lv = label[u], label[v]
+        lo = np.minimum(lu, lv)
+        hooked = label.copy()
+        np.minimum.at(hooked, lu, lo)
+        np.minimum.at(hooked, lv, lo)
+        while True:
+            jumped = hooked[hooked]
+            if np.array_equal(jumped, hooked):
+                break
+            hooked = jumped
+        if np.array_equal(hooked, label):
+            break
+        label = hooked
+    # The loop's types: its ids come from the union of id_a and id_b.
+    id_type = (
+        pairs.select("id_a").unionByName(pairs.select(F.col("id_b").alias("id_a")))
+        .schema["id_a"].dataType
+    )
+    schema = StructType(
+        [StructField(id_col, id_type), StructField("component_id", id_type)]
+    )
+    comps = pairs.sparkSession.createDataFrame(
+        pa.table([ids, ids[label]], names=[id_col, "component_id"]), schema
+    )
+    return comps, len(ids)
+
+
 def canonical_by_quality(
     docs_scored: DataFrame | None,
     pairs: DataFrame,
@@ -1033,6 +1096,21 @@ def canonical_by_quality(
     the score scan is the dominant canonical-phase cost, ~26× more rows
     than the members who need it.
 
+    COMPONENTS on the driver when the pair set fits: one action collects
+    at most ``ceiling + 1`` pairs, the ceiling derived from bytes like the
+    prune ceiling (two 8-byte ids a pair: ``autoBroadcastJoinThreshold //
+    16``, 4,194,304 pairs at this engine's 64 MB session default). Up to
+    the ceiling, :func:`_driver_components` finds the components in numpy
+    (min-label hooking with pointer jumping over the rank-relabelled ids)
+    and hands them back as a DataFrame: one Spark job where the loop runs
+    a localCheckpoint and a count per round. Above it,
+    :func:`duplicate_components` runs the round loop on the same
+    persisted pairs. Both give the same rows (the min-label fixpoint is
+    unique). Measured with ``tools/dedup_scale_probe.py`` (``components``
+    phase, local[4]), the driver form beat the loop at every pair count
+    up to and past the ceiling (README dedup section), so the gate is the
+    derived ceiling. The driver path leaves ``LAST_ROUNDS`` untouched.
+
     Scale shape: label propagation runs ONLY over pair-touching nodes —
     O(E) rows, a tiny fraction of the corpus (dup clusters are sparse
     after exact dedup) — never over all N docs. The score join then
@@ -1052,10 +1130,12 @@ def canonical_by_quality(
     deterministic and replayable in ANSI SQL (driver oracle). Returns
     ``(id_col, component_id, score_col, is_canonical)`` for every doc that
     belongs to a multi-member cluster; docs with no near-dup are implicitly
-    canonical and not emitted. ``max_iter`` passes through to
-    :func:`duplicate_components`, which raises when a dup chain is deeper
+    canonical and not emitted. ``max_iter``, ``edge_storage``,
+    ``n_jumps`` and ``class_gather`` pass through to the loop above the
+    ceiling; there a dup chain deeper than ``max_iter`` allows raises
     (round-5 advisor: the silent cutoff would elect multiple canonicals
-    on a split cluster). No reference counterpart (extension).
+    on a split cluster). The driver form has no round bound. No
+    reference counterpart (extension).
     """
     if (docs_scored is None) == (docs is None):
         raise ValueError(
@@ -1063,20 +1143,21 @@ def canonical_by_quality(
         )
     if docs is not None and score_expr is None:
         raise ValueError("late scoring needs score_expr alongside docs")
-    # The pairs plan is consumed by THREE separate actions before the
+    # The pairs plan is consumed by the driver path's collect and, when
+    # that finds more than the ceiling, by THREE more actions before the
     # label loop starts: the nodes distinct, the edge-cache fill, and
     # (edge_storage="auto") the sizing count. A caller passing a raw LSH
     # plan would pay the band join + verify once per action (r8 judge
     # advice #1), so persist for the duration of component building —
     # the first action fills the cache, the rest scan it, and nothing
-    # after `comps` (itself checkpoint-backed) references pairs, so the
-    # cache is released before scoring. DISK_ONLY when the edge cache
-    # itself is disk-bound (auto/DISK_ONLY regimes are exactly the ones
-    # where an extra E-row heap cache would re-open the one-JVM memory
-    # ceiling r8 closed); skip entirely when the caller already persisted
-    # (persist-level conflicts raise, and their cache is theirs to drop).
-    # "Already persisted" is a JVM CacheManager question, not a Python
-    # one: DataFrame.is_cached is a client-side flag set only by
+    # after `comps` (driver-built or checkpoint-backed) references pairs,
+    # so the cache is released before scoring. DISK_ONLY when the edge
+    # cache itself is disk-bound (auto/DISK_ONLY regimes are exactly the
+    # ones where an extra E-row heap cache would re-open the one-JVM
+    # memory ceiling r8 closed); skip entirely when the caller already
+    # persisted (persist-level conflicts raise, and their cache is theirs
+    # to drop). "Already persisted" is a JVM CacheManager question, not
+    # a Python one: DataFrame.is_cached is a client-side flag set only by
     # persist() on that exact handle, so a caller who cached the SAME
     # logical plan through a different handle would be missed and our
     # unpersist below would drop THEIR cache (CacheManager keys on the
@@ -1088,28 +1169,37 @@ def canonical_by_quality(
             if edge_storage == "auto" or edge_storage == StorageLevel.DISK_ONLY
             else StorageLevel.MEMORY_AND_DISK_DESER
         )
-    nodes = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .unionByName(pairs.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    comps = duplicate_components(
-        nodes, pairs, id_col=id_col, max_iter=max_iter,
-        edge_storage=edge_storage, n_jumps=n_jumps, class_gather=class_gather,
-    )
+    # Pairs up to the ceiling (two long ids a row against the broadcast
+    # bound) are collected once and their components found on the
+    # driver; more run the Spark round loop.
+    ceiling = _resolve_prune_max(pairs.sparkSession, None, row_bytes=16)
+    local = _driver_components(pairs, id_col, ceiling)
+    if local is not None:
+        comps, n_members = local
+    else:
+        nodes = (
+            pairs.select(F.col("id_a").alias(id_col))
+            .unionByName(pairs.select(F.col("id_b").alias(id_col)))
+            .distinct()
+        )
+        comps = duplicate_components(
+            nodes, pairs, id_col=id_col, max_iter=max_iter,
+            edge_storage=edge_storage, n_jumps=n_jumps, class_gather=class_gather,
+        )
+        # checkpoint-backed: the count is a cached-block scan
+        n_members = comps.count() if docs_scored is None else None
     if own_pairs_cache:
-        # comps is materialized (the loop's final localCheckpoint), so no
-        # remaining plan references pairs.
+        # comps is materialized (driver-built, or the loop's final
+        # localCheckpoint), so no remaining plan references pairs.
         pairs.unpersist()
     if docs_scored is None:
-        # comps is checkpoint-backed — the count is a cached-block scan,
-        # and it's the number that decides whether member ids fit a
-        # broadcast. The semi join sits UNDER the score projection by
-        # construction (see docstring: Catalyst won't reorder it there),
-        # so the score expression runs on members only.
+        # The member count decides whether member ids fit a broadcast.
+        # The semi join sits UNDER the score projection by construction
+        # (see docstring: Catalyst won't reorder it there), so the score
+        # expression runs on members only.
         base = docs
         prune_max = _resolve_prune_max(docs.sparkSession, prune_max_members)
-        if comps.count() <= prune_max:
+        if n_members <= prune_max:
             base = docs.join(
                 F.broadcast(comps.select(id_col)), id_col, "left_semi"
             )
@@ -1120,8 +1210,9 @@ def canonical_by_quality(
     # WIN the min_by election — either way a keep/drop decision on bad
     # data (round-5 review; round-6 advisor for the NULL case). One left
     # join covers both: an absent row and a NULL score both surface as
-    # score IS NULL. comps is checkpoint-backed and O(E) rows, so the
-    # probe is cheap, and the validated frame doubles as `members`.
+    # score IS NULL. comps is driver-built or checkpoint-backed and O(E)
+    # rows, so the probe is cheap, and the validated frame doubles as
+    # `members`.
     members = comps.join(docs_scored, id_col, "left")
     n_bad = members.filter(F.col(score_col).isNull()).count()
     if n_bad:

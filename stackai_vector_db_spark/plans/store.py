@@ -128,6 +128,10 @@ DRIVER_SEARCH_MAX_VALUES = 2**24
 # Vector components scored per numpy block by a driver search: bounds its
 # float64 temporaries to 16 MiB per block, whatever the library's size.
 _SCORE_BLOCK_VALUES = 2**20
+# Vector components read per batch when a driver copy is loaded: decoding
+# a Parquet batch peaks at ~3× its values, so the load holds the copy plus
+# ~1 MiB instead of the whole table, its decode and a flattened copy.
+_LOAD_BATCH_VALUES = 2**16
 
 
 def _validate_k(k: int) -> None:
@@ -175,6 +179,15 @@ def _require(kind: type, **fields) -> None:
     for field, value in fields.items():
         if value is not None and (not isinstance(value, kind) or isinstance(value, bool)):
             raise ValueError(f"{field} must be of type {kind.__name__}, got {value!r}")
+
+
+def _require_id(**ids) -> None:
+    """Each of ``ids`` is an int (not a bool, not None): an entity or chunk
+    id always names one, so None is no "not given" here."""
+    for field, value in ids.items():
+        if value is None:
+            raise ValueError(f"{field} must be of type int, got None")
+    _require(int, **ids)
 
 
 def _plus(counts: dict, delta: dict, sign: int = 1) -> dict:
@@ -495,9 +508,7 @@ class VectorStore:
         a clean not-found. By the sequence rule only segments whose seq is
         at least the newest delete file naming the id's are live; each is
         read with a chunk_id filter that skips row groups by statistics."""
-        if chunk_id is None:
-            raise ValueError("chunk_id must be of type int, got None")
-        _require(int, chunk_id=chunk_id)
+        _require_id(chunk_id=chunk_id)
         m, hit = snap.manifest, ds.field("chunk_id") == chunk_id
         killed = next((seq for p, seq in reversed(m["deletes"]) if ds.dataset(
             p, schema=pa.schema([("chunk_id", pa.int64())])).count_rows(filter=hit)), 0)
@@ -938,27 +949,39 @@ class VectorStore:
 
     def _load_local(self, version: int, library_id: int) -> _LocalIndex:
         """Library ``library_id``'s rows of index ``version`` and its
-        centroid rows, read with pyarrow: no Spark job."""
+        centroid rows, read with pyarrow: no Spark job. Each file streams
+        in batches of ``_LOAD_BATCH_VALUES`` values into arrays sized by a
+        first count (a dataset scan decodes whole row groups at once)."""
         path = self._index_path(version)
-        t = ds.dataset(
+        dataset = ds.dataset(
             path, format="parquet",
             partitioning=ds.partitioning(pa.schema([("cluster_id", pa.int32())]), flavor="hive"),
-        ).to_table(
-            columns=["chunk_id", "embedding", "cluster_id", "similarity_threshold",
-                     "document_id", "text", "metadata"],
-            filter=ds.field("library_id") == library_id,
         )
-        lengths = pc.fill_null(pc.list_value_length(t["embedding"]), 0)
-        if pc.any(pc.not_equal(lengths, self.dim)).as_py():
-            raise ValueError(f"index v{version} holds embeddings whose dim is not {self.dim}")
-        hits = _arrow_schema("hits")
-        parts = (
-            t["chunk_id"].to_numpy(),
-            pc.list_flatten(t["embedding"]).to_numpy().reshape(-1, self.dim),
-            t["cluster_id"].to_numpy(),
-            pc.fill_null(t["similarity_threshold"], np.inf).to_numpy().astype(np.float64),
-            pa.table({c: t[c].cast(hits.field(c).type) for c in ("document_id", "text", "metadata")}),
-        )
+        n = dataset.count_rows(filter=ds.field("library_id") == library_id)
+        ids, cluster = np.empty(n, np.int64), np.empty(n, np.int32)
+        mat, threshold = np.empty((n, self.dim), np.float32), np.empty(n, np.float64)
+        hits, cols = _arrow_schema("hits"), ["document_id", "text", "metadata"]
+        payload, at = [], 0
+        for frag in dataset.get_fragments():
+            cid = ds.get_partition_keys(frag.partition_expression)["cluster_id"]
+            for b in pq.ParquetFile(frag.path).iter_batches(
+                max(1, _LOAD_BATCH_VALUES // self.dim),
+                columns=["library_id", "chunk_id", "embedding", "similarity_threshold", *cols],
+            ):
+                b = b.filter(pc.equal(b["library_id"], library_id))
+                lengths = pc.fill_null(pc.list_value_length(b["embedding"]), 0)
+                if pc.any(pc.not_equal(lengths, self.dim)).as_py():
+                    raise ValueError(f"index v{version} holds embeddings whose dim is not {self.dim}")
+                rows = slice(at, at + b.num_rows)
+                ids[rows] = b["chunk_id"].to_numpy()
+                flat = pc.list_flatten(b["embedding"]).to_numpy(zero_copy_only=False)
+                mat[rows] = flat.reshape(-1, self.dim)
+                cluster[rows] = cid
+                threshold[rows] = pc.fill_null(b["similarity_threshold"], np.inf).to_numpy()
+                payload.append(pa.record_batch([b[c].cast(hits.field(c).type) for c in cols], cols))
+                at += b.num_rows
+        payload = pa.Table.from_batches(payload, pa.schema([(c, hits.field(c).type) for c in cols]))
+        parts = (ids, mat, cluster, threshold, payload)
         centroids = pq.read_table(os.path.join(path, "_centroids")).to_pylist()
         return _LocalIndex(*parts, centroids, sum(p.nbytes for p in parts))
 
@@ -1081,7 +1104,7 @@ class VectorStore:
         index; duplicate → error). ``metadata`` is the closed
         LibraryMetadata schema (entities.py:57-72) stored as a typed
         struct column; unknown keys raise."""
-        _require(int, library_id=library_id)
+        _require_id(library_id=library_id)
         _require(str, name=name, description=description)
         if not name.strip():
             raise ValueError("library name must be non-empty")
@@ -1102,7 +1125,7 @@ class VectorStore:
         """Copy-on-write update (reference ``entities.py:114-135``: updates
         return new instances; ``routers/libraries.py`` PATCH). Name keeps
         the casefolded uniqueness invariant against OTHER libraries."""
-        _require(int, library_id=library_id)
+        _require_id(library_id=library_id)
         _require(str, name=name, description=description)
         snap = self._snapshot()
         libs = self._control_with(snap, "libraries", "library_id", library_id)
@@ -1143,7 +1166,7 @@ class VectorStore:
         ``document_service.py:64-65``); title non-empty, ≤ 255.
         ``metadata`` is the closed DocumentMetadata schema
         (entities.py:20-36) stored as a typed struct column."""
-        _require(int, document_id=document_id, library_id=library_id)
+        _require_id(document_id=document_id, library_id=library_id)
         _require(str, title=title)
         if not title.strip():
             raise ValueError("document title must be non-empty")
@@ -1162,7 +1185,7 @@ class VectorStore:
     def update_document(self, document_id: int, title: str) -> None:
         """Copy-on-write title update (reference ``entities.py:177-199``,
         ``routers/documents.py`` PATCH); same title invariants as create."""
-        _require(int, document_id=document_id)
+        _require_id(document_id=document_id)
         _require(str, title=title)
         if not title.strip():
             raise ValueError("document title must be non-empty")

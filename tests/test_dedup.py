@@ -375,6 +375,109 @@ def test_canonical_by_quality_rejects_missing_and_null_scores(spark):
         canonical_by_quality(nulled, pairs)
 
 
+def _gate_pairs(spark):
+    """A 40-node path with shuffled ids (diameter 39, past the horizon
+    of max_iter=3), a self-pair, a pair repeated in both directions, and
+    two disjoint clusters."""
+    import random
+
+    order = list(range(40))
+    random.Random(7).shuffle(order)
+    rows = [(order[i], order[i + 1]) for i in range(39)]
+    rows += [(100, 100), (200, 201), (201, 200), (200, 201), (300, 302), (301, 302)]
+    return spark.createDataFrame(rows, "id_a long, id_b long")
+
+
+def test_driver_components_match_the_loop(spark):
+    """Below the ceiling, components are found on the driver: the same
+    (doc_id, component_id) rows and column types as the Spark loop on the
+    same pairs, with no round bound — a chain the loop cannot finish in
+    max_iter=3 converges, and canonical_by_quality elects on it."""
+    import pytest
+
+    from stackai_vector_db_spark.operators.dedup import (
+        _driver_components,
+        canonical_by_quality,
+        duplicate_components,
+    )
+
+    pairs = _gate_pairs(spark)
+    local, n = _driver_components(pairs, "doc_id", 1000)
+    nodes = (
+        pairs.select(F.col("id_a").alias("doc_id"))
+        .unionByName(pairs.select(F.col("id_b").alias("doc_id")))
+        .distinct()
+    )
+    loop = duplicate_components(nodes, pairs, max_iter=25)
+    want = sorted(map(tuple, loop.collect()))
+    assert sorted(map(tuple, local.collect())) == want and n == len(want) == 46
+    assert local.dtypes == loop.dtypes
+    assert {c for _, c in want} == {0, 100, 200, 300}
+    # one row more than the ceiling: the caller runs the loop instead
+    assert _driver_components(pairs, "doc_id", 44) is None
+    with pytest.raises(RuntimeError, match="changes still flowing"):
+        duplicate_components(nodes, pairs, max_iter=3).collect()
+    scored = spark.createDataFrame(
+        [(i, i % 5) for i in range(400)], "doc_id long, score_micro long"
+    )
+    canon = canonical_by_quality(scored, pairs, max_iter=3).collect()
+    assert sum(r["is_canonical"] for r in canon) == 4
+    # int ids keep their type on the driver path too
+    ints = spark.createDataFrame([(1, 2), (2, 3)], "id_a int, id_b int")
+    assert _driver_components(ints, "doc_id", 10)[0].dtypes == [
+        ("doc_id", "int"), ("component_id", "int")
+    ]
+
+
+def test_null_pair_ids_are_no_node_on_both_paths(spark):
+    """A NULL id in pairs names no document. The loop treats it as no node
+    and no edge, while the pair's other id stays a member (5 below is a
+    singleton cluster); the driver path elects exactly the same rows."""
+    from stackai_vector_db_spark.operators.dedup import canonical_by_quality
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 3), (5, None), (None, None)],
+        "id_a long, id_b long",
+    )
+    scored = spark.createDataFrame(
+        [(1, 100), (2, 300), (3, 50), (5, 70)], "doc_id long, score_micro long"
+    )
+    driver = sorted(map(tuple, canonical_by_quality(scored, pairs).collect()))
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # ceiling 0
+        loop = sorted(map(tuple, canonical_by_quality(scored, pairs).collect()))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert driver == loop
+    assert [r[:2] for r in driver] == [(1, 1), (2, 1), (3, 3), (5, 5)]
+
+
+def test_small_canonical_by_quality_runs_few_spark_jobs(spark):
+    """A pair set under the ceiling costs one collect for its components,
+    not a localCheckpoint and a count per loop round: the whole election
+    stays within a fixed handful of Spark jobs, and LAST_ROUNDS, the
+    loop's record, is left untouched."""
+    from stackai_vector_db_spark.operators import dedup
+
+    pairs = _gate_pairs(spark)
+    scored = spark.createDataFrame(
+        [(i, i % 5) for i in range(400)], "doc_id long, score_micro long"
+    )
+    dedup.LAST_ROUNDS = "untouched"
+    sc = spark.sparkContext
+    sc.setJobGroup("small-canonical", "small-canonical")
+    try:
+        rows = dedup.canonical_by_quality(scored, pairs).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("small-canonical"))
+    assert len(rows) == 46
+    assert jobs <= 12, f"{jobs} Spark jobs"
+    assert dedup.LAST_ROUNDS == "untouched"
+    dedup.LAST_ROUNDS = None
+
+
 def test_minhash_bucket_cap_is_subset_and_converges(spark):
     """The mega-bucket guard only ever drops pairs (capped output ⊆ uncapped)
     and a cap at/above the largest bucket is a no-op. Exact duplicates share

@@ -218,16 +218,35 @@ def test_iterative_round_counts_pinned_at_fixture_scale(spark):
     round; the fixture dup graphs are shallow (measured diameter ≤ 15 at
     sf0.001 → 4 update rounds + 1 observation), so >6 rounds here means
     the doubling shortcut stopped working (O(diameter) propagation would
-    need 16+)."""
+    need 16+).
+
+    q_dedup_canonical's pair set fits under canonical_by_quality's driver
+    ceiling, so by default it finds its components on the driver and
+    leaves LAST_ROUNDS untouched. With auto-broadcast disabled (ceiling
+    0) it runs the loop on the same pairs: that run is held to the same
+    round bound, and both runs must elect the same rows."""
     from stackai_vector_db_spark.operators import dedup
 
-    for name in ("q_dedup_components", "q_dedup_canonical"):
+    def run(name):
         dedup.LAST_ROUNDS = None
-        df = REGISTRY[name].fn(spark, SF_DIR)
-        assert df.count() > 0
-        assert dedup.LAST_ROUNDS is not None, f"{name} never ran the loop"
-        assert dedup.LAST_ROUNDS <= 6, (
-            f"{name} took {dedup.LAST_ROUNDS} rounds at fixture scale — "
+        rows = sorted(map(tuple, REGISTRY[name].fn(spark, SF_DIR).collect()))
+        assert rows
+        return rows, dedup.LAST_ROUNDS
+
+    _, rounds = run("q_dedup_components")
+    driver, driver_rounds = run("q_dedup_canonical")
+    assert driver_rounds is None, "q_dedup_canonical ran the loop below the ceiling"
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        loop, loop_rounds = run("q_dedup_canonical")
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert driver == loop
+    for name, n in (("q_dedup_components", rounds), ("q_dedup_canonical", loop_rounds)):
+        assert n is not None, f"{name} never ran the loop"
+        assert n <= 6, (
+            f"{name} took {n} rounds at fixture scale — "
             "pointer doubling should converge the fixture dup graph in "
             "<= 5 update rounds + 1 observation round"
         )

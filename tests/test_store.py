@@ -8,6 +8,7 @@ import os
 import shutil
 import tempfile
 
+import pyarrow as pa
 import pytest
 
 from pyspark.sql import functions as F
@@ -1257,11 +1258,15 @@ def test_read_index_runs_no_spark_job(spark, store):
       for bad in ("3", True, 3.5, None)),
     ("update_chunk", (100001,), {"text": 5}),
     ("update_chunk", (100001,), {"start_index": "7"}),
+    ("create_library", (None, "nameless"), {}),
+    ("create_document", (None, None, "doc"), {}),
+    ("create_document", (None, 1, "doc"), {}),
+    ("create_document", (12, None, "doc"), {}),
 ])
 def test_scalar_field_of_wrong_type_is_a_value_error(spark, store, method, args, kwargs):
     """Ids and chunk indices are ints (not bools); names, titles,
     descriptions and chunk texts are strings: anything else is a clean
-    ValueError, before anything is written."""
+    ValueError, before anything is written. An id is never None."""
     store.create_library(1, "lib")
     store.create_document(11, 1, "doc")
     if method.endswith("_chunk"):
@@ -1435,6 +1440,38 @@ def test_driver_copies_stay_within_the_budget(spark, store, monkeypatch):
     assert held() == [("dead", 2), ("index", 2)]
     assert _hits(store.search_vector(1, vec, k=5)) == want
     assert held() == [("dead", 1), ("index", 1)]
+
+
+# Arrow allocations of a driver copy load, counted apart from the process's
+# (its own statistics over the default pool). Module-lived: a buffer must
+# never outlive the pool it was allocated from.
+_LOAD_POOL = pa.proxy_memory_pool(pa.default_memory_pool())
+
+
+def test_driver_copy_load_peak_stays_near_what_it_keeps(spark, store):
+    """Loading a library's driver copy streams each index file in batches
+    into arrays sized up front, so its peak allocation stays within a small
+    multiple of the bytes the copy keeps: the whole table, a flattened copy
+    of the matrix and the casts are never alive at once. Counted as the
+    Python/numpy peak (tracemalloc) plus the Arrow peak."""
+    import tracemalloc
+
+    store.ingest_chunks(_chunk_rows(spark, 20000))
+    v = store.build_index(1, n_clusters=2, algorithm="ivf")
+    default = pa.default_memory_pool()
+    pa.set_memory_pool(_LOAD_POOL)
+    tracemalloc.start()
+    try:
+        ix = store._load_local(v, 1)
+        py_peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+        pa.set_memory_pool(default)
+    assert len(ix.ids) == 20000 and ix.mat.shape == (20000, 16)
+    peak, held = py_peak + _LOAD_POOL.max_memory(), ix.nbytes
+    del ix
+    assert _LOAD_POOL.bytes_allocated() == 0
+    assert peak <= 1.75 * held, (py_peak, peak, held)
 
 
 def test_dead_ids_read_each_delete_file_once(spark, store, monkeypatch):

@@ -12,7 +12,9 @@ part of the measurement.
 
 Usage: python tools/dedup_scale_probe.py [ndocs] [phases] [period]
          [dup_per_100] [token_mixer] [n_batches]
-  phases: comma-set of {pairs,canonical,span} (the DIRECT form) or
+  phases: comma-set of {pairs,components,canonical,span} (the DIRECT
+    form; "components" times both component forms on the same pairs —
+    see canonical_by_quality's gate) or
     {inc_build,inc_score,inc_verify,inc_canonical} (the K-batch
     ∪-decomposition against a STORED bucketed band index — the form
     whose per-step scratch is batch-sized, i.e. the shape a daily
@@ -342,7 +344,7 @@ def main() -> None:
         out[key] = value
         print(f"PROBE {key}={value}", file=sys.stderr, flush=True)
 
-    if phases & {"pairs", "canonical"}:
+    if phases & {"pairs", "components", "canonical"}:
         # DEDUP_PROBE_PAIRS_PARQUET: cache the verified pair set across
         # probe runs. The saturated 10M pair set (390.5M rows) costs
         # ~25 min of band join + verify to rebuild and, under a
@@ -380,7 +382,34 @@ def main() -> None:
             if pairs_pq:
                 pairs.write.parquet(pairs_pq)
 
+    if "components" in phases:
+        # The crossover behind canonical_by_quality's gate: both component
+        # forms on the same pairs, each until its labels are ready to join
+        # — the driver form (one collect, numpy, back as a DataFrame) with
+        # no ceiling, and the Spark round loop as the canonical phase runs
+        # it. Their labels must agree row for row.
+        from stackai_vector_db_spark.operators import dedup as _dedup
+
+        t0 = time.perf_counter()
+        local, _ = _dedup._driver_components(pairs, "doc_id", (1 << 31) - 2)
+        local.count()
+        report("components_driver_s", round(time.perf_counter() - t0, 3))
+        t0 = time.perf_counter()
+        nodes = (
+            pairs.select(F.col("id_a").alias("doc_id"))
+            .unionByName(pairs.select(F.col("id_b").alias("doc_id")))
+            .distinct()
+        )
+        loop = _dedup.duplicate_components(nodes, pairs, edge_storage="auto")
+        report("components", loop.count())
+        report("components_loop_s", round(time.perf_counter() - t0, 3))
+        report("components_loop_rounds", _dedup.LAST_ROUNDS)
+        report("components_agree", local.exceptAll(loop).isEmpty()
+               and loop.exceptAll(local).isEmpty())
+
     if "canonical" in phases:
+        from stackai_vector_db_spark.operators import dedup as _dedup
+
         score_expr = (
             F.round(quality_score(F.col("text")) * 1000000.0).cast("long")
         )
@@ -406,6 +435,8 @@ def main() -> None:
             edge_storage="auto", max_iter=max_iter,
             n_jumps=n_jumps, class_gather=gather,
         )
+        # the driver path leaves both untouched
+        _dedup.LAST_ROUNDS = _dedup.LAST_EDGE_STORAGE = None
         if late:
             canon = canonical_by_quality(
                 None, pairs, docs=docs, score_expr=score_expr, **common
@@ -418,10 +449,11 @@ def main() -> None:
         report("members", canon.count())
         report("canonical_s", round(time.perf_counter() - t0, 3))
         report("kept_canonicals", canon.filter("is_canonical").count())
-        from stackai_vector_db_spark.operators import dedup as _dedup
-
-        # pointer-doubling round count — the quantity the r6 5M probe
-        # showed superlinear under O(diameter) propagation
+        # which component form ran (pair count vs the driver ceiling), and
+        # the loop's pointer-doubling round count — the quantity the r6 5M
+        # probe showed superlinear under O(diameter) propagation
+        report("components_path",
+               "driver" if _dedup.LAST_ROUNDS is None else "loop")
         report("cc_rounds", _dedup.LAST_ROUNDS)
         # the edge_storage="auto" sizing decision, folded into the
         # artifact instead of stderr-only (r10 advisory #3): capacity,
