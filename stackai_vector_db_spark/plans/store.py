@@ -25,20 +25,20 @@ Maps the reference's in-memory machinery to immutable-table conventions
   with empty embeddings at build time.
 - IVF inverted lists (``ivf.py:54-130``) → KMeans centroids +
   ``partitionBy("cluster_id")`` layout; probe filters prune directories.
-- in-memory numpy search (``linear.py:45-61``, ``ivf.py:142-166``) → below
-  a size gate (``DRIVER_SEARCH_MAX_VALUES``), a library's index version is
-  read once with pyarrow and held on the driver, the copies of all
-  libraries within a byte budget; a search probes, scores, ranks and
-  hydrates it in numpy and returns the hits as an Arrow-backed DataFrame,
-  with no Spark job. Above the gate, the same search is a Spark plan.
+- in-memory numpy search (``linear.py:45-61``, ``ivf.py:142-166``) → one
+  numpy search on the driver at every index size, no Spark job: it scans
+  the probed inverted lists block by block, keeping a running top-k. An
+  index version within a size gate (``DRIVER_SEARCH_MAX_VALUES``) is read
+  once with pyarrow and held, the copies of all libraries within a byte
+  budget; a larger one streams its probed ``cluster_id=`` directories.
 - chunk repository (``chunk_service.py``, a dict) → get, update and
   delete read and write one chunk id's rows with pyarrow, and
   ``count_chunks`` reads the manifest: no Spark job at any store size.
 
 The store is the serving-side composition of the operators in
 ``operators/``; every batch chunk step (ingest, cascade delete,
-compaction), every index build and every search above the gate is a
-plain DataFrame job that would run unchanged on a multi-node cluster.
+compaction) and every index build is a plain DataFrame job that would run
+unchanged on a multi-node cluster.
 """
 
 from __future__ import annotations
@@ -61,13 +61,8 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from stackai_vector_db_spark.functions.vector import fake_embedding, fake_embedding_py
-from stackai_vector_db_spark.operators.ivf import (
-    assign_clusters,
-    kmeans_centroids,
-    local_probes_df,
-    probe_pairs_local,
-)
-from stackai_vector_db_spark.operators.knn import ROUND, brute_force_topk, local_queries_df
+from stackai_vector_db_spark.operators.ivf import assign_clusters, kmeans_centroids, probe_pairs_local
+from stackai_vector_db_spark.operators.knn import ROUND
 
 from stackai_vector_db_spark.plans.metadata import (
     CHUNK_METADATA_BOUNDS,
@@ -105,9 +100,11 @@ _CONTROL_SCHEMAS = {
     "documents": "document_id long, library_id long, title string, "
     f"metadata {DOCUMENT_METADATA_DDL}",
 }
-# A search's result rows, as the Spark plan types them.
+# A search's result rows, as a Spark plan over the index types them.
 _HITS_SCHEMA = ("qid long, chunk_id long, document_id long, dist double, rank int, "
                 f"text string, metadata {CHUNK_METADATA_DDL}")
+# The index columns a hit carries through the search unchanged.
+_PAYLOAD_COLS = ["document_id", "text", "metadata"]
 
 DEFAULT_DIM = 16
 REBUILD_THRESHOLD = 0.1  # reference config.py:58
@@ -115,30 +112,28 @@ MAX_KNN_RESULTS = 1000  # reference config.py:49, schemas/search.py:22-27
 MAX_QUERY_TEXT_LEN = 10_000  # reference schemas/search.py:15-19
 MAX_QUERY_EMBED_VALUE = 1e6  # reference schemas/search.py:61-68
 MAX_SIMILARITY_THRESHOLD = 10.0  # reference schemas/chunk.py:43-54
-# A search whose index holds at most this many vector components (the
-# build record's size × dim) runs in numpy on the driver; a larger one
-# runs the Spark plan, the only path for an index the driver cannot hold.
-# The value is a driver-memory budget, not a speed crossover: the driver
-# path was faster at every size measured (4k to 400k vectors of dim 64,
-# CHANGES.md), and the driver's out-of-memory point was not measured. One
-# library's float32 matrix stays under 4 × 2**24 bytes = 64 MiB, and the
-# driver copies held across libraries (embeddings, ids and payload) stay
-# under the same 64 MiB, save the copy of the library just searched.
+# A library's index rows are held on the driver between searches when
+# they hold at most this many vector components (the build record's size ×
+# dim); a larger index is streamed from its files by every search. Both
+# run the same search. The value is a driver-memory budget, not a speed
+# crossover: one library's float32 matrix stays under 4 × 2**24 bytes =
+# 64 MiB, and the copies held across libraries (embeddings, ids and
+# payload) stay under the same 64 MiB, save the copy just searched.
 DRIVER_SEARCH_MAX_VALUES = 2**24
-# Vector components scored per numpy block by a driver search: bounds its
-# float64 temporaries to 16 MiB per block, whatever the library's size.
-_SCORE_BLOCK_VALUES = 2**20
-# Vector components read per batch when a driver copy is loaded: decoding
-# a Parquet batch peaks at ~3× its values, so the load holds the copy plus
-# ~1 MiB instead of the whole table, its decode and a flattened copy.
-_LOAD_BATCH_VALUES = 2**16
+# Vector components per block, read and scored at once: decoding a Parquet
+# batch peaks at ~3× its values and scoring it at ~2× in float64, so a
+# load or a streamed search holds ~1 MiB beyond what it keeps.
+_BLOCK_VALUES = 2**16
 
 
-def _validate_k(k: int) -> None:
+def _validate_search(k: int, nprobe: int) -> None:
     """Reference k bounds (schemas/search.py:22-27: 1 ≤ k ≤ 1000, a 422
-    validation error, not a silent clamp)."""
+    validation error, not a silent clamp), and nprobe ≥ 1: both ints."""
+    _require_id(k=k, nprobe=nprobe)
     if not 1 <= k <= MAX_KNN_RESULTS:
         raise ValueError(f"k must be in [1, {MAX_KNN_RESULTS}], got {k}")
+    if nprobe < 1:
+        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
 
 
 def _validate_query_text(text: str) -> str:
@@ -183,7 +178,8 @@ def _require(kind: type, **fields) -> None:
 
 def _require_id(**ids) -> None:
     """Each of ``ids`` is an int (not a bool, not None): an entity or chunk
-    id always names one, so None is no "not given" here."""
+    id always names one, and so do a search's k and nprobe, so None is no
+    "not given" here."""
     for field, value in ids.items():
         if value is None:
             raise ValueError(f"{field} must be of type int, got None")
@@ -211,13 +207,39 @@ class _Snapshot(NamedTuple):
 class _LocalIndex(NamedTuple):
     """One library's rows of one index version, held on the driver."""
 
-    ids: np.ndarray  # chunk_id, int64
-    mat: np.ndarray  # embeddings, float32, rows × dim
-    cluster: np.ndarray  # cluster_id, int32
-    threshold: np.ndarray  # similarity_threshold as float64; null → inf
-    payload: pa.Table  # document_id, text, metadata, in the hits' types
+    blocks: list  # the blocks of VectorStore._blocks, as read
     centroids: list  # the build's centroid rows, {"cluster_id", "centroid"}
-    nbytes: int  # of the arrays and the payload, which the cache bounds
+    nbytes: int  # of the blocks' arrays and payloads, which the cache bounds
+
+
+def _top_k(blocks, q: np.ndarray, k: int, dead: np.ndarray) -> tuple:
+    """The k rows of ``blocks`` nearest ``q`` by (dist, chunk_id), skipping
+    ids in ``dead``: (chunk ids, dists, thresholds, payload). Each block is
+    (chunk ids, float32 matrix, threshold, payload batch); its distances
+    are float64 difference-form, rounded to ROUND, and its own k best merge
+    into the running k by a stable lexsort, so what is alive at once is one
+    block plus k rows, and ties rank as in one sort over every row."""
+    ids, dist, threshold = np.empty(0, np.int64), np.empty(0), np.empty(0)
+    payload = _arrow_schema("hits").empty_table().select(_PAYLOAD_COLS)
+    for b_ids, mat, b_threshold, b_payload in blocks:
+        diff = mat - q
+        b_dist = np.round(np.sqrt((diff * diff).sum(axis=1)), ROUND)
+        live = np.flatnonzero(~np.isin(b_ids, dead))
+        best = live[np.lexsort((b_ids[live], b_dist[live]))[:k]]
+        order = np.lexsort((np.concatenate([ids, b_ids[best]]),
+                            np.concatenate([dist, b_dist[best]])))[:k]
+        entering = order >= len(ids)
+        if not entering.any():
+            continue
+        # Only the block's rows that enter are taken from its payload; they
+        # follow the running rows, in rank order.
+        new = best[order[entering] - len(ids)]
+        at = np.where(entering, len(ids) + np.cumsum(entering) - 1, order)
+        ids = np.concatenate([ids, b_ids[new]])[at]
+        dist = np.concatenate([dist, b_dist[new]])[at]
+        threshold = np.concatenate([threshold, b_threshold[new]])[at]
+        payload = pa.concat_tables([payload, pa.Table.from_batches([b_payload.take(new)])]).take(at)
+    return ids, dist, threshold, payload
 
 
 class VectorStore:
@@ -238,8 +260,8 @@ class VectorStore:
         self.root = root
         self.dim = dim
         # The newest version read of each control table, and per library
-        # of its index (DataFrames and centroid rows, or the driver copy)
-        # and dead ids — see _latest and _driver_copy.
+        # of its held index rows and its dead ids — see _latest,
+        # _driver_copy and _dead_ids.
         self._opened: dict = {}
         os.makedirs(os.path.join(root, "_meta"), exist_ok=True)
 
@@ -739,20 +761,21 @@ class VectorStore:
         return new_v
 
     def read_index(self, version: int | None = None) -> tuple[DataFrame, DataFrame]:
-        """(index rows, centroids) of build ``version``, else the latest."""
-        return self._open_index(self._snapshot(version=version))
+        """(index rows, centroids) of build ``version``, else the latest, as
+        DataFrames with pinned schemas: opening them runs no Spark job."""
+        snap = self._snapshot(version=version)
+        self._check_built(snap)
+        path = self._index_path(snap.index)
+        read = self.spark.read.schema
+        return (read(CHUNK_SCHEMA + ", cluster_id int").parquet(path),
+                read("cluster_id int, centroid array<double>").parquet(path + "/_centroids"))
 
-    def _open_index(self, snap: _Snapshot) -> tuple[DataFrame, DataFrame]:
+    @staticmethod
+    def _check_built(snap: _Snapshot) -> None:
         if snap.record is None:
             # reference base.py IndexNotBuiltError: querying before build is
             # a clean domain error, not a storage-layer stack trace.
             raise ValueError(f"index not built (version {snap.index})")
-        path = self._index_path(snap.index)
-        read = self.spark.read.schema
-        return self._latest(("index df", snap.record["library_id"]), snap.index, lambda: (
-            read(CHUNK_SCHEMA + ", cluster_id int").parquet(path),
-            read("cluster_id int, centroid array<double>").parquet(path + "/_centroids"),
-        ))
 
     # ---- search (trace §3.1) ---------------------------------------------
 
@@ -767,7 +790,7 @@ class VectorStore:
         """Embed query text (F3) in Python on the driver, then
         :meth:`search_vector`'s search. Passing ``version`` pins a snapshot
         (reads are stable while a new build runs)."""
-        _validate_k(k)
+        _validate_search(k, nprobe)
         text = _validate_query_text(text)
         snap = self._snapshot(library_id, version)
         self._check_library_exists(snap, library_id)
@@ -778,32 +801,12 @@ class VectorStore:
         a library; unknown ids 404). Checked against the snapshot's
         libraries table when one exists — stores driven purely through
         ingest_chunks (no library CRUD) skip it, since chunk rows are then
-        the only library record. The search itself additionally scopes the
-        index scan to the library's rows, so a wrong id can never return
-        another library's hits (the filter pushes down to the parquet
-        scan)."""
+        the only library record. The search itself additionally keeps only
+        the library's index rows, so a wrong id can never return another
+        library's hits."""
         libs = self._control(snap, "libraries")
         if libs is not None and library_id not in libs:
             raise ValueError(f"library {library_id} not found")
-
-    def _hydrate_and_threshold(self, hits: DataFrame, idx: DataFrame) -> DataFrame:
-        """J1 hydration + P6 per-chunk similarity_threshold post-filter
-        (reference ``search_service.py:156-191``): a hit is dropped only
-        when its chunk carries a threshold AND the distance exceeds it —
-        null threshold keeps the row (the three-valued-logic trap from
-        SURVEY.md §7.3, encoded explicitly)."""
-        payload = idx.select("chunk_id", "document_id", "text", "similarity_threshold", "metadata")
-        return (
-            F.broadcast(hits)
-            .join(payload, "chunk_id")
-            .filter(
-                F.col("similarity_threshold").isNull()
-                | (F.col("dist") <= F.col("similarity_threshold"))
-            )
-            .select(
-                "qid", "chunk_id", "document_id", "dist", "rank", "text", "metadata"
-            )
-        )
 
     def search_vector(
         self,
@@ -817,7 +820,7 @@ class VectorStore:
         payload): k-bounded (schemas/search.py:22-27) and dimension-checked
         against the store dim (422-equivalent, ``search_service.py:126-135``),
         then probe→topk→hydrate (:meth:`_search`)."""
-        _validate_k(k)
+        _validate_search(k, nprobe)
         if len(vector) != self.dim:
             raise ValueError(
                 f"query dim {len(vector)} != index dim {self.dim}"
@@ -836,74 +839,41 @@ class VectorStore:
     def _search(
         self, snap: _Snapshot, library_id: int, vector: list[float], k: int, nprobe: int
     ) -> DataFrame:
-        """The one search, over ``snap``'s index: probe → top-k → hydrate,
-        skipping the snapshot's tombstones. An index of at most
-        ``DRIVER_SEARCH_MAX_VALUES`` vector components is searched on the
-        driver (:meth:`_search_local`), a larger one by a Spark plan."""
-        # Round-trip the query through float32 FIRST: candidate scoring via
-        # local_queries_df casts to array<float>, so probe selection must
-        # see the same float32-quantized values — a raw float64 component
-        # near a rounding boundary (±1e6 inputs are allowed, where float32
-        # truncation ~0.06 ≫ the 0.5e-6 round-6 granularity) could
-        # otherwise pick a different cluster than the scoring space would.
-        qpair = (0, [float(x) for x in np.asarray(vector, dtype=np.float32)])
-        if snap.record is not None and snap.record["size"] * self.dim <= DRIVER_SEARCH_MAX_VALUES:
-            return self._search_local(snap, library_id, qpair, k, nprobe)
-        idx, cents = self._open_index(snap)  # raises if nothing is built
-        rows = self._latest(("centroids", library_id), snap.index, cents.collect)
-        # LocalRelation query vector + driver-side probe selection over the
-        # stored centroid table (value-identical to probe_clusters, see
-        # operators/ivf.probe_pairs_local): no ExistingRDD broadcast job and
-        # no probe-window exchange per search.
-        q = local_queries_df(self.spark, [qpair])
-        idx = idx.filter(F.col("library_id") == library_id)
-        probes = local_probes_df(self.spark, [qpair], cents, rows, nprobe)
-        cand = idx.join(
-            F.broadcast(probes.select("cluster_id").distinct()), "cluster_id"
-        )
-        if snap.dead:
-            # Tombstone files are tiny → broadcast anti-join, no index rewrite.
-            dead = self._latest(("dead df", library_id), (snap.index, snap.chunks), lambda: reduce(
-                DataFrame.unionByName,
-                (self.spark.read.schema("chunk_id long").parquet(p) for p in snap.dead),
-            ))
-            cand = cand.join(F.broadcast(dead), "chunk_id", "left_anti")
-        hits = brute_force_topk(
-            q, cand, k, id_col="chunk_id", vec_col="embedding"
-        ).withColumnRenamed("vec_id", "chunk_id")
-        return self._hydrate_and_threshold(hits, idx)
-
-    def _search_local(
-        self, snap: _Snapshot, library_id: int, qpair: tuple, k: int, nprobe: int,
-    ) -> DataFrame:
-        """:meth:`_search` in numpy, over the library's index rows held on
-        the driver, in the Spark plan's order: probes by probe_pairs_local,
-        float64 difference-form distances rounded to ROUND, rank by (dist,
-        chunk_id), then the threshold filter, which leaves a gap in rank
-        where it drops a hit. The hits come back as a DataFrame over an
-        Arrow table, whose ``collect()`` runs no Spark job."""
-        ix = self._driver_copy(snap, library_id)
-        probes = [c for _, c in probe_pairs_local([qpair], ix.centroids, nprobe)]
-        live = np.isin(ix.cluster, probes)
-        if snap.dead:
-            live &= ~self._dead_mask(snap, library_id, ix)
-        cand = np.flatnonzero(live)
-        q, step = np.asarray(qpair[1]), max(1, _SCORE_BLOCK_VALUES // self.dim)
-        dist = np.empty(len(cand))
-        for s in range(0, len(cand), step):
-            diff = ix.mat[cand[s:s + step]] - q
-            dist[s:s + step] = np.sqrt((diff * diff).sum(axis=1))
-        dist = np.round(dist, ROUND)
-        top = np.lexsort((ix.ids[cand], dist))[:k]
-        keep = dist[top] <= ix.threshold[cand[top]]
-        hit = cand[top][keep]
-        payload = ix.payload.take(hit)
+        """The one search, over ``snap``'s index, in numpy: probes by
+        probe_pairs_local, the k best probed rows skipping the snapshot's
+        tombstones (:func:`_top_k`), then the threshold filter, which leaves
+        a gap in rank where it drops a hit. The rows are the library's held
+        copy (:meth:`_driver_copy`) if its index fits the gate and the
+        search is not pinned older than the copy, else the probed cluster
+        files, streamed. The hits come back as a DataFrame over an Arrow
+        table, whose ``collect()`` runs no Spark job."""
+        self._check_built(snap)
+        # Round-trip the query through float32 FIRST: the rows are scored
+        # against the float32-quantized query a Spark plan over the index
+        # scores, so probe selection must see the same values — a raw
+        # float64 component near a rounding boundary (±1e6 inputs are
+        # allowed, where float32 truncation ~0.06 ≫ the 0.5e-6 round-6
+        # granularity) could otherwise pick a different cluster.
+        q = np.asarray(vector, dtype=np.float32).astype(np.float64)
+        held = self._opened.get(("index", library_id))
+        if (snap.record["size"] * self.dim <= DRIVER_SEARCH_MAX_VALUES
+                and (held is None or snap.index >= held[0])):
+            ix = self._driver_copy(snap, library_id)
+            probes = {c for _, c in probe_pairs_local([(0, q.tolist())], ix.centroids, nprobe)}
+            blocks = (b[1:] for b in ix.blocks if b[0] in probes)
+        else:
+            centroids = self._centroids(snap.index)
+            probes = {c for _, c in probe_pairs_local([(0, q.tolist())], centroids, nprobe)}
+            blocks = (b[1:] for b in self._blocks(snap.index, library_id, probes))
+        ids, dist, threshold, payload = _top_k(blocks, q, k, self._dead_ids(snap, library_id))
+        hit = np.flatnonzero(dist <= threshold)
+        payload = payload.take(hit)
         return self.spark.createDataFrame(pa.table({
             "qid": np.zeros(len(hit), np.int64),
-            "chunk_id": ix.ids[hit],
+            "chunk_id": ids[hit],
             "document_id": payload["document_id"],
-            "dist": dist[top][keep],
-            "rank": np.flatnonzero(keep).astype(np.int32) + 1,
+            "dist": dist[hit],
+            "rank": hit.astype(np.int32) + 1,
             "text": payload["text"],
             "metadata": payload["metadata"],
         }, schema=_arrow_schema("hits")))
@@ -930,60 +900,71 @@ class VectorStore:
             total -= n
         return ix
 
-    def _dead_mask(self, snap: _Snapshot, library_id: int, ix: _LocalIndex) -> np.ndarray:
-        """Which of ``ix``'s rows the snapshot's delete files newer than its
-        build name. Held per library with the files read so far, so a later
-        chunks version reads only the delete files added since."""
+    def _dead_ids(self, snap: _Snapshot, library_id: int) -> np.ndarray:
+        """The chunk ids the snapshot's delete files newer than its build
+        name. Held per library for its newest index version with the files
+        read so far, so a later chunks version reads only the delete files
+        added since, whichever rows the search scans."""
         key = ("dead", library_id)
         held = self._opened.get(key)
-        if held is None or held[2] is not ix.ids or snap.dead[:len(held[1])] != held[1]:
-            held = (snap.index, (), ix.ids, np.zeros(len(ix.ids), bool))
+        if held is None or held[0] != snap.index or snap.dead[:len(held[1])] != held[1]:
+            held = (snap.index, (), np.empty(0, np.int64))
         new = snap.dead[len(held[1]):]
         if new:
-            gone = np.concatenate([pq.read_table(p, columns=["chunk_id"])["chunk_id"].to_numpy()
-                                   for p in new])
-            held = (snap.index, snap.dead, ix.ids, held[3] | np.isin(ix.ids, gone))
-            if self._opened.get(("index", library_id), (0, None))[1] is ix:
+            held = (snap.index, snap.dead, np.concatenate(
+                [held[2]] + [pq.read_table(p, columns=["chunk_id"])["chunk_id"].to_numpy()
+                             for p in new]))
+            if snap.index >= self._opened.get(key, (0,))[0]:
                 self._opened[key] = held
-        return held[3]
+        return held[2]
 
-    def _load_local(self, version: int, library_id: int) -> _LocalIndex:
-        """Library ``library_id``'s rows of index ``version`` and its
-        centroid rows, read with pyarrow: no Spark job. Each file streams
-        in batches of ``_LOAD_BATCH_VALUES`` values into arrays sized by a
-        first count (a dataset scan decodes whole row groups at once)."""
-        path = self._index_path(version)
+    def _blocks(self, version: int, library_id: int, clusters=None):
+        """Library ``library_id``'s rows of index ``version``, in the
+        clusters ``clusters`` names (all if None), read with pyarrow: no
+        Spark job. Each file streams in batches of ``_BLOCK_VALUES`` values
+        (a dataset scan decodes whole row groups at once), each yielded as a
+        block (cluster_id, chunk ids, float32 matrix, similarity_threshold
+        with null → inf, payload batch in the hits' types)."""
         dataset = ds.dataset(
-            path, format="parquet",
+            self._index_path(version), format="parquet",
             partitioning=ds.partitioning(pa.schema([("cluster_id", pa.int32())]), flavor="hive"),
         )
-        n = dataset.count_rows(filter=ds.field("library_id") == library_id)
-        ids, cluster = np.empty(n, np.int64), np.empty(n, np.int32)
-        mat, threshold = np.empty((n, self.dim), np.float32), np.empty(n, np.float64)
-        hits, cols = _arrow_schema("hits"), ["document_id", "text", "metadata"]
-        payload, at = [], 0
-        for frag in dataset.get_fragments():
+        hits = _arrow_schema("hits")
+        probed = None if clusters is None else ds.field("cluster_id").isin(list(clusters))
+        for frag in dataset.get_fragments(probed):
             cid = ds.get_partition_keys(frag.partition_expression)["cluster_id"]
-            for b in pq.ParquetFile(frag.path).iter_batches(
-                max(1, _LOAD_BATCH_VALUES // self.dim),
-                columns=["library_id", "chunk_id", "embedding", "similarity_threshold", *cols],
-            ):
-                b = b.filter(pc.equal(b["library_id"], library_id))
-                lengths = pc.fill_null(pc.list_value_length(b["embedding"]), 0)
-                if pc.any(pc.not_equal(lengths, self.dim)).as_py():
-                    raise ValueError(f"index v{version} holds embeddings whose dim is not {self.dim}")
-                rows = slice(at, at + b.num_rows)
-                ids[rows] = b["chunk_id"].to_numpy()
-                flat = pc.list_flatten(b["embedding"]).to_numpy(zero_copy_only=False)
-                mat[rows] = flat.reshape(-1, self.dim)
-                cluster[rows] = cid
-                threshold[rows] = pc.fill_null(b["similarity_threshold"], np.inf).to_numpy()
-                payload.append(pa.record_batch([b[c].cast(hits.field(c).type) for c in cols], cols))
-                at += b.num_rows
-        payload = pa.Table.from_batches(payload, pa.schema([(c, hits.field(c).type) for c in cols]))
-        parts = (ids, mat, cluster, threshold, payload)
-        centroids = pq.read_table(os.path.join(path, "_centroids")).to_pylist()
-        return _LocalIndex(*parts, centroids, sum(p.nbytes for p in parts))
+            with pq.ParquetFile(frag.path) as f:
+                for b in f.iter_batches(
+                    max(1, _BLOCK_VALUES // self.dim),
+                    columns=["library_id", "chunk_id", "embedding", "similarity_threshold",
+                             *_PAYLOAD_COLS],
+                ):
+                    mine = pc.equal(b["library_id"], library_id)
+                    if not pc.all(mine, skip_nulls=False).as_py():  # filter copies every column
+                        b = b.filter(mine)
+                    if not b.num_rows:
+                        continue
+                    emb = b["embedding"]
+                    if emb.null_count or (np.diff(emb.offsets.to_numpy()) != self.dim).any():
+                        raise ValueError(
+                            f"index v{version} holds embeddings whose dim is not {self.dim}")
+                    flat = pc.list_flatten(emb).to_numpy(zero_copy_only=False)
+                    payload = [b[c].cast(hits.field(c).type) for c in _PAYLOAD_COLS]
+                    yield (cid, b["chunk_id"].to_numpy(), flat.reshape(-1, self.dim),
+                           pc.fill_null(b["similarity_threshold"], np.inf).to_numpy(),
+                           pa.record_batch(payload, _PAYLOAD_COLS))
+
+    def _centroids(self, version: int) -> list:
+        """The centroid rows of index ``version``."""
+        return pq.read_table(os.path.join(self._index_path(version), "_centroids")).to_pylist()
+
+    def _load_local(self, version: int, library_id: int) -> _LocalIndex:
+        """Library ``library_id``'s blocks of index ``version`` and its
+        centroid rows, as the driver holds them: the load peaks at what it
+        keeps plus one batch."""
+        blocks = list(self._blocks(version, library_id))
+        nbytes = sum(a.nbytes for b in blocks for a in b[1:])
+        return _LocalIndex(blocks, self._centroids(version), nbytes)
 
     def index_status(self, library_id: int) -> dict:
         """IndexStatus analog (reference ``index_service.py:285-302``):

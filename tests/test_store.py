@@ -419,8 +419,7 @@ def test_merge_on_read_tombstones_and_sequence_rule(spark, store):
 def test_search_skips_tombstones_without_rebuild(spark, store):
     """Reference parity (linear.py:53-54): chunks deleted AFTER the index
     build must not surface in search results even before a rebuild — the
-    query-time tombstone skip, as a broadcast anti-join on the (tiny)
-    delete files."""
+    query-time tombstone skip over the (tiny) delete files."""
     store.ingest_chunks(_chunk_rows(spark, 30, library_id=1))
     store.build_index(1, n_clusters=2)
     text = "chunk text number 7 for library 1 with words"
@@ -515,14 +514,26 @@ def test_search_reads_pointer_once(spark, store, monkeypatch):
 # search_service.py:126-135) + closed metadata schemas (entities.py:20-72)
 
 
-def test_search_k_bounds_enforced(spark, store):
+def test_search_k_bounds_enforced(spark, store, monkeypatch):
+    """k is an int in [1, 1000] and nprobe an int of at least 1 (not
+    bools): anything else is a ValueError before the snapshot is read."""
     store.ingest_chunks(_chunk_rows(spark, 30))
     store.build_index(1, n_clusters=2)
-    for bad_k in (0, -1, 1001):
-        with pytest.raises(ValueError, match="k must be in"):
-            store.search_text(1, "chunk text number 1", k=bad_k)
-        with pytest.raises(ValueError, match="k must be in"):
-            store.search_vector(1, [0.0] * 16, k=bad_k)
+    bad = [({"k": k}, "k must be in") for k in (0, -1, 1001)]
+    bad += [({"k": k}, "k must be of type int") for k in (2.5, True, "3", None)]
+    bad += [({"nprobe": n}, "nprobe must be >= 1") for n in (0, -1)]
+    bad += [({"nprobe": n}, "nprobe must be of type int") for n in (2.5, True, None)]
+
+    def unread(self):
+        raise AssertionError("the snapshot was read")
+
+    with monkeypatch.context() as m:
+        m.setattr(VectorStore, "versions", unread)
+        for kwargs, match in bad:
+            with pytest.raises(ValueError, match=match):
+                store.search_text(1, "chunk text number 1", **kwargs)
+            with pytest.raises(ValueError, match=match):
+                store.search_vector(1, [0.0] * 16, **kwargs)
     # boundary values are legal
     assert store.search_text(1, "chunk text number 1", k=1).count() >= 1
     assert store.search_vector(1, [0.0] * 16, k=1000).count() >= 1
@@ -1277,11 +1288,12 @@ def test_scalar_field_of_wrong_type_is_a_value_error(spark, store, method, args,
     assert store.versions() == before
 
 
-# ---- the driver search path and the Spark plan -------------------------------
+# ---- one search: held copies, streamed files and the Spark reference ---------
 
 
-def _on_spark_path(monkeypatch):
-    """Send every search of any size to the Spark plan."""
+def _streamed(monkeypatch):
+    """Hold no library's index rows: every search of any size streams its
+    probed cluster files, as a search above the size gate does."""
     monkeypatch.setattr(store_mod, "DRIVER_SEARCH_MAX_VALUES", 0)
 
 
@@ -1290,28 +1302,49 @@ def _hits(df):
                   key=lambda r: (r["rank"], r["chunk_id"]))
 
 
-@pytest.mark.parametrize("test", [
-    test_search_skips_tombstones_without_rebuild,
-    test_similarity_threshold_post_filter,
-    test_search_scoped_to_library,
-    test_pinned_version_skips_later_deletes,
-    test_parallel_readers_during_rebuild,
-], ids=lambda t: t.__name__)
-def test_search_on_the_spark_path(spark, store, monkeypatch, test):
-    """The search tests above run below the size gate, on the driver; each
-    runs here again on the Spark plan."""
-    _on_spark_path(monkeypatch)
-    test(spark, store)
+def _spark_search(spark, store, library_id, vector, k, nprobe, version=None):
+    """The search as a Spark plan over ``read_index()``: probes from the
+    stored centroids, the exact top-k of the probed rows minus the
+    snapshot's tombstones, then the payload join and the threshold filter,
+    which keeps a null threshold. The store's numpy search must equal it."""
+    import numpy as np
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+
+    from stackai_vector_db_spark.operators.ivf import local_probes_df
+    from stackai_vector_db_spark.operators.knn import brute_force_topk, local_queries_df
+
+    snap = store._snapshot(library_id, version)
+    idx, cents = store.read_index(snap.index)
+    qpair = (0, [float(x) for x in np.asarray(vector, dtype=np.float32)])
+    idx = idx.filter(F.col("library_id") == library_id)
+    probes = local_probes_df(spark, [qpair], cents, cents.collect(), nprobe)
+    cand = idx.join(F.broadcast(probes.select("cluster_id").distinct()), "cluster_id")
+    if snap.dead:
+        dead = reduce(DataFrame.unionByName,
+                      (spark.read.schema("chunk_id long").parquet(p) for p in snap.dead))
+        cand = cand.join(F.broadcast(dead), "chunk_id", "left_anti")
+    hits = brute_force_topk(
+        local_queries_df(spark, [qpair]), cand, k, id_col="chunk_id", vec_col="embedding"
+    ).withColumnRenamed("vec_id", "chunk_id")
+    payload = idx.select("chunk_id", "document_id", "text", "similarity_threshold", "metadata")
+    return (
+        F.broadcast(hits).join(payload, "chunk_id")
+        .filter(F.col("similarity_threshold").isNull()
+                | (F.col("dist") <= F.col("similarity_threshold")))
+        .select("qid", "chunk_id", "document_id", "dist", "rank", "text", "metadata")
+    )
 
 
 def test_driver_and_spark_paths_return_the_same_hits(spark, store, monkeypatch):
-    """Below the gate a search runs in numpy on the driver, above it as a
-    Spark plan: both return the same dtypes and the same rows, nested
-    metadata included — on IVF and linear indexes, with tombstones newer
-    than the build, thresholds (one dropping a middle-ranked hit), ties on
-    id between duplicate vectors, k past the candidate count, a pinned
-    version, and an empty result where every probed row is deleted. The
-    driver path scores in blocks of rows; small blocks rank the same."""
+    """A search over a held copy, a streamed search and a streamed search
+    of three rows per block each return the dtypes and rows of the Spark
+    reference plan, nested metadata included — on IVF and linear indexes,
+    with tombstones newer than the build, thresholds (one dropping a
+    middle-ranked hit), ties on id between duplicate vectors, k past the
+    candidate count, a pinned version, and an empty result where every
+    probed row is deleted."""
     import numpy as np
 
     rng = np.random.default_rng(7)
@@ -1346,37 +1379,46 @@ def test_driver_and_spark_paths_return_the_same_hits(spark, store, monkeypatch):
     store.delete_chunk(203)
 
     q = rng.standard_normal(16).astype(np.float32).tolist()
-    searches = {
-        "tie on id, middle hit dropped": lambda: store.search_vector(1, vecs[2].tolist(), k=10, nprobe=4),
-        "one probe": lambda: store.search_vector(1, q, k=10, nprobe=1),
-        "k past the candidates": lambda: store.search_vector(1, q, k=1000, nprobe=2),
-        "pinned version": lambda: store.search_vector(1, vecs[0].tolist(), k=20, nprobe=4, version=pinned),
-        "text": lambda: store.search_text(1, "chunk 5", k=10, nprobe=2),
-        "linear": lambda: store.search_vector(2, q, k=1000),
-        "all deleted": lambda: store.search_vector(3, vecs[0].tolist(), k=5),
+    text = store_mod.fake_embedding_py("chunk 5", 16)
+    searches = {  # name: (library, vector, k, nprobe, version)
+        "tie on id, middle hit dropped": (1, vecs[2].tolist(), 10, 4, None),
+        "one probe": (1, q, 10, 1, None),
+        "k past the candidates": (1, q, 1000, 2, None),
+        "pinned version": (1, vecs[0].tolist(), 20, 4, pinned),
+        "text": (1, text, 10, 2, None),
+        "linear": (2, q, 1000, 1, None),
+        "all deleted": (3, vecs[0].tolist(), 5, 1, None),
     }
-    for name, search in searches.items():
-        driver = search()
+
+    def search(name, lib, vec, k, nprobe, version):
+        if name == "text":
+            return store.search_text(lib, "chunk 5", k=k, nprobe=nprobe)
+        return store.search_vector(lib, vec, k=k, nprobe=nprobe, version=version)
+
+    for name, args in searches.items():
+        reference = _spark_search(spark, store, *args)
+        held = search(name, *args)
         with monkeypatch.context() as m:
-            _on_spark_path(m)
-            plan = search()
-        with monkeypatch.context() as m:
-            m.setattr(store_mod, "_SCORE_BLOCK_VALUES", 3 * 16)  # three rows per block
-            blocked = search()
-        assert driver.dtypes == plan.dtypes, name
-        assert _hits(driver) == _hits(plan) == _hits(blocked), name
-    hits = _hits(searches["tie on id, middle hit dropped"]())
+            _streamed(m)
+            streamed = search(name, *args)
+            m.setattr(store_mod, "_BLOCK_VALUES", 3 * 16)  # three rows per block
+            blocked = search(name, *args)
+        for df in (held, streamed, blocked):
+            assert df.dtypes == reference.dtypes, name
+        assert _hits(held) == _hits(streamed) == _hits(blocked) == _hits(reference), name
+    hits = _hits(store.search_vector(1, vecs[2].tolist(), k=10, nprobe=4))
     assert [(h["chunk_id"], h["rank"]) for h in hits[:3]] == [(2, 1), (102, 2), (103, 4)]
     assert any(h["metadata"] and h["metadata"]["tags"] == ["t", str(h["chunk_id"])] for h in hits)
-    assert len(_hits(searches["linear"]())) == 11
-    assert _hits(searches["all deleted"]()) == []
-    assert not {1, 7, 8, 9, 10, 11} & {h["chunk_id"] for h in _hits(searches["pinned version"]())}
+    assert len(_hits(store.search_vector(2, q, k=1000))) == 11
+    assert _hits(store.search_vector(3, vecs[0].tolist(), k=5)) == []
+    pinned_hits = _hits(store.search_vector(1, vecs[0].tolist(), k=20, nprobe=4, version=pinned))
+    assert not {1, 7, 8, 9, 10, 11} & {h["chunk_id"] for h in pinned_hits}
 
 
 def test_warm_search_runs_no_spark_job(spark, store):
-    """A search below the gate runs no Spark job — vector or text, with
-    tombstones and a libraries table, the first after a build included —
-    and still returns a DataFrame."""
+    """A search runs no Spark job — vector or text, with tombstones and a
+    libraries table, the first after a build included — and still returns
+    a DataFrame."""
     from pyspark.sql import DataFrame
 
     store.ingest_chunks(_chunk_rows(spark, 40))
@@ -1396,24 +1438,23 @@ def test_warm_search_runs_no_spark_job(spark, store):
         assert hits[0]["chunk_id"] == 100007 and hits[0]["dist"] == 0.0
 
 
-@pytest.mark.parametrize("path", ["driver", "spark"])
+@pytest.mark.parametrize("path", ["driver", "streamed"])
 def test_only_latest_index_versions_stay_open(spark, store, monkeypatch, path):
-    """A library's index (the driver copy, or the DataFrames and centroid
-    rows) and dead ids stay open for its newest build only: after three builds with a search after each, then a
-    delete and a search, one entry of each kind remains."""
-    if path == "spark":
-        _on_spark_path(monkeypatch)
+    """A library's held index rows and dead ids stay open for its newest
+    build only, and a streamed search holds its dead ids alone: after three
+    builds with a search after each, then a delete and a search, one entry
+    of each kind remains."""
+    if path == "streamed":
+        _streamed(monkeypatch)
     store.ingest_chunks(_chunk_rows(spark, 20))
     for _ in range(3):
         v = store.build_index(1, algorithm="linear")
         store.search_vector(1, [0.1] * 16, k=3).collect()
     store.delete_chunk(100003)
     store.search_vector(1, [0.1] * 16, k=3).collect()
-    kinds = {"driver": ["dead", "index"],
-             "spark": ["centroids", "dead df", "index df"]}[path]
+    kinds = {"driver": ["dead", "index"], "streamed": ["dead"]}[path]
     assert sorted(store._opened) == [(kind, 1) for kind in kinds]
-    now = (v, store.versions()["chunks"])
-    assert all(store._opened[key][0] in (v, now) for key in store._opened)
+    assert all(store._opened[key][0] == v for key in store._opened)
 
 
 def test_driver_copies_stay_within_the_budget(spark, store, monkeypatch):
@@ -1442,41 +1483,71 @@ def test_driver_copies_stay_within_the_budget(spark, store, monkeypatch):
     assert held() == [("dead", 1), ("index", 1)]
 
 
-# Arrow allocations of a driver copy load, counted apart from the process's
-# (its own statistics over the default pool). Module-lived: a buffer must
-# never outlive the pool it was allocated from.
-_LOAD_POOL = pa.proxy_memory_pool(pa.default_memory_pool())
+# Arrow allocations of a load or a search, each counted apart from the
+# process's (its own statistics over the default pool). Module-lived: a
+# buffer must never outlive the pool it was allocated from.
+_POOLS = {name: pa.proxy_memory_pool(pa.default_memory_pool())
+          for name in ("load", "small", "large")}
 
 
-def test_driver_copy_load_peak_stays_near_what_it_keeps(spark, store):
-    """Loading a library's driver copy streams each index file in batches
-    into arrays sized up front, so its peak allocation stays within a small
-    multiple of the bytes the copy keeps: the whole table, a flattened copy
-    of the matrix and the casts are never alive at once. Counted as the
-    Python/numpy peak (tracemalloc) plus the Arrow peak."""
+def _peak(fn, pool: str):
+    """(``fn()``, its peak allocation): the Python/numpy peak (tracemalloc)
+    plus the peak of Arrow pool ``pool``, which ``fn`` allocates from."""
     import tracemalloc
 
-    store.ingest_chunks(_chunk_rows(spark, 20000))
-    v = store.build_index(1, n_clusters=2, algorithm="ivf")
     default = pa.default_memory_pool()
-    pa.set_memory_pool(_LOAD_POOL)
+    pa.set_memory_pool(_POOLS[pool])
     tracemalloc.start()
     try:
-        ix = store._load_local(v, 1)
+        out = fn()
         py_peak = tracemalloc.get_traced_memory()[1]
     finally:
         tracemalloc.stop()
         pa.set_memory_pool(default)
-    assert len(ix.ids) == 20000 and ix.mat.shape == (20000, 16)
-    peak, held = py_peak + _LOAD_POOL.max_memory(), ix.nbytes
+    return out, py_peak + _POOLS[pool].max_memory()
+
+
+def test_driver_copy_load_peak_stays_near_what_it_keeps(spark, store):
+    """Loading a library's driver copy streams each index file in batches,
+    so its peak allocation stays within a small multiple of the bytes the
+    copy keeps: the whole table, a flattened copy of the matrix and the
+    casts are never alive at once."""
+    store.ingest_chunks(_chunk_rows(spark, 20000))
+    v = store.build_index(1, n_clusters=2, algorithm="ivf")
+    ix, peak = _peak(lambda: store._load_local(v, 1), "load")
+    assert sum(len(ids) for _, ids, *_ in ix.blocks) == 20000
+    assert all(mat.shape[1] == 16 for _, _, mat, *_ in ix.blocks)
+    held = ix.nbytes
     del ix
-    assert _LOAD_POOL.bytes_allocated() == 0
-    assert peak <= 1.75 * held, (py_peak, peak, held)
+    assert _POOLS["load"].bytes_allocated() == 0
+    assert peak <= 1.75 * held, (peak, held)
+
+
+def test_streamed_search_peak_does_not_grow_with_the_library(spark, store, monkeypatch):
+    """A streamed search holds one batch plus k rows: over a library four
+    times larger, its peak allocation stays within 1.25× the smaller
+    library's. The larger library is four ingests of the smaller's size, so
+    its index files are as large and only their number grows: Parquet
+    decodes a whole page per column, however small the batch, so a file's
+    size sets a floor under the peak that a library's size does not."""
+    store.ingest_chunks(_chunk_rows(spark, 4000, library_id=1))
+    for j in range(4):
+        store.ingest_chunks(_chunk_rows(spark, 4000, library_id=2, start_doc=40 * j))
+    for lib in (1, 2):
+        store.build_index(lib, algorithm="linear")
+    _streamed(monkeypatch)
+    vec = list(store.get_chunk(100007)["embedding"])
+    for lib in (1, 2):  # warm: first-call allocations are no search's
+        store.search_vector(lib, vec, k=10)
+    small, small_peak = _peak(lambda: _hits(store.search_vector(1, vec, k=10)), "small")
+    large, large_peak = _peak(lambda: _hits(store.search_vector(2, vec, k=10)), "large")
+    assert len(small) == len(large) == 10
+    assert large_peak <= 1.25 * small_peak, (small_peak, large_peak)
 
 
 def test_dead_ids_read_each_delete_file_once(spark, store, monkeypatch):
-    """A driver search reads each delete file newer than its build once:
-    after another delete, only the new file is read."""
+    """A search reads each delete file newer than its build once: after
+    another delete, only the new file is read."""
     reads = []
     read_table = store_mod.pq.read_table
 
@@ -1497,10 +1568,30 @@ def test_dead_ids_read_each_delete_file_once(spark, store, monkeypatch):
     assert [r for r in reads if r.startswith("del_")] == ["del_2", "del_3", "del_4"]
 
 
+@pytest.mark.parametrize("test", [
+    test_search_skips_tombstones_without_rebuild,
+    test_similarity_threshold_post_filter,
+    test_search_scoped_to_library,
+    test_pinned_version_skips_later_deletes,
+    test_parallel_readers_during_rebuild,
+    test_dead_ids_read_each_delete_file_once,
+    test_warm_search_runs_no_spark_job,
+], ids=lambda t: t.__name__)
+def test_search_on_the_streamed_path(spark, store, monkeypatch, test):
+    """The search tests above hold their small indexes on the driver; each
+    runs here again with every search streamed from the index files, as
+    above the size gate."""
+    _streamed(monkeypatch)
+    if "monkeypatch" in test.__code__.co_varnames[:test.__code__.co_argcount]:
+        test(spark, store, monkeypatch)
+    else:
+        test(spark, store)
+
+
 def test_ingest_rejects_embeddings_of_another_dim(spark, store, monkeypatch):
     """An ingested embedding is empty (the build embeds it) or of the
     store's dim; rows of any other dim are rejected, as update_chunk
-    rejects them, so both search paths rank the same stored rows."""
+    rejects them, so held and streamed searches rank the same stored rows."""
     rows = [(i, 1, 1, f"chunk {i}", e, 0, None) for i, e in enumerate([
         [0.5] * 15, [0.5] * 17, [0.5] * 16, [], None, [0.25] * 17, [0.25] * 16, [0.75] * 15,
     ])]
@@ -1511,9 +1602,9 @@ def test_ingest_rejects_embeddings_of_another_dim(spark, store, monkeypatch):
     store.build_index(1, algorithm="linear")
     driver = store.search_vector(1, [0.5] * 16, k=10)
     with monkeypatch.context() as m:
-        _on_spark_path(m)
-        plan = store.search_vector(1, [0.5] * 16, k=10)
-    assert _hits(driver) == _hits(plan)
+        _streamed(m)
+        streamed = store.search_vector(1, [0.5] * 16, k=10)
+    assert _hits(driver) == _hits(streamed)
     assert [h["chunk_id"] for h in _hits(driver)][:2] == [2, 6]
 
 
@@ -1547,8 +1638,8 @@ def test_point_operations_run_no_spark_job(spark, store):
 def test_spark_reads_the_pyarrow_written_files(spark, store, monkeypatch):
     """A point write's one-row segment and delete file are plain parquet
     to Spark: read_chunks returns what get_chunk does, build_index indexes
-    the updated row, and both search paths find it and skip the deleted
-    ids, those deleted after the build included."""
+    the updated row, and a held and a streamed search both find it and
+    skip the deleted ids, those deleted after the build included."""
     store.ingest_chunks(_chunk_rows(spark, 20))
     text = "rewritten on the driver"
     store.update_chunk(100003, text=text, compute_embedding=True,
@@ -1567,9 +1658,9 @@ def test_spark_reads_the_pyarrow_written_files(spark, store, monkeypatch):
 
     driver = searches()
     with monkeypatch.context() as m:
-        _on_spark_path(m)
-        plan = searches()
-    assert driver == plan
+        _streamed(m)
+        streamed = searches()
+    assert driver == streamed
     for hits in driver:
         ids = [h["chunk_id"] for h in hits]
         assert ids[0] == 100003 and hits[0]["dist"] == 0.0

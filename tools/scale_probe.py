@@ -7,6 +7,16 @@ uniform floats), so generation is parallel and deterministic — no driver
 materialization.
 
 Usage: python tools/scale_probe.py [n_vectors] [dim] [uniform|clustered]
+
+``store`` mode times ``VectorStore`` searches instead: it builds an IVF
+index of n × dim uniform vectors in a temporary store, then prints one JSON
+line per (kept, k, nprobe) with k in {10, 100} and nprobe in {1, 4, 8}: the
+p50 of 12 warm searches, each collected, and the peak allocation of one
+more search (Python/numpy by tracemalloc plus Arrow's pool). ``kept`` false
+streams every search from the index files, true holds the library's rows
+on the driver, whatever the index size (``DRIVER_SEARCH_MAX_VALUES``).
+
+Usage: python tools/scale_probe.py store [n_vectors] [dim] [clusters]
 """
 
 from __future__ import annotations
@@ -62,7 +72,76 @@ def synth_vectors(spark, n: int, dim: int, partitions: int, mode: str = "uniform
     )
 
 
+def store_probe(n: int, dim: int, clusters: int) -> None:
+    """The ``store`` mode: see the module docstring."""
+    import shutil
+    import statistics
+    import tempfile
+    import tracemalloc
+
+    import pyarrow as pa
+
+    from stackai_vector_db_spark.plans import store as store_mod
+    from stackai_vector_db_spark.plans.store import VectorStore
+
+    spark = get_spark(app_name="scale-probe-store")
+    spark.sparkContext.setLogLevel("ERROR")
+    root = tempfile.mkdtemp(prefix="scale_probe_store_")
+    pool = pa.proxy_memory_pool(pa.default_memory_pool())
+    try:
+        vecs = synth_vectors(spark, n, dim, spark.sparkContext.defaultParallelism)
+        store = VectorStore(spark, root, dim=dim)
+        t0 = time.perf_counter()
+        store.ingest_chunks(vecs.select(
+            F.col("vec_id").alias("chunk_id"),
+            (F.col("vec_id") % 1000).alias("document_id"),
+            F.lit(1).cast("long").alias("library_id"),
+            F.concat(F.lit("vector "), F.col("vec_id").cast("string")).alias("text"),
+            F.col("embedding").cast("array<float>").alias("embedding"),
+            F.lit(0).alias("start_index"),
+            F.lit(None).cast("int").alias("end_index"),
+        ))
+        store.build_index(1, n_clusters=clusters, algorithm="ivf")
+        build_s = round(time.perf_counter() - t0, 1)
+        queries = [r["embedding"] for r in vecs.filter(F.col("vec_id") < 12).collect()]
+        for kept, gate in ((False, 0), (True, 1 << 62)):
+            store_mod.DRIVER_SEARCH_MAX_VALUES = gate
+            for k in (10, 100):
+                for nprobe in (1, 4, 8):
+                    def search(q):
+                        return store.search_vector(1, q, k=k, nprobe=nprobe).collect()
+
+                    search(queries[-1])  # warm
+                    times = []
+                    for q in queries:
+                        t0 = time.perf_counter()
+                        search(q)
+                        times.append(time.perf_counter() - t0)
+                    default = pa.default_memory_pool()
+                    pa.set_memory_pool(pool)
+                    tracemalloc.start()
+                    try:
+                        search(queries[0])
+                        peak = tracemalloc.get_traced_memory()[1]
+                    finally:
+                        tracemalloc.stop()
+                        pa.set_memory_pool(default)
+                    print(json.dumps({
+                        "metric": "store_search", "n": n, "dim": dim, "clusters": clusters,
+                        "build_s": build_s, "kept": kept, "k": k, "nprobe": nprobe,
+                        "p50_ms": round(statistics.median(times) * 1000, 1),
+                        "peak_bytes": peak + pool.max_memory(),
+                    }), flush=True)
+                    pool = pa.proxy_memory_pool(pa.default_memory_pool())
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+        spark.stop()
+
+
 def main() -> None:
+    if len(sys.argv) > 1 and sys.argv[1] == "store":
+        args = [int(a) for a in sys.argv[2:]]
+        return store_probe(*args, *(400_000, 64, 8)[len(args):])
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
     dim = int(sys.argv[2]) if len(sys.argv) > 2 else 64
     mode = sys.argv[3] if len(sys.argv) > 3 else "uniform"
